@@ -15,17 +15,14 @@ for t in ["region","nation","customer","supplier","part","orders",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-results = {}
-for name in sorted(os.listdir(out_dir)):
-    d = os.path.join(out_dir, name)
-    if not os.path.isdir(d):
-        continue
+
+
+def compare(name, d):
     files = glob.glob(f"{d}/*.parquet")
     got = con.sql(f"SELECT * FROM read_parquet({files!r})").df()
     got = got[sorted(got.columns)]
     if name not in oracle:
-        results[name] = f"NO-ORACLE rows={len(got)}"
-        continue
+        return f"NO-ORACLE rows={len(got)}"
     exp = con.sql(oracle[name]).df()
     exp = exp[sorted(exp.columns)]
     status = []
@@ -48,7 +45,24 @@ for name in sorted(os.listdir(out_dir)):
                 status.append(f"VAL col={c} rows={list(bad)} got={[a.iloc[i] for i in bad]} exp={[b.iloc[i] for i in bad]}")
         if eq:
             status = ["OK"]
-    results[name] = "; ".join(status)
+    return "; ".join(status)
+
+
+# Every oracle row must have a dump: Verify writes oracle entries only
+# for the rows it selected, so a row that failed there is missing here.
+# An error on one row (a dump DuckDB cannot read, an oracle that runs
+# out of memory) fails that row and the check goes on to the next.
+results = {}
+for name in sorted(set(oracle) | set(os.listdir(out_dir))):
+    d = os.path.join(out_dir, name)
+    if not os.path.isdir(d):
+        if name in oracle:
+            results[name] = "MISSING"
+        continue
+    try:
+        results[name] = compare(name, d)
+    except Exception as e:
+        results[name] = f"{type(e).__name__}: {' '.join(str(e).split())}"
 
 fails = 0
 for k, v in results.items():

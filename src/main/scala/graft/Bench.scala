@@ -41,28 +41,11 @@ object Bench {
     val t0Main = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0Main) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle-partition count sized for the benchmark data scale (AQE
-    // coalesces further at runtime); on a cluster this scales with the
-    // input, not the core count.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // Typed-accumulator aggregates (simhash, top-k) run in
-      // ObjectHashAggregate; the default 128-group fallback would
-      // switch them to sort-based almost immediately. Buffers are
-      // O(100 B)/group, so a millions-size hash map is the right trade.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val cpus = Session.cpus
+    // shuffle-partition and AQE sweeps override the session defaults
+    val spark = Session("graft-bench", conf =
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toMap ++
+        sys.env.get("SPARK_GRAFT_AQE").map("spark.sql.adaptive.enabled" -> _))
 
     def r3(x: Double) = math.round(x * 1000) / 1000.0
 
@@ -263,13 +246,7 @@ object Bench {
     // divides current times by the slowdown ratio vs the PREVIOUS
     // bench's calibration — clamped at ≥1 so a faster host can never
     // mask a real regression, and built from min(start,end) so a
-    // transient quiet moment keeps the divisor honest. head() (not
-    // count()) forces the hash aggregate to actually evaluate —
-    // count() lets Catalyst prune the unused aggregate and time a
-    // bare range scan instead of the documented CPU workload (and
-    // max, not sum: summing 200M xxhash64 values overflows LONG under
-    // ANSI the moment the aggregate really runs — which proved the
-    // old probe never did).
+    // transient quiet moment keeps the divisor honest.
     // One UNTIMED throwaway probe first: the round-15 full runs showed
     // the start probe reading 0.41–0.74 s against a same-JVM end probe
     // of 0.11–0.22 s on the same host — JIT/codegen warmup of the
@@ -278,18 +255,8 @@ object Bench {
     // against a warm prior.
     var calibrated = false
     def calibrate(): Double = {
-      if (!calibrated) {
-        spark.range(0L, 200000000L, 1L, cpus.toInt)
-          .selectExpr("max(xxhash64(id))").head()
-        calibrated = true
-      }
-      val t = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0L, 200000000L, 1L, cpus.toInt)
-          .selectExpr("max(xxhash64(id))").head()
-        (System.nanoTime() - t0) / 1e9
-      }
-      t.min
+      if (!calibrated) { hostProbe(spark); calibrated = true }
+      math.min(hostProbe(spark), hostProbe(spark))
     }
     // previous bench's calibration (absent before round 14 → no
     // calibration gate, ratio 1 — the pre-calibration behavior).
@@ -303,11 +270,11 @@ object Bench {
     // prior recorded by a different probe is ignored — the
     // pre-calibration behavior, for exactly one round.
     val probeVersion = "v2"
+    val prevTxt: Option[String] =
+      try Some(slurp(prevPath)) catch { case _: Throwable => None }
     val (calibPrev: Option[Double], prevCpus: Option[Int],
-        blockMedianPrev: Option[Double]) = try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(prevPath)),
-        java.nio.charset.StandardCharsets.UTF_8)
+        blockMedianPrev: Option[Double]) = prevTxt.fold(
+        (Option.empty[Double], Option.empty[Int], Option.empty[Double])) { txt =>
       val prevProbe = """"probe":"(v[0-9]+)"""".r
         .findFirstMatchIn(txt).map(_.group(1))
       val pc = """"cpus":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
@@ -319,16 +286,13 @@ object Bench {
       // disables the calibration gate the same way a probe-version
       // mismatch does; the cpus adoption leg below still keeps the
       // run from overwriting the canonical.
-      val cp = if (!prevProbe.contains(probeVersion) ||
-          pc.exists(_ != cpus.toInt)) None
-      else """"calibration":\{"probe":"v[0-9]+","start":([0-9.eE+-]+),"end":([0-9.eE+-]+)""".r
-        .findFirstMatchIn(txt)
-        .map(m => math.min(m.group(1).toDouble, m.group(2).toDouble))
+      val cp = if (!prevProbe.contains(probeVersion) || pc.exists(_ != cpus)) None
+        else priorProbe(txt)
       val bm = if (cp.isEmpty) None
       else """"block_probe_median":([0-9.eE+-]+)""".r
         .findFirstMatchIn(txt).map(_.group(1).toDouble)
       (cp, pc, bm)
-    } catch { case _: Throwable => (None, None, None) }
+    }
     // Calibration gate: wait (inside the joint cap) until the probe
     // runs within 2× of the previous bench's recording. If contention
     // does NOT drain, don't stall — degrade to reps=1 and say so:
@@ -368,7 +332,7 @@ object Bench {
     // honest artifact — just not the prior). Legacy priors without a
     // "cpus" stamp can't be checked; they adopt normally and the new
     // artifact stamps its own.
-    if (outFile == "bench.json" && prevCpus.exists(_ != cpus.toInt)) {
+    if (outFile == "bench.json" && prevCpus.exists(_ != cpus)) {
       redirectOut(s"bench_c$cpus.json")
       System.err.println(s"[bench] core count $cpus != armed prior's " +
         s"${prevCpus.get} — writing to bench_c$cpus.json, leaving the " +
@@ -391,12 +355,6 @@ object Bench {
     // honest — a transient quiet instant adjacent to the query caps
     // how much normalization it can claim.
     val BlockProbeEvery = 25
-    def probeOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
-        .selectExpr("max(xxhash64(id))").head()
-      (System.nanoTime() - t0) / 1e9
-    }
     val blockProbes = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     var seq = 0
     // Per-pass maps built incrementally into `completed` so the hook
@@ -409,16 +367,15 @@ object Bench {
       names.foreach { case (name, fn) =>
         if (pass == 1 || !overBudget) {
           if (seq % BlockProbeEvery == 0 && seq > 0) {
-            val p = probeOnce()
+            val p = hostProbe(spark)
             blockProbes += ((seq, p))
             progress(s"""{"probe":${r3(p)},"seq":$seq,"pass":$pass,""" +
               s""""t":${System.currentTimeMillis() / 1000}}""")
           }
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
+          val (ok, t) = clock(try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: $e"); false }
-          val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+            System.err.println(s"[bench] $name failed: $e"); false })
+          val sec = if (ok) t else -1.0
           completed.put((pass, name), sec)
           measSeq.put((pass, name), seq)
           seq += 1
@@ -442,22 +399,15 @@ object Bench {
     // flagged row must be explained in SCALE.md or fixed. min-of-2
     // interleaved timing already filters one-off load spikes; a query
     // that still trips both thresholds moved for a reason.
-    val prev: Map[String, Double] = try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(prevPath)),
-        java.nio.charset.StandardCharsets.UTF_8)
+    val prev: Map[String, Double] = prevTxt.fold(Map.empty[String, Double]) { txt =>
       // comparable only at the SAME scale factor (a cross-sf diff
       // would flag every query at once and mean nothing) and — when
       // the prior is stamped — the same core count (8-core prices are
       // not regression priors for a 32-core run)
       val prevSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-      if (!prevSf.contains(sfDir) || prevCpus.exists(_ != cpus.toInt)) Map.empty
-      else """"queries":\{(.*?)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-        .map { qm =>
-          """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(qm)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }.getOrElse(Map.empty)
-    } catch { case _: Throwable => Map.empty }
+      if (!prevSf.contains(sfDir) || prevCpus.exists(_ != cpus)) Map.empty
+      else priorQueries(txt)
+    }
     phase.set("end_calibration")
     val calibEnd = calibrate()
     val calibNow = math.min(calibStart, calibEnd)
@@ -507,11 +457,8 @@ object Bench {
     val remeasured = flagged.map { case (k, v, sq) =>
       if (overBudget) (k, v, sq, v)
       else {
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          try { byName(k)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => v }
-        }
+        val times = (1 to 2).map(_ =>
+          try clock(byName(k)(spark, sfDir).count())._2 catch { case _: Throwable => v })
         progress(s"""{"remeasure":"$k","suite":${r3(v)},"standalone":${r3(times.min)}}""")
         (k, v, sq, math.min(v, times.min))
       }
@@ -603,6 +550,41 @@ object Bench {
     System.out.flush()
     spark.stop()
   }
+
+  /** The v2 host-speed probe: one max(xxhash64) over 200M ids on every
+    * core of the session, in seconds. head() (not count()) forces the
+    * aggregate to run — count() lets Catalyst prune it and time a bare
+    * range scan; max, not sum, because summing 200M hashes overflows
+    * LONG under ANSI.
+    */
+  def hostProbe(spark: SparkSession): Double =
+    clock(spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
+      .selectExpr("max(xxhash64(id))").head())._2
+
+  /** Runs `body` once; its result and wall-clock seconds. */
+  private[graft] def clock[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private[graft] def slurp(path: String): String = new String(
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+    java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Per-query seconds recorded in a prior bench.json. */
+  private[graft] def priorQueries(txt: String): Map[String, Double] =
+    """"queries":\{(.*?)\}""".r.findFirstMatchIn(txt).map(_.group(1))
+      .map { qm =>
+        """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(qm)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }.getOrElse(Map.empty)
+
+  /** min(start, end) of a prior bench.json's calibration probe. */
+  private[graft] def priorProbe(txt: String): Option[Double] =
+    """"calibration":\{"probe":"v[0-9]+","start":([0-9.eE+-]+),"end":([0-9.eE+-]+)""".r
+      .findFirstMatchIn(txt)
+      .map(m => math.min(m.group(1).toDouble, m.group(2).toDouble))
 }
 
 /** Offline replay of a Bench progress log through the round-16
@@ -641,21 +623,10 @@ object Bench {
 object BenchReplay {
   def run(args: Array[String]): Unit = {
     val Array(progressPath, prevPath) = args.take(2)
-    def slurp(p: String) = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val progressTxt = slurp(progressPath)
-    val prevTxt = slurp(prevPath)
-    val prev: Map[String, Double] =
-      """"queries":\{(.*?)\}""".r.findFirstMatchIn(prevTxt).map(_.group(1))
-        .map { qm =>
-          """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(qm)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }.getOrElse(Map.empty)
-    val prevProbe: Option[Double] =
-      """"calibration":\{"probe":"v[0-9]+","start":([0-9.eE+-]+),"end":([0-9.eE+-]+)""".r
-        .findFirstMatchIn(prevTxt)
-        .map(m => math.min(m.group(1).toDouble, m.group(2).toDouble))
+    val progressTxt = Bench.slurp(progressPath)
+    val prevTxt = Bench.slurp(prevPath)
+    val prev = Bench.priorQueries(prevTxt)
+    val prevProbe = Bench.priorProbe(prevTxt)
     // (seq-in-log, kind) — measurements keep only their pass-1 /
     // first occurrence per query (min over passes like the live gate)
     val measLine =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev utility: print formatted physical plans for selected queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -8,11 +7,8 @@ object Explain {
       else Seq("q_filter_project", "q_join_broadcast", "wordcount", "q1_agg",
         "ev_asof_order", "ev_range_join", "dd_minhash", "dd_simhash64_pairs",
         "q_ntile", "ss_topk_agg")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session("graft-explain")
+    // plans only on the console: no WARN lines between them
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,14 @@ object Verify {
     // optional third arg: regex over query names (dev loop — run a
     // subset; the driver always passes exactly two args = run all)
     val nameFilter = args.drop(2).headOption.map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    def selected(name: String) = nameFilter.forall(_.pattern.matcher(name).matches())
+    // one shuffle partition per core (Bench runs 8): the configuration
+    // every recorded oracle pass ran under
+    val spark = Session("graft-verify",
+      conf = Map("spark.sql.shuffle.partitions" -> Session.cpus.toString))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) =>
-        nameFilter.forall(_.pattern.matcher(name).matches()) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -43,7 +35,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // only the selected rows' oracles: a selected row with no dump is
+    // then a failure check.py reports, not a silently smaller count
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -27,11 +27,11 @@ class CollectLintSpec extends AnyFunSuite {
       "unigram-Viterbi vocab map: model-sized (vocab-capped), never corpus-sized"),
     "operators/QuantileQueries.scala" -> (2,
       "radix-descent histograms: <=2^16 bucket rows per pass by construction"),
-    "Stress.scala" -> (6,
+    "Stress.scala" -> (5,
       "ivfskew fixture verdicts: per-cell census frames (k, k+1, " +
         "k+n_splits, and k+n_splits-n_merges rows — cell counts, " +
-        "never corpus rows); cdcab equality legs: both arms end in " +
-        "limit(50), so each collect is <=50 report rows")
+        "never corpus rows); cdcab's ordered equality check: both " +
+        "arms end in limit(50), so the one collect is <=50 report rows per arm")
   )
 
   test("every .collect() in main source is allowlisted with its bound") {

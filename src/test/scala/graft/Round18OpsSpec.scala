@@ -436,33 +436,10 @@ class Round18OpsSpec extends AnyFunSuite {
   }
 
   test("cdc_chunks: one-pass expression matches the legacy explode chain, multibyte included") {
-    import graft.functions.RollingHash.{cdc_chunks, rolling_hash}
+    import graft.functions.RollingHash.cdc_chunks
     import operators.Dedup.{CdcMask, CdcWindow}
-    // the legacy r17 dd_cdc_chunks chunk chain, inlined verbatim: one
-    // row per char position, window substring re-hashed per row,
-    // boundary list collect_list'd + joined back, chunks re-extracted
-    // with per-chunk substring
-    def legacyChunks(d: org.apache.spark.sql.DataFrame) = {
-      val dd = d.filter(length(col("text")) >= 1)
-        .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-      val bounds = dd.filter(col("len") >= CdcWindow)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(CdcWindow), col("len"))).as("i"))
-        .withColumn("wh",
-          rolling_hash(expr(s"substring(text, i - ${CdcWindow - 1}, $CdcWindow)")))
-        .filter(col("wh").bitwiseAND(lit(CdcMask)) === 0)
-        .groupBy("doc_id").agg(collect_list(col("i")).as("bs"))
-      dd.join(bounds, Seq("doc_id"), "left")
-        .withColumn("cuts", array_sort(array_distinct(concat(
-          array(lit(0)), coalesce(col("bs"), array().cast("array<int>")),
-          array(col("len"))))))
-        .select(col("doc_id"), col("text"),
-          explode(expr(
-            "transform(sequence(0, size(cuts) - 2), " +
-              "k -> struct(cuts[k] AS st, cuts[k + 1] AS en))")).as("ck"))
-        .select(col("doc_id"),
-          expr("substring(text, ck.st + 1, ck.en - ck.st)").as("chunk"))
-    }
+    // the r17 dd_cdc_chunks chunk chain (the cdcab A/B's reference arm)
+    def legacyChunks(d: org.apache.spark.sql.DataFrame) = Stress.legacyCdcChunkRows(d)
     def newChunks(d: org.apache.spark.sql.DataFrame) = d
       .filter(length(col("text")) >= 1)
       .select(col("doc_id"),

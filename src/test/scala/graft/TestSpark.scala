@@ -4,20 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(s)
-    s
-  }
+  // a fixed core count so test timings and partition layouts do not
+  // follow the host; a private warehouse so saveAsTable tests never
+  // write into the checkout
+  lazy val session: SparkSession = Session("graft-test", master = "local[8]",
+    conf = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
