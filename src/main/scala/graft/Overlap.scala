@@ -18,9 +18,12 @@ package graft
   *    write still fails the batch/build exactly as the sequential
   *    code did — both thunks are awaited before anything after the
   *    call runs (the crash-injection contracts depend on that);
-  *  - threads are daemons and pooled; job groups/descriptions are
-  *    thread-local in Spark, so overlapped jobs simply carry the
-  *    default description.
+  *  - threads are daemons and pooled; Spark's local properties (job
+  *    group, description, scheduler pool) are thread-local, so each
+  *    pool task runs with a copy of the CALLER's properties and puts
+  *    the pool thread's own back afterwards — an overlapped job is
+  *    traced to the same row as the caller's jobs, and a pooled
+  *    thread never carries one caller's group into the next call.
   */
 object Overlap {
   private lazy val pool = java.util.concurrent.Executors.newCachedThreadPool(
@@ -30,23 +33,32 @@ object Overlap {
       t
     })
 
+  /** Submit `body` to the pool under the caller's local properties. */
+  private def submit[T](body: => T): java.util.concurrent.Future[T] = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val caller = Bridge.activeContext.map(sc => (sc, Bridge.getLocalProperties(sc)))
+    pool.submit(new java.util.concurrent.Callable[T] {
+      def call(): T = caller match {
+        case None => body
+        case Some((sc, props)) =>
+          val own = Bridge.getLocalProperties(sc)
+          Bridge.setLocalProperties(sc, props)
+          try body finally Bridge.setLocalProperties(sc, own)
+      }
+    })
+  }
+
   /** Run `a` on the calling thread and `b` on the pool, return both. */
   def par[A, B](a: => A, b: => B): (A, B) = {
-    val fb = pool.submit(new java.util.concurrent.Callable[B] {
-      def call(): B = b
-    })
+    val fb = submit(b)
     val ra = a
     (ra, fb.get())
   }
 
   /** Run `a` on the calling thread, `b` and `c` on the pool. */
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val fb = pool.submit(new java.util.concurrent.Callable[B] {
-      def call(): B = b
-    })
-    val fc = pool.submit(new java.util.concurrent.Callable[C] {
-      def call(): C = c
-    })
+    val fb = submit(b)
+    val fc = submit(c)
     val ra = a
     (ra, fb.get(), fc.get())
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.L2Codebook
 import TextOps._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -66,6 +67,14 @@ object Similarity {
     */
   val PowerRounds = 4
 
+  /** Embedding width: the coarse quantizer is one segment of
+    * [[EmbeddingDims]] coordinates, PQ is [[PqSegs]] subspaces of
+    * [[PqSegLen]].
+    */
+  val EmbeddingDims = 64
+  val PqSegs = 8
+  val PqSegLen = 8
+
   /** Product-quantization building blocks shared by ss_pq_encode and
     * ss_pq_adc: the 64-dim vectors split into 8 subspaces of 8 dims;
     * per-subspace codebooks are TRAINED — [[PqTrainRounds]] Lloyd
@@ -77,14 +86,17 @@ object Similarity {
     * and the additive ADC are order-free and engine-exact; the
     * re-centered codebook coordinates are doubles computed from exact
     * integer pieces by identical op trees on both engines, so round 2
-    * distances stay bit-equal too. Per round the codebook is
-    * `localCheckpoint`ed — lineage is cut like dd_pagerank's rank
-    * frame. Returns (dist, codes, codebook): dist keyed by
-    * (vec, cent, s) against the trained codebook; codes = the
-    * per-(vec, s) argmin with ties to the smaller centroid id.
+    * distances stay bit-equal too. Training is [[Lloyd]] with 8
+    * segments: per round one pass over the vector arrays (all 8
+    * subspaces' argmins in one projection) and a reduce to 8·8·8
+    * partial sums; the codebook lives on the driver between rounds.
+    * Returns (dist, codes, codebook): dist keyed by (vec, cent, s)
+    * against the trained codebook; codes = the per-(vec, s) argmin
+    * with ties to the smaller centroid id.
     */
-  /** (vec_id, s, j, x) per-subspace coordinates, checkpointed — reused
-    * by every training round plus the final encode.
+  /** (vec_id, s, j, x) per-subspace coordinates, checkpointed — the
+    * ADC distance frame and ss_train_distortion's seed and trained
+    * legs read them.
     */
   private def pqDims(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
@@ -122,30 +134,23 @@ object Similarity {
       .select(col("vec_id"), col("s"), col("code"), col("dist_micro"))
   }
 
-  /** [[PqTrainRounds]] Lloyd rounds over all 8 subspaces at once. */
-  private def pqTrainedCb(dims: DataFrame): DataFrame = {
-    var cb = pqSeedCb(dims)
-    for (_ <- 1 to PqTrainRounds) {
-      val asg = pqCodesOf(pqDistOf(dims, cb))
-        .select(col("vec_id"), col("s"), col("code").as("cent_id"))
-      val means = dims.join(asg, Seq("vec_id", "s"))
-        .groupBy("cent_id", "s", "j")
-        .agg(sum(floor(col("x") * lit(1000000.0)).cast("long")).as("sm"),
-          count(lit(1)).as("n"))
-      cb = cb.as("p").join(means.as("m"), Seq("cent_id", "s", "j"), "left")
-        .select(col("cent_id"), col("s"), col("j"),
-          coalesce(col("sm").cast("double") / col("n") / lit(1000000.0), col("c"))
-            .as("c"))
-        .localCheckpoint(true) // eager: cut lineage before the next round
-    }
-    cb
+  /** [[PqTrainRounds]] Lloyd rounds over all 8 subspaces at once,
+    * over (vec_id, e) arrays, seeded from vec_id < 8.
+    */
+  private def pqBook(vecs: DataFrame): L2Codebook =
+    Lloyd.train(vecs,
+      Lloyd.seedBook(vecs.filter(col("vec_id") < 8), PqSegs, PqSegLen), PqTrainRounds)
+
+  /** The trained PQ codebook as a local (cent_id, s, j, c) frame. */
+  private def pqCodebookFresh(s: SparkSession, dir: String): DataFrame = {
+    val vecs = vecArrays(s, dir).localCheckpoint(false) // seeds + every round
+    Lloyd.pqFrame(s, pqBook(vecs))
   }
 
   private def pqPartsFresh(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val dims = pqDims(s, dir)
-    val cb = pqTrainedCb(dims)
+    val cb = pqCodebookFresh(s, dir)
     // consumed by both argmin passes plus the ADC query table
-    val dist = pqDistOf(dims, cb).localCheckpoint(false)
+    val dist = pqDistOf(pqDims(s, dir), cb).localCheckpoint(false)
     (dist, pqCodesOf(dist), cb)
   }
 
@@ -168,23 +173,32 @@ object Similarity {
     cached(s, dir, "pq")(pqPartsFresh(s, dir))
 
   /** The (vec_id, dim, x) long-format dims, materialized once per
-    * (session, dir) — trainedIvf and the residual-PQ reshape both
-    * read it, and without the shared cache each paid its own
-    * embeddings scan + posexplode.
+    * (session, dir) — the rows that need every (vector, centroid)
+    * distance (diversity sample, silhouette, OOD) and the drift row
+    * read it, and without the shared cache each paid its own embeddings
+    * scan + posexplode.
     */
   private def cachedKmDims(s: SparkSession, dir: String): DataFrame =
     cached(s, dir, "kmdims")(kmDims(s, dir).localCheckpoint(false))
 
-  /** Cached trained-IVF pair: (long-format centroids, full assignment).
-    * The dims cache is resolved BEFORE entering this entry's compute —
-    * nested computeIfAbsent on one ConcurrentHashMap is illegal (the
-    * CacheRegistry rule that bit in round 11).
+  /** The (vec_id, e) embedding arrays, materialized once per
+    * (session, dir) — the trained IVF, the √n index and the
+    * residual-PQ reshape all read them.
     */
-  private def trainedIvf(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val dims = cachedKmDims(s, dir)
+  private def cachedVecs(s: SparkSession, dir: String): DataFrame =
+    cached(s, dir, "kmvecs")(vecArrays(s, dir).localCheckpoint(false))
+
+  /** Cached trained IVF: (long-format centroids, full assignment, the
+    * codebook itself). The vectors cache is resolved BEFORE entering
+    * this entry's compute — nested computeIfAbsent on one
+    * ConcurrentHashMap is illegal (the CacheRegistry rule that bit in
+    * round 11).
+    */
+  private def trainedIvf(s: SparkSession, dir: String): (DataFrame, DataFrame, L2Codebook) = {
+    val vecs = cachedVecs(s, dir)
     cached(s, dir, "ivf") {
-      val cents = trainedCents(dims)
-      (cents, assignL2(dims, cents).localCheckpoint(false))
+      val book = coarseBook(vecs)
+      (Lloyd.coarseFrame(s, book), Lloyd.assign(vecs, book).localCheckpoint(false), book)
     }
   }
 
@@ -218,23 +232,25 @@ object Similarity {
   private def writeIvfIndex(s: SparkSession, dir: String): String = {
     val root = indexRoot(dir)
     // Two independent lanes, overlapped as concurrent jobs (guide
-    // §2.6, round 18): the coarse lane (kmDims → Lloyd → centroids +
-    // assignments writes) and the PQ lane (pqDims → PQ Lloyd →
-    // codebook write) share NO data — each lane's Lloyd rounds are
-    // driver-sequential actions whose straggler tails the other
-    // lane's tasks back-fill. Neither lane touches CacheRegistry
-    // (kmDims/trainedCents/pqDims/pqTrainedCb are all cache-free —
-    // the Overlap deadlock rule; this method itself runs inside
-    // cached("ivfIndexPath")).
+    // §2.6, round 18): the coarse lane (Lloyd → centroids write →
+    // assignment write) and the PQ lane (PQ Lloyd → codebook write)
+    // share NO data. Each Lloyd round is one pass over the vector
+    // arrays plus a k·d reduce collected to the driver, so a lane is
+    // a short chain of driver-sequential jobs whose tails the other
+    // lane's tasks back-fill; the full-corpus assignment is the same
+    // argmin as a projection, written with no shuffle. Neither lane
+    // touches CacheRegistry (vecArrays/coarseBook/pqCodebookFresh are
+    // cache-free — the Overlap deadlock rule; this method itself runs
+    // inside cached("ivfIndexPath")).
     graft.Overlap.par(
       {
-        val dims = kmDims(s, dir).localCheckpoint(false)
-        val cents = trainedCents(dims)
-        cents.write.mode("overwrite").parquet(s"$root/centroids")
-        assignL2(dims, cents).write.mode("overwrite")
+        val vecs = vecArrays(s, dir).localCheckpoint(false) // seeds, rounds, assignment
+        val book = coarseBook(vecs)
+        Lloyd.coarseFrame(s, book).write.mode("overwrite").parquet(s"$root/centroids")
+        Lloyd.assign(vecs, book).write.mode("overwrite")
           .partitionBy("cent_id").parquet(s"$root/assignments")
       },
-      pqTrainedCb(pqDims(s, dir)).write.mode("overwrite")
+      pqCodebookFresh(s, dir).write.mode("overwrite")
         .parquet(s"$root/pq_codebook"))
     root
   }
@@ -723,7 +739,7 @@ object Similarity {
     * index their oracles unroll.
     */
   private def sqrtIvfAssignment(s: SparkSession, dir: String): DataFrame = {
-    val dims = cachedKmDims(s, dir) // resolved outside the cache compute
+    val vecs = cachedVecs(s, dir) // resolved outside the cache compute
     cached(s, dir, "ivfSqrt") {
       import org.apache.spark.sql.expressions.Window
       val n = Tables.embeddings(s, dir).count()
@@ -756,12 +772,13 @@ object Similarity {
           Window.orderBy(col("h"), col("vec_id"))))
         .filter(col("rn") <= quota)
         .select("vec_id", "rn")
-      val trainDims = dims.join(broadcast(sampleIds.select("vec_id")), "vec_id")
+      val trainVecs = vecs.join(broadcast(sampleIds.select("vec_id")), "vec_id")
         .localCheckpoint(false)
-      val cents0 = trainDims.join(
-          broadcast(sampleIds.filter(col("rn") <= k).select("vec_id")), "vec_id")
-        .select(col("vec_id").as("cent_id"), col("dim"), col("x").as("c"))
-      assignL2(dims, lloydRounds(trainDims, cents0)).localCheckpoint(false)
+      val seeds = Lloyd.seedBook(trainVecs.join(
+        broadcast(sampleIds.filter(col("rn") <= k).select("vec_id")), "vec_id"),
+        1, EmbeddingDims)
+      Lloyd.assign(vecs, Lloyd.train(trainVecs, seeds, KmTrainRounds))
+        .localCheckpoint(false)
     }
   }
 
@@ -775,7 +792,7 @@ object Similarity {
   private def ivfNprobeTopk(s: SparkSession, dir: String, nprobe: Int,
                             k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (cents, asg) = trainedIvf(s, dir)
+    val (cents, asg, _) = trainedIvf(s, dir)
     val qDims = Tables.embeddings(s, dir)
       .filter(col("vec_id") >= 100 && col("vec_id") < 105)
       .select(col("vec_id"), posexplode(toDouble(col("embedding"))).as(Seq("p", "x")))
@@ -873,7 +890,7 @@ object Similarity {
     // nested computeIfAbsent on one registry map is illegal (the
     // round-11 CacheRegistry rule; a cold-start ivfKnnEdgesCached
     // otherwise throws CHM "Recursive update" reaching
-    // sqrtIvfAssignment, exactly the trainedIvf/kmDims precedent)
+    // sqrtIvfAssignment, exactly the trainedIvf/cachedVecs precedent)
     sqrtIvfAssignment(s, dir)
     cached[DataFrame](s, dir, s"knnEdges$k") {
       ivfKnnEdges(s, dir, k).localCheckpoint(false)
@@ -952,42 +969,25 @@ object Similarity {
       .select("vec_id", "cent_id")
   }
 
-  /** The trained IVF coarse quantizer: [[KmTrainRounds]] Lloyd rounds
-    * over the full vectors, seeded from the first NumCentroids
-    * vectors. Round body = assign (micro-L2) → re-center (exact
-    * micro-integer means; an empty cell keeps its previous centroid
-    * via the left-join coalesce) → eager `localCheckpoint` so lineage
-    * never compounds across rounds — dd_pagerank's loop shape. At
-    * 100 TB each round is one broadcast join + two aggregations; the
-    * centroid frame stays k·d rows throughout.
+  /** The trained IVF coarse quantizer: [[KmTrainRounds]] [[Lloyd]]
+    * rounds over the full vectors `(vec_id, e)`, seeded from the first
+    * NumCentroids vectors (one segment of [[EmbeddingDims]]). Each
+    * round is one distributed pass — the argmin projection, then
+    * per-(centroid, dim) micro-integer sums reduced to k·d rows and
+    * collected — and the driver re-centers (an empty cell keeps its
+    * previous centroid). At 100 TB a round reads the corpus once and
+    * ships k·d partial sums; the codebook never leaves the driver
+    * except inside the argmin expression.
     */
-  private def trainedCents(dims: DataFrame): DataFrame = {
-    val cents0 = dims.filter(col("vec_id") < PipelineQueries.NumCentroids)
-      .select(col("vec_id").as("cent_id"), col("dim"), col("x").as("c"))
-    lloydRounds(dims, cents0)
-  }
+  private def coarseBook(vecs: DataFrame): L2Codebook =
+    Lloyd.train(vecs,
+      Lloyd.seedBook(vecs.filter(col("vec_id") < PipelineQueries.NumCentroids),
+        1, EmbeddingDims),
+      KmTrainRounds)
 
-  /** The fixed-round Lloyd loop over an arbitrary training relation
-    * and seed set — [[trainedCents]] passes the full corpus with the
-    * first-NumCentroids seeds; the edge-build index passes a bounded
-    * sample with sample-order seeds.
-    */
-  private def lloydRounds(trainDims: DataFrame, cents0: DataFrame): DataFrame = {
-    var cents = cents0
-    for (_ <- 1 to KmTrainRounds) {
-      val asg = assignL2(trainDims, cents)
-      val means = trainDims.join(asg, "vec_id")
-        .groupBy("cent_id", "dim")
-        .agg(sum(floor(col("x") * lit(1000000.0)).cast("long")).as("sm"),
-          count(lit(1)).as("n"))
-      cents = cents.as("p").join(means.as("m"), Seq("cent_id", "dim"), "left")
-        .select(col("cent_id"), col("dim"),
-          coalesce(col("sm").cast("double") / col("n") / lit(1000000.0), col("c"))
-            .as("c"))
-        .localCheckpoint(true) // eager: cut lineage before the next round
-    }
-    cents
-  }
+  /** (vec_id, e) embedding coordinates as a double array. */
+  private def vecArrays(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).select(col("vec_id"), toDouble(col("embedding")).as("e"))
 
   private def vecs(s: SparkSession, dir: String): DataFrame =
     Vec.bucketedVectors(Tables.embeddings(s, dir))
@@ -1716,15 +1716,15 @@ object Similarity {
 
     // The trained IVF coarse codebook itself — KmTrainRounds chained
     // Lloyd iterations (ss_kmeans_step is one such update; this is the
-    // loop, dd_pagerank-style: per-round eager localCheckpoint, fixed
-    // deterministic round count so DuckDB can mirror it as unrolled
-    // CTEs). Assignment is exact micro-integer L2; re-centering is
-    // exact micro-integer means; an empty cell keeps its previous
-    // centroid. Output = the final (cent_id, dim, c) codebook that
-    // ss_ivf_search / ss_ivfpq_search route against.
+    // loop: one pass + a k·d reduce per round with the codebook on the
+    // driver, fixed deterministic round count so DuckDB can mirror it
+    // as unrolled CTEs). Assignment is exact micro-integer L2;
+    // re-centering is exact micro-integer means; an empty cell keeps
+    // its previous centroid. Output = the final (cent_id, dim, c)
+    // codebook that ss_ivf_search / ss_ivfpq_search route against.
     "ss_kmeans_train" -> ((s, dir) => {
-      val dims = kmDims(s, dir).localCheckpoint(false)
-      trainedCents(dims).orderBy("cent_id", "dim")
+      val vecs = vecArrays(s, dir).localCheckpoint(false)
+      Lloyd.coarseFrame(s, coarseBook(vecs)).orderBy("cent_id", "dim")
     }),
 
     // Coreset / diversity sampling — the first sweep of the k-center
@@ -1742,7 +1742,7 @@ object Similarity {
       // designated fresh-construction measurement; this row's own
       // work is the distance frame + three k-row aggregations —
       // round-12: it was re-running the full Lloyd loop per execution)
-      val (cents, asg) = trainedIvf(s, dir)
+      val (cents, asg, _) = trainedIvf(s, dir)
       val dist = l2VecDist(cachedKmDims(s, dir), cents)
       val cell = dist.join(asg, Seq("vec_id", "cent_id"))
       val best = cell.groupBy("cent_id").agg(min(col("dm")).as("dm"))
@@ -1774,7 +1774,7 @@ object Similarity {
     // and its worst member. max(a,b) = 0 (a vector exactly ON two
     // centroids) resolves to 0 on both engines rather than dividing.
     "ss_silhouette" -> ((s, dir) => {
-      val (cents, asg) = trainedIvf(s, dir)
+      val (cents, asg, _) = trainedIvf(s, dir)
       val dist = l2VecDist(cachedKmDims(s, dir), cents)
       val own = asg.join(dist, Seq("vec_id", "cent_id"))
         .select(col("vec_id"), col("cent_id"), col("dm").as("a_dm"))
@@ -1801,8 +1801,7 @@ object Similarity {
     // quantize against, and what moved ss_pq_recall off its stand-in
     // floor.
     "ss_pq_train" -> ((s, dir) => {
-      val (_, _, cb) = pqPartsFresh(s, dir)
-      cb.orderBy("cent_id", "s", "j")
+      pqCodebookFresh(s, dir).orderBy("cent_id", "s", "j")
     }),
 
     // Proof the training loops optimize their objective, engine-exact:
@@ -1854,7 +1853,7 @@ object Similarity {
     // window runs inside the 10-row frame.
     "ss_ood_topk" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val (cents, _) = trainedIvf(s, dir)
+      val (cents, _, _) = trainedIvf(s, dir)
       val dist = l2VecDist(cachedKmDims(s, dir), cents).localCheckpoint(false)
       val best = dist.groupBy("vec_id").agg(min(col("dm")).as("dm"))
       val asg = dist.join(best, Seq("vec_id", "dm"))
@@ -2508,26 +2507,23 @@ object Similarity {
     // centroid, not x itself, because within-cell residuals have less
     // variance than raw vectors and the same byte budget buys less
     // distortion. This row trains a second codebook set on the
-    // IVF-residuals (same 2-round Lloyd over 8 subspaces — the
-    // pqTrainedCb machinery, generic over its dims frame) and reports
-    // the trained total distortion of BOTH codings plus the signed
-    // gain in ppm — measured, not asserted (on near-isotropic
+    // IVF-residuals (same 2-round Lloyd over 8 subspaces — pqBook,
+    // generic over its vector arrays) and reports the trained total
+    // distortion of BOTH codings plus the signed gain in ppm —
+    // measured, not asserted (on near-isotropic
     // synthetic embeddings the win is modest; the row prices it
     // honestly, and the spec pins only the sign on this corpus).
-    // Scale: the residual reshape is one broadcast-join pass over the
-    // dims; training cost is identical to ss_pq_train.
+    // Scale: the residual x − c is one broadcast-join pass over the
+    // vector arrays; training cost is identical to ss_pq_train.
     "ss_pq_residual" -> ((s, dir) => {
-      val (cents, asg) = trainedIvf(s, dir)
-      val rdims = cachedKmDims(s, dir).join(asg, "vec_id")
-        .join(broadcast(cents), Seq("cent_id", "dim"))
-        .select(col("vec_id"),
-          expr("CAST((dim - 1) DIV 8 AS INT)").as("s"),
-          expr("CAST((dim - 1) % 8 AS INT)").as("j"),
-          (col("x") - col("c")).as("x"))
+      val (_, asg, book) = trainedIvf(s, dir)
+      val rvecs = cachedVecs(s, dir).join(asg, "vec_id")
+        .join(broadcast(Lloyd.arraysFrame(s, book)), "cent_id")
+        .select(col("vec_id"), zip_with(col("e"), col("ce"), _ - _).as("e"))
         .localCheckpoint(false)
-      val resTot = pqCodesOf(pqDistOf(rdims, pqTrainedCb(rdims)))
+      val resTot = rvecs.select(inline(Lloyd.nearest(pqBook(rvecs))))
         .agg(count(lit(1)).as("n_cells"),
-          sum(col("dist_micro")).as("res_dist_micro"))
+          sum(col("dm")).as("res_dist_micro"))
       val (_, rawCodes, _) = pqParts(s, dir)
       val rawTot = rawCodes.agg(sum(col("dist_micro")).as("raw_dist_micro"))
       resTot.crossJoin(broadcast(rawTot))
@@ -2769,7 +2765,7 @@ object Similarity {
 
   private val pqCtes: String = "WITH " + pqChainSql("", pqRawDBody)
 
-  /** DuckDB mirror of [[trainedCents]]: cd = long-format dims, c0 =
+  /** DuckDB mirror of [[coarseBook]]: cd = long-format dims, c0 =
     * the seed, then [[KmTrainRounds]] unrolled Lloyd rounds
     * (kd/ka/km/c per round). CTE names are disjoint from [[pqCtes]]'s
     * so the two chains compose in one WITH (ss_ivfpq_search).
@@ -2817,7 +2813,7 @@ object Similarity {
 
   /** [[lloydCtes]] plus the assignment of EVERY vector to the trained
     * centroids (ad/asg) — the DuckDB mirror of
-    * `assignL2(dims, trainedCents(dims))`.
+    * `Lloyd.assign(vecs, coarseBook(vecs))`.
     */
   private val trainedAssignAsgn: String =
     s"""ad AS MATERIALIZED (

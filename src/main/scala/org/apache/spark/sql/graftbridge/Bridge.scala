@@ -22,6 +22,23 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The running SparkContext, if any (`getActive` is `private[spark]`). */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
+
+  /** A copy of the calling thread's local properties — job group,
+    * description, scheduler pool, SQL execution ids
+    * (`getLocalProperties` is `private[spark]`).
+    */
+  def getLocalProperties(sc: org.apache.spark.SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Replace the calling thread's local properties
+    * (`setLocalProperties` is `private[spark]`).
+    */
+  def setLocalProperties(sc: org.apache.spark.SparkContext, props: java.util.Properties): Unit =
+    sc.setLocalProperties(props)
+
   /** Stable per-session id (`sessionUUID` is `private[sql]`). */
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID

@@ -27,6 +27,10 @@ class CollectLintSpec extends AnyFunSuite {
       "unigram-Viterbi vocab map: model-sized (vocab-capped), never corpus-sized"),
     "operators/QuantileQueries.scala" -> (2,
       "radix-descent histograms: <=2^16 bucket rows per pass by construction"),
+    "operators/Lloyd.scala" -> (2,
+      "Lloyd k-means on a driver-held codebook: the k seed rows, and per " +
+        "round the k*segs*segLen (centroid, segment, coordinate) partial " +
+        "sums — codebook-sized, never corpus-sized"),
     "Stress.scala" -> (5,
       "ivfskew fixture verdicts: per-cell census frames (k, k+1, " +
         "k+n_splits, and k+n_splits-n_merges rows — cell counts, " +

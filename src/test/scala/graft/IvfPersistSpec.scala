@@ -296,9 +296,9 @@ class IvfPersistSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_index"),
       "persisted search does not scan the published index tables")
-    // Lloyd rounds surface as checkpointed-RDD scans (lloydRounds
-    // localCheckpoints each round); a serving-tier plan must be pure
-    // parquet scans + joins
+    // training surfaces as checkpointed-RDD scans (the Lloyd loop
+    // reads localCheckpointed vectors); a serving-tier plan must be
+    // pure parquet scans + joins
     assert(!plan.contains("ExistingRDD"),
       "training lineage (checkpointed RDD scan) leaked into the " +
         "persisted-index search plan")
