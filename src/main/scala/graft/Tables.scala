@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's Parquet testdata (TESTDATA.md).
   *
@@ -31,14 +32,58 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     cache.computeIfAbsent((uuidOf(spark), s"$dir/$name.parquet"),
-      key => spark.read.parquet(key._2))
+      key => read(spark, key._2))
 
-  /** Drop every cached handle under `pathPrefix` (all sessions). Call
-    * after rewriting parquet files in place, or the cached file index
-    * serves deleted/stale files.
+  // JVM-wide parquet schemas. Inferring one is a Spark job that reads
+  // footers, so without this every fresh session pays a job on its
+  // first read of each table. The key holds what inference depends
+  // on: the path, the session's parquet schema confs, and the names,
+  // sizes and mtimes of the files under the path, so a rewrite is
+  // seen by the next session even without invalidate.
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String], Seq[(String, Long, Long)]), StructType]()
+
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(b.result().sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
+    files match {
+      case None => spark.read.parquet(path) // raises Spark's own missing-path error
+      case Some(fs) =>
+        val key = (path, schemaConfs.map(k => spark.conf.getOption(k).getOrElse("")), fs)
+        val known = schemas.get(key)
+        if (known != null) spark.read.schema(known).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          // one fingerprint per (path, confs): a rewrite replaces the entry
+          schemas.keySet.removeIf(k => k._1 == path && k._2 == key._2)
+          schemas.put(key, df.schema)
+          df
+        }
+    }
+  }
+
+  /** Drop every cached handle and schema under `pathPrefix` (all
+    * sessions). Call after rewriting parquet files in place, or the
+    * cached file index serves deleted/stale files.
     */
   def invalidate(pathPrefix: String): Unit = {
     cache.keySet.removeIf(_._2.startsWith(pathPrefix))
+    schemas.keySet.removeIf(_._1.startsWith(pathPrefix))
     // derived artifacts (verified dedup pairs, trained codebooks)
     // built from tables under the prefix go stale with them
     CacheRegistry.invalidate(pathPrefix)
@@ -46,6 +91,7 @@ object Tables {
 
   /** Drop a session's cached handles (call when done with a session so
     * its resolved file indexes are not pinned for the JVM lifetime).
+    * The JVM-wide schemas stay: the next session reuses them.
     */
   def invalidateSession(spark: SparkSession): Unit = {
     cache.keySet.removeIf(_._1 == uuidOf(spark))

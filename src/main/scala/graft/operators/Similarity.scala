@@ -1159,11 +1159,12 @@ object Similarity {
     // the standard IVF cost/recall dial.
     "ss_ivf_search" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val asg = trainedIvf(s, dir)._2
-      val v = Tables.embeddings(s, dir)
-        .select(col("vec_id"), toDouble(col("embedding")).as("e"))
-        .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-      val assigned = v.join(asg, "vec_id")
+      val book = trainedIvf(s, dir)._3
+      // the assignment as a projection over the cached vectors: no
+      // join between the parquet vectors and a checkpointed assignment
+      val assigned = cachedVecs(s, dir).select(col("vec_id"), col("e"),
+        sqrt(dot(col("e"), col("e"))).as("nrm"),
+        Lloyd.nearest(book).getItem(0).getField("cent_id").as("cent_id"))
       val q = assigned.filter(col("vec_id") >= 100 && col("vec_id") < 105)
       val wTop = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("cand_id").asc)

@@ -183,6 +183,37 @@ object TextAnalysis {
       .orderBy("rk")
   }
 
+  /** RAKE keyphrases of `docs(text)`: the top 10 phrases of at most
+    * [[RakeMaxLen]] words by micro-unit score, ties by phrase, as
+    * (phrase, n_occur, score_micro). Every occurrence of a phrase text
+    * has the same words (words hold no space and are never empty), so
+    * one score per distinct text is every occurrence's score.
+    */
+  def rake(docs: DataFrame): DataFrame = {
+    val phrases = docs
+      .select(explode(graft.functions.StopwordRuns.stopword_runs(
+        col("text"), QualityQueries.Stopwords)).as("ws"))
+      .withColumn("plen", size(col("ws")))
+    val wordStats = phrases
+      .select(explode(col("ws")).as("w"), col("plen"))
+      .groupBy("w")
+      .agg(sum(col("plen")).as("deg"), count(lit(1)).as("freq"))
+      // deg is CORPUS-token-scale (Σ plen over every occurrence of
+      // w): deg·10⁶ wraps int64 past ~9.2e12, real at 100 TB — ride
+      // DECIMAL(38,0); the DIV quotient (mean phrase length micro)
+      // is bounded by the phrase-length cap
+      .withColumn("wscore",
+        expr("CAST(deg AS DECIMAL(38,0)) * 1000000 DIV freq"))
+    phrases.filter(col("plen") <= RakeMaxLen)
+      .groupBy(concat_ws(" ", col("ws")).as("phrase"))
+      .agg(count(lit(1)).as("n_occur"))
+      .select(col("phrase"), col("n_occur"), explode(split(col("phrase"), " ")).as("w"))
+      .join(broadcast(wordStats.select("w", "wscore")), Seq("w"))
+      .groupBy("phrase", "n_occur").agg(sum(col("wscore")).as("score_micro"))
+      .orderBy(col("score_micro").desc, col("phrase").asc)
+      .limit(10)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Language ID: stopword-hit argmax, reported as a confusion matrix
@@ -397,25 +428,6 @@ object TextAnalysis {
         .orderBy(col("lift_micro").desc, col("w1"), col("w2"))
     }),
 
-    // RAKE keyphrase extraction (Rose et al. 2010) — candidate phrases
-    // are maximal token runs between stopwords; a word's score is its
-    // co-occurrence degree over its frequency (deg(w) = Σ phrase
-    // lengths containing w, freq(w) = its occurrences in phrases);
-    // a phrase scores the sum of its words' scores. Kept exact in
-    // integers: word scores floor to micro-units (deg·10⁶ div freq —
-    // both pure counts), phrase scores sum the micro-units, so the
-    // whole ranking is engine-exact with no float division anywhere.
-    // Plan: phrase segmentation is a per-doc cumulative stopword
-    // count (doc_id-partitioned window — the ev_markov/sessionize
-    // shard argument), word stats are a vocab-bounded aggregation
-    // that BROADCASTS back into phrase scoring, and the top-10 rides
-    // TakeOrderedAndProject. At 100 TB: two narrow passes over the
-    // token stream + one vocabulary-sized broadcast. The REPORT keeps
-    // phrases of <=[[RakeMaxLen]] words (the standard RAKE output
-    // cap: this corpus's 2-stopword delimiter set leaves some runs
-    // spanning most of a document — valid candidates for the degree
-    // statistics, which stay computed over ALL runs, but not
-    // keyphrases).
     // SOUNDEX PHONETIC BLOCKING — the record-linkage classic (the
     // blocking key behind every "Smith/Smyth/Schmidt" name-matching
     // pass, and the phonetic sibling of dd_sorted_neighborhood's
@@ -446,42 +458,29 @@ object TextAnalysis {
         .orderBy("sdx")
     }),
 
-    "ta_rake" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "w")))
-        .withColumn("is_stop", col("w").isin(QualityQueries.Stopwords: _*))
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val words = toks
-        .withColumn("grp",
-          sum(when(col("is_stop"), 1).otherwise(0)).over(wDoc))
-        .filter(!col("is_stop"))
-        .select("doc_id", "grp", "pos", "w")
-        .localCheckpoint(false) // three consumers below
-      val phrases = words.groupBy("doc_id", "grp")
-        .agg(count(lit(1)).as("plen"),
-          concat_ws(" ", transform(
-            array_sort(collect_list(struct(col("pos"), col("w")))),
-            x => x.getField("w"))).as("phrase"))
-      val wordStats = words
-        .join(phrases.select("doc_id", "grp", "plen"), Seq("doc_id", "grp"))
-        .groupBy("w")
-        .agg(sum(col("plen")).as("deg"), count(lit(1)).as("freq"))
-        // deg is CORPUS-token-scale (Σ plen over every occurrence of
-        // w): deg·10⁶ wraps int64 past ~9.2e12, real at 100 TB — ride
-        // DECIMAL(38,0); the DIV quotient (mean phrase length micro)
-        // is bounded by the phrase-length cap
-        .withColumn("wscore",
-          expr("CAST(deg AS DECIMAL(38,0)) * 1000000 DIV freq"))
-      words.join(broadcast(wordStats.select("w", "wscore")), Seq("w"))
-        .groupBy("doc_id", "grp").agg(sum(col("wscore")).as("score_micro"))
-        .join(phrases, Seq("doc_id", "grp"))
-        .filter(col("plen") <= RakeMaxLen)
-        .groupBy("phrase")
-        .agg(count(lit(1)).as("n_occur"), max(col("score_micro")).as("score_micro"))
-        .orderBy(col("score_micro").desc, col("phrase").asc)
-        .limit(10)
-    }),
+    // RAKE keyphrase extraction (Rose et al. 2010) — candidate phrases
+    // are maximal token runs between stopwords; a word's score is its
+    // co-occurrence degree over its frequency (deg(w) = Σ phrase
+    // lengths containing w, freq(w) = its occurrences in phrases);
+    // a phrase scores the sum of its words' scores. Kept exact in
+    // integers: word scores floor to micro-units (deg·10⁶ div freq —
+    // both pure counts), phrase scores sum the micro-units, so the
+    // whole ranking is engine-exact with no float division anywhere.
+    // Plan: two narrow passes over the documents and no token-scale
+    // shuffle. Segmentation is a per-record map — the native
+    // [[graft.functions.StopwordRuns]] kernel turns each document into
+    // its phrases (word arrays) inside the row. Pass one explodes the
+    // phrases' words into a vocabulary-sized (deg, freq) aggregation
+    // that is BROADCAST; pass two groups the reportable phrases by
+    // text, scores each distinct text once from its words, and the
+    // top-10 rides TakeOrderedAndProject. At 100 TB: a phrase-text and
+    // a vocabulary shuffle plus one vocabulary-sized broadcast. The
+    // REPORT keeps phrases of <=[[RakeMaxLen]] words (the standard
+    // RAKE output cap: this corpus's 2-stopword delimiter set leaves
+    // some runs spanning most of a document — valid candidates for the
+    // degree statistics, which stay computed over ALL runs, but not
+    // keyphrases).
+    "ta_rake" -> ((s, dir) => rake(Tables.documents(s, dir))),
 
     // TextRank keywords (Mihalcea & Tarau 2004) — RAKE's graph-based
     // sibling and the second consumer of the shared integer-PageRank
