@@ -34,10 +34,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // offline replay of a progress log through the round-16 per-block
-    // normalization — no Spark session, used to validate the gate
-    // against recorded contended runs (verdict #4's acceptance check)
-    if (args.headOption.contains("replay")) { BenchReplay.run(args.drop(1)); return }
     val t0Main = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0Main) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -99,7 +95,7 @@ object Bench {
       // quarantined run destroy the previous bench_contended.json
       // .progress.jsonl — the forensic record the round-15/16
       // postmortems were built from). A `{"event":"run_boundary"}`
-      // line separates runs so replay tooling can split them.
+      // line separates runs so a reader of the log can split them.
       try {
         val src = java.nio.file.Paths.get(oldProgress)
         val dst = java.nio.file.Paths.get(progressFile)
@@ -557,7 +553,7 @@ object Bench {
     * range scan; max, not sum, because summing 200M hashes overflows
     * LONG under ANSI.
     */
-  def hostProbe(spark: SparkSession): Double =
+  private def hostProbe(spark: SparkSession): Double =
     clock(spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
       .selectExpr("max(xxhash64(id))").head())._2
 
@@ -568,12 +564,12 @@ object Bench {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  private[graft] def slurp(path: String): String = new String(
+  private def slurp(path: String): String = new String(
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
     java.nio.charset.StandardCharsets.UTF_8)
 
   /** Per-query seconds recorded in a prior bench.json. */
-  private[graft] def priorQueries(txt: String): Map[String, Double] =
+  private def priorQueries(txt: String): Map[String, Double] =
     """"queries":\{(.*?)\}""".r.findFirstMatchIn(txt).map(_.group(1))
       .map { qm =>
         """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(qm)
@@ -581,97 +577,8 @@ object Bench {
       }.getOrElse(Map.empty)
 
   /** min(start, end) of a prior bench.json's calibration probe. */
-  private[graft] def priorProbe(txt: String): Option[Double] =
+  private def priorProbe(txt: String): Option[Double] =
     """"calibration":\{"probe":"v[0-9]+","start":([0-9.eE+-]+),"end":([0-9.eE+-]+)""".r
       .findFirstMatchIn(txt)
       .map(m => math.min(m.group(1).toDouble, m.group(2).toDouble))
-}
-
-/** Offline replay of a Bench progress log through the round-16
-  * per-block normalization (`runMain graft.Bench replay
-  * <progress.jsonl> <prior bench.json>`): re-derives the regression
-  * flags the gate WOULD raise, without touching Spark or the host.
-  *
-  * Normalization source, in preference order:
-  *  1. interleaved block probes (`{"probe":…,"seq":…}` lines, written
-  *     by round-16+ runs): each query divides by
-  *     max(1, min(nearest-before, nearest-after) / prior probe) — the
-  *     live gate's rule verbatim;
-  *  2. probe-less logs (pre-round-16, e.g. the r15 driver's contended
-  *     run): BLOCK-MEDIAN fallback — queries are grouped in log order
-  *     into blocks of 25 and each divides by the clamped median of
-  *     its block's now/prev ratios. Self-calibrating: a window where
-  *     everything is uniformly 5× slower has block median ≈ 5 and
-  *     raises nothing; a genuine single-query regression still sticks
-  *     out of its own block. Replay-only — the live gate always has
-  *     probes.
-  *
-  * Acceptance check this tool exists for (round-16 verdict #4):
-  * replaying the r15 contended progress log. Measured result
-  * (SCALE.md round 16): 255 endpoint-normalized phantom flags drop
-  * to 90 block-median candidates — and the remaining 90 are
-  * IRREDUCIBLE post-hoc, because that run's contention was per-query
-  * bursty, not block-shaped (e.g. dd_ablation measured 11.1× its
-  * prior while its 24 block neighbors' median was 1.19×; no
-  * statistic over neighbors or probes can tell that from a real 11×
-  * regression). That is exactly why the LIVE gate's flags are
-  * candidates, not verdicts: each gets a standalone min-of-2
-  * re-measure after the suite (r12 rule), which the r15 driver run
-  * skipped under degraded budget. Replay therefore reports its flags
-  * as would-re-measure candidates.
-  */
-object BenchReplay {
-  def run(args: Array[String]): Unit = {
-    val Array(progressPath, prevPath) = args.take(2)
-    val progressTxt = Bench.slurp(progressPath)
-    val prevTxt = Bench.slurp(prevPath)
-    val prev = Bench.priorQueries(prevTxt)
-    val prevProbe = Bench.priorProbe(prevTxt)
-    // (seq-in-log, kind) — measurements keep only their pass-1 /
-    // first occurrence per query (min over passes like the live gate)
-    val measLine =
-      """\{"pass":(\d+),"query":"([^"]+)","sec":(-?[0-9.eE+-]+)[,}].*""".r
-    val probeLine = """\{"probe":([0-9.eE+-]+),"seq":(\d+).*""".r
-    case class M(idx: Int, name: String, sec: Double)
-    var idx = 0
-    val meas = scala.collection.mutable.ArrayBuffer[M]()
-    val probes = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
-    progressTxt.linesIterator.foreach {
-      case measLine(_, name, sec) =>
-        meas += M(idx, name, sec.toDouble); idx += 1
-      case probeLine(p, _) => probes += ((idx, p.toDouble))
-      case _ => ()
-    }
-    val best = meas.filter(_.sec >= 0).groupBy(_.name)
-      .map { case (n, ms) => n -> ms.minBy(_.sec) }
-    def ratioOf(m: M): Double =
-      if (probes.nonEmpty && prevProbe.isDefined) {
-        val before = probes.takeWhile(_._1 <= m.idx).lastOption.map(_._2)
-        val after = probes.dropWhile(_._1 <= m.idx).headOption.map(_._2)
-        val near = (before.toSeq ++ after.toSeq).min
-        math.max(1.0, near / prevProbe.get)
-      } else {
-        // block-median fallback over the 25-query neighborhood
-        val block = meas.slice(m.idx / 25 * 25, m.idx / 25 * 25 + 25)
-        val ratios = block.flatMap(b =>
-          prev.get(b.name).filter(_ > 0).map(p => b.sec / p)).sorted
-        if (ratios.isEmpty) 1.0
-        else math.max(1.0, ratios(ratios.size / 2))
-      }
-    val flags = best.toSeq.sortBy(_._1).flatMap { case (name, m) =>
-      prev.get(name).filter(_ > 0).flatMap { p =>
-        val r = ratioOf(m)
-        if (m.sec / r > p * 1.5 && m.sec / r - p > 0.3)
-          Some(s""""$name":{"prev":$p,"now":${m.sec},"block_ratio":${math.round(r * 1000) / 1000.0}}""")
-        else None
-      }
-    }
-    val mode = if (probes.nonEmpty && prevProbe.isDefined) "nearest_probe"
-      else "block_median"
-    println(s"""{"replay":"$progressPath","prior":"$prevPath","mode":"$mode",""" +
-      s""""n_measured":${best.size},"n_with_prior":${best.keySet.count(prev.contains)},""" +
-      s""""n_remeasure_candidates":${flags.size},""" +
-      s""""note":"candidates, not verdicts - the live gate standalone-re-measures each before it may enter regressions",""" +
-      s""""flags":{${flags.mkString(",")}}}""")
-  }
 }

@@ -160,10 +160,6 @@ object Graft {
   def textRank(docs: DataFrame, text: Column, k: Int): DataFrame =
     operators.TextAnalysis.textRank(docs, text, k)
 
-  /** Optimal unigram-tokenizer segmentation cost (10⁶·n_pieces + Σrank)
-    * of a string column under a fixed piece vocabulary — native
-    * codegen expression (see [[graft.functions.UnigramViterbi]]).
-    */
   /** Z-order (Morton) layout key of two 16-bit cell coordinates — the
     * multi-dimensional clustering sort key
     * (see [[graft.functions.InterleaveBits]]).
@@ -187,6 +183,10 @@ object Graft {
       targets: Seq[(String, Long => Long)]): DataFrame =
     operators.QuantileQueries.kthValues(spark, rows, valueCol, targets)
 
+  /** Optimal unigram-tokenizer segmentation cost (10⁶·n_pieces + Σrank)
+    * of a string column under a fixed piece vocabulary — native
+    * codegen expression (see [[graft.functions.UnigramViterbi]]).
+    */
   def unigramSegmentCost(text: Column, vocab: Map[String, Int],
       maxPieceLen: Int, maxChars: Int): Column =
     functions.UnigramViterbi.unigram_viterbi(text, vocab, maxPieceLen, maxChars)

@@ -1,34 +1,27 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 import graft.functions.{DotProduct, DoubleSortableBits, Md5PrefixLong, RollingHash, TokenCount, TokenCountRewrite, WordShingles}
+import graft.plans.AsOfJoinStrategy
 
-/** Session extension registering graft's native expressions as SQL
-  * functions, so the SQL-string surface can use them:
+/** The one install point of graft's engine extensions: the native
+  * expressions as SQL functions, the [[TokenCountRewrite]] optimizer
+  * rule and the [[AsOfJoinStrategy]] planner strategy.
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * // or on an existing session:
   * GraftExtensions.register(spark)
   * spark.sql("SELECT rolling_hash(text), word_shingles(text, 3) FROM docs")
   * }}}
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit = {
-    GraftExtensions.functionDefs.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => TokenCountRewrite)
-  }
-}
-
 object GraftExtensions {
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft.functions", null, name, usage, "")
 
-  val functionDefs: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  private val functionDefs: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
       (FunctionIdentifier("rolling_hash"),
         info("rolling_hash", "rolling_hash(str) - 64-bit polynomial rolling hash"),
@@ -91,11 +84,10 @@ object GraftExtensions {
         })
     )
 
-  /** Register on an already-built session (the driver owns session
-    * construction, so injection-at-build isn't always available).
-    * Installs the SQL functions AND the [[TokenCountRewrite]] optimizer
-    * rule (via `experimental.extraOptimizations`, the post-build
-    * injection point).
+  /** Install every extension on `spark`. Idempotent: a function is
+    * re-registered under its own name, and the rule and the strategy
+    * are each prepended only when absent, so a second call changes
+    * nothing.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -103,8 +95,10 @@ object GraftExtensions {
     functionDefs.foreach { case (ident, inf, builder) =>
       registry.registerFunction(ident, inf, builder)
     }
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(TokenCountRewrite))
-      spark.experimental.extraOptimizations = opts :+ TokenCountRewrite
+    val x = spark.experimental
+    if (!x.extraOptimizations.contains(TokenCountRewrite))
+      x.extraOptimizations = TokenCountRewrite +: x.extraOptimizations
+    if (!x.extraStrategies.contains(AsOfJoinStrategy))
+      x.extraStrategies = AsOfJoinStrategy +: x.extraStrategies
   }
 }

@@ -56,8 +56,8 @@ object TokenCount {
   * `size(filter(split(s, " ", -1), t -> t <> ""))` to the one-pass
   * [[TokenCount]] — the quality/token-stats queries ask only for the
   * count, and building + filtering the intermediate token array per row
-  * is pure overhead. Injected via `GraftExtensions` (builder path:
-  * custom `Expression` + `Rule[LogicalPlan]`); result-identity is
+  * is pure overhead. Installed by `GraftExtensions.register` (custom
+  * `Expression` + `Rule[LogicalPlan]`); result-identity is
   * pinned by a property spec and by every oracle row of the queries the
   * rewrite fires in.
   */

@@ -1682,7 +1682,7 @@ object Dedup {
     * enter the loop at base-char granularity, so rounds =
     * log₂(L/base). Power of two; every supported L must satisfy
     * L ≥ 2·base (the auto default clamps to spanL/2 for smaller L).
-    * Round 17: 8 → 16, A/B-measured with `graft.Stress suffixab
+    * Round 17: 8 → 16, A/B-measured with `LegacyAb suffixab
     * sf0.1 32 8 16` (interleaved, span equality asserted): per-arm
     * min 9.70 s (base 8, two doubling rounds) vs 8.45 s (base 16,
     * ONE round) — one fewer round (a window + two corpus-position
@@ -1758,9 +1758,9 @@ object Dedup {
     }
 
   /** The dd_suffix_spans body over an arbitrary document frame,
-    * parameterized by the span length (a power of two ≥ 2) so
-    * [[graft.Stress]] can sweep L and measure the log₂(L)-round
-    * scaling directly. See the query's comment for the algorithm and
+    * parameterized by the span length (a power of two ≥ 2) so a sweep
+    * over L measures the log₂(L)-round scaling directly (SCALE.md
+    * round 14). See the query's comment for the algorithm and
     * exactness argument.
     */
   private[graft] def suffixSpansOf(documents: DataFrame, spanL: Int,
@@ -1772,7 +1772,7 @@ object Dedup {
     // beats extra long-key rounds; the doubling structure — and its
     // log₂ cost curve — is unchanged, just entered log₂(seedBase)
     // levels up; base 4 vs 8 A/B-measured in SCALE.md round 14, 8 vs
-    // 16 in round 17, via `graft.Stress suffixab`). The base
+    // 16 in round 17, via the `LegacyAb suffixab` A/B). The base
     // parameter exists for that A/B harness only; queries use the
     // auto default. seedBase must itself be a power of two: the
     // doubling loop steps w = seedBase, 2·seedBase, 4·seedBase … and
@@ -2147,8 +2147,8 @@ object Dedup {
       // but an exact-duplicate class lands whole in one bucket; the
       // salting keeps every aggregation buffer ≤ ~2·cap members and
       // spreads a mega-bucket's cells across the cluster — measured at
-      // the 100k-duplicate-class point in SCALE.md (graft.Stress
-      // `pairgen_dup_class`).
+      // the 100k-duplicate-class point in SCALE.md
+      // (`pairgen_dup_class`).
       val b = bands(signaturesOf(documents))
       val candRaw = PairGen.saltedPairs(
           b.select(col("band_idx"), col("band_hash"),

@@ -209,15 +209,15 @@ object DedupClusters {
     * bits first (the ta_collocations two-stage fixed-point
     * discipline). Relative error per scaled count is ≤ 2^shift/count
     * ~ 2⁻²⁵ at the activation threshold — invisible at ppm
-    * resolution (Stress `ariscale` probe pins shifted ≡ exact at a
-    * forcing doc count). The rung table ends at n < 2⁴¹ (shift 32);
+    * resolution (OperatorsSpec pins shifted ≈ exact under a forced
+    * shift). The rung table ends at n < 2⁴¹ (shift 32);
     * the ELSE rung (34) keeps the expression total beyond it. With
     * the ladder applied, SCALED pair counts stay ≈ 2⁴⁷ across the
     * rung table (shift grows 2 per doubling, exactly offsetting the
     * n² growth) and only approach BIGINT range near ~2⁴⁸ docs — far
     * beyond any realistic corpus. Strict-< boundaries: an exact
-    * power of two takes the NEXT rung (n = 2²⁵ → shift 2), and the
-    * Stress probe's expectShift mirrors that convention.
+    * power of two takes the NEXT rung (n = 2²⁵ → shift 2), as
+    * OperatorsSpec's rung check expects.
     */
   private[graft] def ariUnitShiftSql(n: String): String = {
     val rungs = (25 to 40).map(k =>
@@ -225,8 +225,7 @@ object DedupClusters {
     s"(CASE WHEN $n < ${1L << 25} THEN 0 $rungs ELSE 34 END)"
   }
 
-  /** Pair-counting ARI tail shared by dd_cluster_agreement and the
-    * Stress downscale probe: `joint` carries one row per doc with the
+  /** Pair-counting ARI tail of dd_cluster_agreement: `joint` carries one row per doc with the
     * two partition labels (doc_id, l1, l2), `n` is the one-row doc
     * count. Contingency cells, per-side sizes and C(·,2) sums are
     * exact integers; the ARI ratio cross-multiplies through 2·C(n,2)

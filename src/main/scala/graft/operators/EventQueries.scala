@@ -1398,7 +1398,7 @@ object EventQueries {
     // the key's full replicated right timeline — which is exactly what
     // this oracle row pins (it shares ev_asof_order's SQL). The wrapper
     // is the hot-key mitigation AQE can't apply to a custom exec;
-    // `Stress` measures it taking the 90%-hot-key probe back to the
+    // SCALE.md measures it taking the 90%-hot-key probe back to the
     // uniform baseline.
     "ev_asof_order_salted" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("ts"))

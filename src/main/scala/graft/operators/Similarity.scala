@@ -453,8 +453,8 @@ object Similarity {
     * base+delta segments when zero splits were needed — which is the
     * uniform-testdata case: the alarm never fires there, so the
     * oracle states the quiescent-already census and the split loop's
-    * body is gated by the ivfskew Stress fixture's below-threshold
-    * require instead).
+    * body is gated by IvfPersistSpec's synthetic fat-cell tests
+    * instead).
     *
     * Scale: each round touches ONE cell's rows (≈ n/k·occupancy — the
     * fat cell is the biggest thing scanned, and shrinking it is the
@@ -611,8 +611,8 @@ object Similarity {
     * published tables either way. On the uniform testdata neither
     * phase fires, so the oracle states the quiescent-already census
     * and poisons itself (NULL n_splits / n_merges) if its premise
-    * ever breaks; the skewed-corpus path is pinned by the ivfskew
-    * Stress fixture (split-then-merge must end with the alarm quiet,
+    * ever breaks; the skewed-corpus path is pinned by IvfPersistSpec's
+    * fat-cell fixture (split-then-merge must end with the alarm quiet,
     * no sub-floor cell, and k shrunk by exactly n_merges).
     *
     * At 100 TB: merge is the same background shard-maintenance job as
@@ -782,6 +782,18 @@ object Similarity {
     }
   }
 
+  /** Every cached vector (vec_id, e, nrm) with its trained IVF cell
+    * `cent_id`: the assignment as a projection over the cached
+    * vectors, so no row joins the parquet vectors with a checkpointed
+    * assignment.
+    */
+  private def trainedAssigned(s: SparkSession, dir: String): DataFrame = {
+    val book = trainedIvf(s, dir)._3
+    cachedVecs(s, dir).select(col("vec_id"), col("e"),
+      sqrt(dot(col("e"), col("e"))).as("nrm"),
+      Lloyd.nearest(book).getItem(0).getField("cent_id").as("cent_id"))
+  }
+
   /** The ss_ivf_nprobe body, parameterized by probe count: rank the
     * trained cells per query by the SAME exact micro-L2 the assignment
     * uses, take the `nprobe` nearest, exact cosine top-3 over the
@@ -792,7 +804,7 @@ object Similarity {
   private def ivfNprobeTopk(s: SparkSession, dir: String, nprobe: Int,
                             k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (cents, asg, _) = trainedIvf(s, dir)
+    val cents = trainedIvf(s, dir)._1
     val qDims = Tables.embeddings(s, dir)
       .filter(col("vec_id") >= 100 && col("vec_id") < 105)
       .select(col("vec_id"), posexplode(toDouble(col("embedding"))).as(Seq("p", "x")))
@@ -803,12 +815,10 @@ object Similarity {
       .withColumn("pk", row_number().over(wProbe))
       .filter(col("pk") <= nprobe)
       .select(col("vec_id").as("query_id"), col("cent_id"))
-    val v = Tables.embeddings(s, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val cand = v.join(asg, "vec_id")
+    val cand = trainedAssigned(s, dir)
     val q = broadcast(probes)
-      .join(v, probes("query_id") === v("vec_id"))
+      .join(cand.select(col("vec_id"), col("e"), col("nrm")),
+        col("query_id") === col("vec_id"))
       .select(col("query_id"), col("cent_id"), col("e"), col("nrm"))
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("cand_id").asc)
@@ -995,8 +1005,8 @@ object Similarity {
 
   /** Every vector routed to its nearest coarse centroid (centroids =
     * vec_id < NumCentroids, broadcast): the IVF assignment relation
-    * (vec_id, e, nrm, cent_id) shared by ss_ivf_search and the k-means
-    * update step.
+    * (vec_id, e, nrm, cent_id) shared by the k-means update step and
+    * ss_scann_loss.
     */
   private def ivfAssigned(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1159,12 +1169,7 @@ object Similarity {
     // the standard IVF cost/recall dial.
     "ss_ivf_search" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val book = trainedIvf(s, dir)._3
-      // the assignment as a projection over the cached vectors: no
-      // join between the parquet vectors and a checkpointed assignment
-      val assigned = cachedVecs(s, dir).select(col("vec_id"), col("e"),
-        sqrt(dot(col("e"), col("e"))).as("nrm"),
-        Lloyd.nearest(book).getItem(0).getField("cent_id").as("cent_id"))
+      val assigned = trainedAssigned(s, dir)
       val q = assigned.filter(col("vec_id") >= 100 && col("vec_id") < 105)
       val wTop = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("cand_id").asc)
@@ -1352,8 +1357,8 @@ object Similarity {
     // n_splits when its own worst-cell ppm exceeds the threshold, so
     // a testdata change that trips the alarm hash-mismatches loudly
     // instead of silently comparing different regimes. The split
-    // loop's body is exercised with loud requires by the ivfskew
-    // Stress fixture (90%-fat cell → alarm must end BELOW threshold).
+    // loop's body is pinned by IvfPersistSpec's fat-cell fixture
+    // (90%-fat cell → alarm must end BELOW threshold).
     "ss_ivf_rebalance_q" -> ((s, dir) => writeRebalanceQ(s, dir)._1),
 
     // INDEX PERSISTENCE — REBALANCE WITH THE MERGE DUAL (round-16
@@ -1368,8 +1373,8 @@ object Similarity {
     // self-checked: NULL n_splits if the worst cell exceeds the split
     // alarm, NULL n_merges if any cell sits below the merge floor —
     // a testdata change that trips either regime hash-mismatches
-    // loudly. The live split+merge path is pinned by the ivfskew
-    // Stress fixture (fat cell splits, dust cells fold, k shrinks by
+    // loudly. The live split+merge path is pinned by IvfPersistSpec's
+    // fat-cell fixture (fat cell splits, dust cells fold, k shrinks by
     // exactly n_merges, alarm ends quiet, no sub-floor cell remains).
     "ss_ivf_rebalance_mq" -> ((s, dir) => writeRebalanceMQ(s, dir)._1),
 

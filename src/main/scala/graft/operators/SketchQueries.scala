@@ -202,8 +202,7 @@ object SketchQueries {
   /** Query-side wrapper: estimate frame with the exact-count audit
     * column the oracle rows carry.
     */
-  private def hllEstimateWith(s: SparkSession, regs: DataFrame,
-                              exact: DataFrame): DataFrame =
+  private def hllEstimateWith(regs: DataFrame, exact: DataFrame): DataFrame =
     hllEstimate(regs).crossJoin(broadcast(exact))
       .select(col("m"), col("n_set"), col("zcap"), col("est_distinct"),
         col("exact_distinct"))
@@ -232,7 +231,7 @@ object SketchQueries {
     "sk_hll_estimate" -> ((s, dir) => {
       val exact = words(s, dir)
         .agg(count_distinct(col("key")).as("exact_distinct"))
-      hllEstimateWith(s,
+      hllEstimateWith(
         hllRegRho(words(s, dir)).groupBy("reg").agg(max(col("rho")).as("rho")),
         exact)
     }),
@@ -385,7 +384,7 @@ object SketchQueries {
       val merged = hllMerge(Seq(half(_ < "8"), half(_ >= "8")))
       val exact = words(s, dir)
         .agg(count_distinct(col("key")).as("exact_distinct"))
-      hllEstimateWith(s, merged, exact)
+      hllEstimateWith(merged, exact)
     }),
 
     // Count-min point estimates for the exact top-10 TOKENS (tokens,

@@ -604,7 +604,6 @@ object TextAnalysis {
     // Frequencies are ppm integers, so profile extraction is one
     // explode→count; the word stats are a DeltaWords-row broadcast.
     "ta_burrows_delta" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val nTok = Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
       val docN = nTok.groupBy("doc_id").agg(count(lit(1)).as("nt"))

@@ -228,13 +228,6 @@ object AsOfJoin {
   case object Forward extends Direction(1)
   case object Nearest extends Direction(2)
 
-  /** Register the planner strategy on a session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = strategies :+ AsOfJoinStrategy
-  }
-
   /** Normalize a key/time expression so the exec's `getLong` reads are
     * well-defined for its type: ints widen to long (UnsafeRow slots are
     * zero-extended, so a raw `getLong` on a negative int would compare
@@ -440,8 +433,8 @@ object AsOfJoin {
     joinAsOfDir(left, right, leftKey, rightKey, leftTime, rightTime, Nearest)
 
   /** Hot-key mitigation as an operator property — the measured manual
-    * recipe from `Stress` (asof_hot_key 2.7 s → salted ≈ the uniform
-    * 1.4 s baseline) packaged so callers don't hand-roll it: the same
+    * recipe of SCALE.md's as-of probe (asof_hot_key 2.7 s → salted ≈
+    * the uniform 1.4 s baseline) packaged so callers don't hand-roll it: the same
     * as-of join, with each LEFT row's key spread over `salts` sub-keys
     * (salt = leftTime mod salts) and the right side replicated once
     * per salt. Results are row-identical to [[joinAsOf]] — every
@@ -492,7 +485,8 @@ object AsOfJoin {
       leftTime: Column, rightTime: Column,
       direction: Direction): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
+    // a session that never registered still plans AsOfJoinExec
+    graft.GraftExtensions.register(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     val lk = normalize(Bridge.expression(leftKey), "leftKey")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.operators.{Agg, OracleSql, QualityQueries}
 
@@ -35,7 +36,7 @@ object StreamingQueries {
     * source contract; the testdata ships one bare file) with the
     * loader's ts normalization applied once, batch-side.
     */
-  private def stageEvents(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+  private def stageEvents(s: SparkSession, dir: String): (String, StructType) = {
     val ev = Tables.events(s, dir)
     (stage(ev, s"$dir/events.parquet",
       s"${stageRoot(dir)}/events"), ev.schema)
@@ -109,6 +110,142 @@ object StreamingQueries {
     s.table(name)
   }
 
+  // ---- streams: each is the streaming body of one row below,
+  // shared with the ExtensionsSpec test that pins its mechanics
+  // (watermarks, state eviction, output modes) ----
+
+  /** 1-hour tumbling counts and sums per event type over an event
+    * stream (ts, event_type, value): the st_tumbling_hour body. The
+    * grouping key is the extracted window start, which carries no
+    * watermark, so the stream runs in complete (or update) mode and
+    * keeps one state row per (hour, event type).
+    */
+  def windowedEventCounts(s: SparkSession, inputDir: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).parquet(inputDir)
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour").getField("start").as("hour"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        Agg.dsum(col("value")).as("sum_value"))
+
+  /** SLIDING-window counts and sums (15-minute window, 5-minute
+    * slide): the st_sliding_15m body. The slide fans each event into
+    * its 3 overlapping windows map-side. As in [[windowedEventCounts]]
+    * the key is the extracted window start, so the stream runs in
+    * complete (or update) mode with one state row per window.
+    */
+  def slidingEventCounts(s: SparkSession, inputDir: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).parquet(inputDir)
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "15 minutes", "5 minutes")
+        .getField("start").as("win_start"))
+      .agg(count(lit(1)).as("n_events"),
+        Agg.dsum(col("value")).as("sum_value"))
+
+  /** Streaming exact dedup by fingerprint over a document stream
+    * (text, ts): the st_dedup_exact body. `dropDuplicatesWithinWatermark`
+    * is the state-bounded form — fingerprint state older than the
+    * watermark horizon is evicted (plain `dropDuplicates("fp")` would
+    * keep one state row per distinct fingerprint forever).
+    */
+  def dedupStream(s: SparkSession, inputDir: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).parquet(inputDir)
+      .withColumn("fp", md5(col("text")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("fp")
+
+  /** Streaming session windows per user (30-minute gap): the
+    * st_session_window body. The watermark finalizes a session once
+    * no earlier event can arrive, bounding state to open sessions.
+    */
+  def sessionWindowStream(s: SparkSession, inputDir: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).parquet(inputDir)
+      .withWatermark("ts", "1 hour")
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        col("session_window.start").as("session_start"),
+        col("n_events"))
+
+  /** Streaming per-domain cap — the streaming dual of the batch
+    * `pipe_domain_cap`, and the CUSTOM-STATE shape none of the
+    * built-in streaming operators express (dropDuplicates dedupes,
+    * windows aggregate — neither enforces an admission quota):
+    * `flatMapGroupsWithState` keyed by source holds ONE long per
+    * domain (docs admitted so far, across micro-batches) and admits a
+    * doc iff the counter is below the cap. Within a micro-batch the
+    * group's arrivals admit in doc_id order so the result is
+    * deterministic regardless of partition interleaving. State is one
+    * counter per domain — bounded by the domain universe, not the
+    * stream; production adds a GroupStateTimeout to evict idle
+    * domains.
+    */
+  def domainCapStream(spark: SparkSession, inputDir: String,
+      schema: StructType, cap: Int): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    spark.readStream.schema(schema).parquet(inputDir)
+      .select(col("doc_id").cast("long"), col("source").cast("string"))
+      .as[(Long, String)]
+      .groupByKey(_._2)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (source: String, docs: Iterator[(Long, String)], state: GroupState[Long]) =>
+          val kept = state.getOption.getOrElse(0L)
+          val room = math.max(0L, cap - kept).toInt
+          // bounded selection of the `room` smallest ids — a max-heap
+          // of size ≤ room, so a mega-domain micro-batch streams
+          // through in O(cap) memory instead of materializing and
+          // sorting the whole group
+          val admit = if (room == 0) Seq.empty[Long] else {
+            val pq = scala.collection.mutable.PriorityQueue.empty[Long]
+            docs.foreach { case (id, _) =>
+              if (pq.size < room) pq.enqueue(id)
+              else if (id < pq.head) { pq.dequeue(); pq.enqueue(id) }
+            }
+            pq.toSeq.sorted
+          }
+          state.update(kept + admit.length)
+          admit.iterator.map(id => (source, id))
+      }.toDF("source", "doc_id")
+  }
+
+  /** Stream-stream interval join: views joined to the same user's
+    * clicks within the following 30 minutes. Both sides carry
+    * watermarks so the join state (buffered unmatched rows) is evicted
+    * once no counterpart can still arrive — the state-bounded form of
+    * streaming correlation; without the time bound the state grows
+    * forever.
+    */
+  def clickAfterViewJoin(spark: SparkSession, inputDir: String, schema: StructType): DataFrame =
+    clickAfterViewJoinImpl(spark, inputDir, schema, "inner")
+
+  /** LEFT OUTER stream-stream interval join — the funnel-drop shape:
+    * every view emits, matched eagerly with its clicks, or with NULL
+    * click columns once the watermark proves no qualifying click can
+    * still arrive (outer results are watermark-FINALIZED, not eager —
+    * a view is only known unconverted when its 30-minute window is
+    * wholly behind both watermarks). Same bounded state as the inner
+    * form; the extra semantics cost nothing but the emission delay.
+    */
+  def clickAfterViewJoinOuter(spark: SparkSession, inputDir: String, schema: StructType): DataFrame =
+    clickAfterViewJoinImpl(spark, inputDir, schema, "leftOuter")
+
+  private def clickAfterViewJoinImpl(spark: SparkSession, inputDir: String,
+      schema: StructType, joinType: String): DataFrame = {
+    val events = spark.readStream.schema(schema).parquet(inputDir)
+    val views = events.filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
+        col("event_id").as("view_id"))
+      .withWatermark("v_ts", "1 hour")
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("c_ts", "1 hour")
+    views.join(clicks,
+      expr("v_user = c_user AND c_ts > v_ts AND c_ts <= v_ts + INTERVAL 30 MINUTES"),
+      joinType)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // STREAMING TOP-K PER WINDOW — the live leaderboard shape
@@ -143,13 +280,7 @@ object StreamingQueries {
     // order can never change a bit).
     "st_tumbling_hour" -> ((s, dir) => {
       val (staged, schema) = stageEvents(s, dir)
-      val stream = s.readStream.schema(schema).parquet(staged)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour").getField("start").as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          Agg.dsum(col("value")).as("sum_value"))
-      drain(s, stream, "st_tumbling_hour")
+      drain(s, windowedEventCounts(s, staged, schema), "st_tumbling_hour")
         .orderBy("hour", "event_type")
     }),
 
@@ -168,11 +299,7 @@ object StreamingQueries {
           expr("timestamp_micros(1000000000000000 + doc_id)").as("ts"))
       val staged = stage(docs, s"$dir/documents.parquet",
         s"${stageRoot(dir)}/docs")
-      val deduped = s.readStream.schema(docs.schema).parquet(staged)
-        .withColumn("fp", md5(col("text")))
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("fp")
-        .select("fp")
+      val deduped = dedupStream(s, staged, docs.schema).select("fp")
       val q = deduped.writeStream.outputMode("append").format("memory")
         .queryName("st_dedup_exact").start()
       try q.processAllAvailable() finally q.stop()
@@ -192,8 +319,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, dir).select("doc_id", "source")
       val staged = stage(docs.coalesce(1), s"$dir/documents.parquet",
         s"${stageRoot(dir)}/docs_src")
-      val capped = StreamingWordCount.domainCapStream(
-        s, staged, docs.schema, QualityQueries.DomainCap)
+      val capped = domainCapStream(s, staged, docs.schema, QualityQueries.DomainCap)
       val q = capped.writeStream.outputMode("append").format("memory")
         .queryName("st_domain_cap").start()
       try q.processAllAvailable() finally q.stop()
@@ -209,8 +335,7 @@ object StreamingQueries {
     // mode (joins don't support complete).
     "st_click_after_view" -> ((s, dir) => {
       val (staged, schema) = stageEvents(s, dir)
-      val joined = StreamingWordCount
-        .clickAfterViewJoin(s, staged, schema)
+      val joined = clickAfterViewJoin(s, staged, schema)
         .select(col("view_id"), col("click_id"), col("v_user").as("user_id"))
       val q = joined.writeStream.outputMode("append").format("memory")
         .queryName("st_click_after_view").start()
@@ -254,8 +379,7 @@ object StreamingQueries {
           lit(null).cast("string").as("props"))
       val staged = stage(ev.unionByName(sentinels),
         s"$dir/events.parquet", s"${stageRoot(dir)}/ev_outer")
-      val joined = StreamingWordCount
-        .clickAfterViewJoinOuter(s, staged, ev.schema)
+      val joined = clickAfterViewJoinOuter(s, staged, ev.schema)
         .select(col("view_id"), col("v_user").as("user_id"), col("click_id"))
       val q = joined.writeStream.outputMode("append").format("memory")
         .queryName("st_view_conversion").start()
@@ -329,14 +453,7 @@ object StreamingQueries {
     // dual's semantics, and state is O(open sessions), not O(events).
     "st_session_window" -> ((s, dir) => {
       val (staged, schema) = stageEvents(s, dir)
-      val stream = s.readStream.schema(schema).parquet(staged)
-        .withWatermark("ts", "1 hour")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          col("session_window.start").as("session_start"),
-          col("n_events"))
-      drain(s, stream, "st_session_window")
+      drain(s, sessionWindowStream(s, staged, schema), "st_session_window")
         .orderBy("user_id", "session_start")
     }),
 
@@ -371,13 +488,7 @@ object StreamingQueries {
     // aggregation — state O(open windows), output O(window count).
     "st_sliding_15m" -> ((s, dir) => {
       val (staged, schema) = stageEvents(s, dir)
-      val stream = s.readStream.schema(schema).parquet(staged)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "15 minutes", "5 minutes")
-          .getField("start").as("win_start"))
-        .agg(count(lit(1)).as("n_events"),
-          Agg.dsum(col("value")).as("sum_value"))
-      drain(s, stream, "st_sliding_15m")
+      drain(s, slidingEventCounts(s, staged, schema), "st_sliding_15m")
         .orderBy("win_start")
     }),
 

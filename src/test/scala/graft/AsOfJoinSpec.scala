@@ -89,7 +89,6 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("auto-salt: sub-floor frames skip the probe via Catalyst stats (no job at plan time)") {
-    import org.apache.spark.sql.functions._
     // a frame whose optimizer size estimate cannot reach the row
     // floor must not launch probe jobs at plan-construction time
     val l = Seq((0L, 1L), (0L, 2L), (1L, 3L)).toDF("k", "t")

@@ -30,12 +30,7 @@ class CollectLintSpec extends AnyFunSuite {
     "operators/Lloyd.scala" -> (2,
       "Lloyd k-means on a driver-held codebook: the k seed rows, and per " +
         "round the k*segs*segLen (centroid, segment, coordinate) partial " +
-        "sums — codebook-sized, never corpus-sized"),
-    "Stress.scala" -> (5,
-      "ivfskew fixture verdicts: per-cell census frames (k, k+1, " +
-        "k+n_splits, and k+n_splits-n_merges rows — cell counts, " +
-        "never corpus rows); cdcab's ordered equality check: both " +
-        "arms end in limit(50), so the one collect is <=50 report rows per arm")
+        "sums — codebook-sized, never corpus-sized")
   )
 
   test("every .collect() in main source is allowlisted with its bound") {

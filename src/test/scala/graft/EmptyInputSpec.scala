@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, DedupClusters, GraphQueries, RangeJoin}
+import graft.operators.{DedupClusters, GraphQueries, RangeJoin}
 import graft.plans.AsOfJoin
 
 /** Library-hygiene checks: the operator APIs must handle EMPTY inputs

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.RollingHash
 import graft.operators.Multimodal
 import graft.plans.JobEventLog
-import graft.streaming.StreamingWordCount
+import graft.streaming.{StreamingQueries, StreamingWordCount}
 
 /** Custom Expression, multimodal plumbing, streaming, and the O13
   * event-log listener.
@@ -139,11 +139,14 @@ class ExtensionsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.windowedEventCounts(spark, dir.toString, schema),
-      "ev_stream", mode = "append")
+      StreamingQueries.windowedEventCounts(spark, dir.toString, schema)
+        .select("hour", "event_type", "n_events"),
+      "ev_stream", mode = "complete")
     try {
-      // append mode emits only watermark-closed windows; just assert the
-      // stream ran and the sink table exists with the right schema
+      // the st_tumbling_hour stream groups by the extracted window
+      // start, which carries no watermark, so it runs in complete mode
+      // (append is rejected); assert the stream ran and the sink table
+      // exists with the right schema
       val cols = spark.table("ev_stream").columns.toSeq
       assert(cols == Seq("hour", "event_type", "n_events"))
     } finally q.stop()
@@ -158,7 +161,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.slidingEventCounts(spark, dir.toString, schema),
+      StreamingQueries.slidingEventCounts(spark, dir.toString, schema),
       "sl_stream", mode = "complete")
     try {
       val got = spark.sql("SELECT win_start, n_events FROM sl_stream ORDER BY win_start")
@@ -183,7 +186,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.dedupStream(spark, dir.toString, schema),
+      StreamingQueries.dedupStream(spark, dir.toString, schema),
       "dd_stream", mode = "append")
     try {
       val texts = spark.sql("SELECT text FROM dd_stream ORDER BY text")
@@ -225,7 +228,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.domainCapStream(spark, dir.toString, schema, 2),
+      StreamingQueries.domainCapStream(spark, dir.toString, schema, 2),
       "cap_stream", mode = "append")
     try {
       // batch 1: srcA admits its 2 lowest ids, srcB its single doc
@@ -273,7 +276,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.sessionWindowStream(spark, dir.toString, schema),
+      StreamingQueries.sessionWindowStream(spark, dir.toString, schema),
       "sw_stream", mode = "append")
     try {
       val streamed = spark.sql("SELECT user_id, session_start, n_events FROM sw_stream")
@@ -315,7 +318,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.clickAfterViewJoin(spark, dir.toString, schema),
+      StreamingQueries.clickAfterViewJoin(spark, dir.toString, schema),
       "ss_join", mode = "append")
     try {
       val got = spark.table("ss_join")
@@ -340,7 +343,7 @@ class ExtensionsSpec extends AnyFunSuite {
     ev.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
     val q = StreamingWordCount.runToMemory(
-      StreamingWordCount.clickAfterViewJoinOuter(spark, dir.toString, schema),
+      StreamingQueries.clickAfterViewJoinOuter(spark, dir.toString, schema),
       "sso_join", mode = "append")
     try {
       // outer results are watermark-finalized: before any later data

@@ -239,4 +239,53 @@ class GraftApiSpec extends AnyFunSuite {
     assert(got("min") == 1.0 && got("max") == 1000.0)
     assert(got("p50") == sorted((sorted.length + 1) / 2 - 1))
   }
+
+  test("GraftExtensions.register twice installs each extension once") {
+    import graft.functions.TokenCountRewrite
+    import graft.plans.AsOfJoinStrategy
+    val s = spark.newSession()
+    GraftExtensions.register(s)
+    GraftExtensions.register(s)
+    assert(s.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
+    assert(s.experimental.extraOptimizations.count(_ == TokenCountRewrite) == 1)
+    val sh = s.sql("SELECT word_shingles('a b c d', 2)").head().getSeq[String](0)
+    assert(sh.nonEmpty, "word_shingles resolved to an empty array")
+  }
+
+  test("Graft.joinAsOf plans AsOfJoinExec on a session that never registered") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.plans.{AsOfJoinExec, AsOfJoinStrategy}
+    val s = spark.newSession()
+    assert(!s.experimental.extraStrategies.contains(AsOfJoinStrategy))
+    val l = s.range(5).select(col("id").as("k"), (col("id") * 10).as("t"))
+    val r = s.range(5).select(col("id").as("rk"), (col("id") * 10 - 1).as("rt"))
+    val plan = Graft.joinAsOf(l, r, l("k"), r("rk"), l("t"), r("rt"))
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    assert(plan.collectFirst { case e: AsOfJoinExec => e }.nonEmpty, plan.toString)
+  }
+
+  test("Graft.pageRank equals GraphQueries.pageRankMicro") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 6L))
+      .toDF("doc_a", "doc_b")
+    val viaApi = Graft.pageRank(pairs)
+    val direct = graft.operators.GraphQueries.pageRankMicro(pairs)
+    assert(viaApi.count() == 6L)
+    assert(viaApi.exceptAll(direct).isEmpty && direct.exceptAll(viaApi).isEmpty)
+  }
+
+  test("Graft.packSequences equals PipelineQueries.packBySharded") {
+    // 40 docs in two languages, 1-7 tokens each
+    val dir = java.nio.file.Files.createTempDirectory("graft_pack").toString
+    (1L to 40L).map(i => (i, Seq.fill((i % 7 + 1).toInt)("tok").mkString(" "),
+        if (i % 3 == 0) "de" else "en"))
+      .toDF("doc_id", "text", "lang")
+      .write.parquet(s"$dir/documents.parquet")
+    val viaApi = Graft.packSequences(spark, dir, 4)
+    val direct = graft.operators.PipelineQueries.packBySharded(spark, dir, 4)
+    assert(!viaApi.isEmpty)
+    assert(viaApi.exceptAll(direct).isEmpty && direct.exceptAll(viaApi).isEmpty)
+  }
 }

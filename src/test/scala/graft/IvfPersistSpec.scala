@@ -103,8 +103,8 @@ class IvfPersistSpec extends AnyFunSuite {
     val admit = SparkEntry.queries("ss_ivf_admit")(spark, dir).collect()
     val out = SparkEntry.queries("ss_ivf_rebalance_q")(spark, dir).collect()
     // uniform testdata never trips the alarm (the oracle's premise —
-    // the split-loop body is gated by the ivfskew Stress fixture's
-    // below-threshold require), so the loop must exit at 0 splits
+    // the split-loop body is gated by the synthetic-skew tests
+    // below), so the loop must exit at 0 splits
     // with the admit census unchanged
     assert(out.forall(_.getAs[Long]("n_splits") == 0L))
     assert(out.forall(!_.getAs[Boolean]("from_split")))
@@ -117,8 +117,7 @@ class IvfPersistSpec extends AnyFunSuite {
   }
 
   test("ss_ivf_rebalance_q: the split loop quiets a fat cell (synthetic skew)") {
-    import org.apache.spark.sql.functions._
-    // the graft.Stress ivfskew corpus at CI scale: vec_ids 0..3 are the
+    // a fat-cell corpus at CI scale: vec_ids 0..3 are the
     // four well-separated cluster centers (the IVF seeds), members
     // 90/5/3/2% across clusters, deterministic jitter — the alarm MUST
     // fire post-admission and the loop MUST leave it quiet
@@ -172,7 +171,7 @@ class IvfPersistSpec extends AnyFunSuite {
   }
 
   test("ss_ivf_rebalance_mq: dust cells fold after the fat-cell split (synthetic skew)") {
-    // the round-16 Stress ivfskew mix at CI scale: 90% fat cell (must
+    // the round-16 fat-cell mix at CI scale: 90% fat cell (must
     // split), 8% healthy, 1.5% + 0.5% dust clusters — post-training
     // at least one of their cells sits below the merge floor
     val n = 3000L
@@ -197,7 +196,19 @@ class IvfPersistSpec extends AnyFunSuite {
     val admit = SparkEntry.queries("ss_ivf_admit")(spark, skewDir).collect()
     assert(admit.exists(_.getAs[Boolean]("rebalance")),
       "fixture failed to trip the occupancy alarm")
+    // one midpoint split answers the alarm with exactly two sub-cells
+    // and a smaller worst cell, but cannot quiet a 90% cell: the
+    // quiescence loop must split at least twice
+    val reb = SparkEntry.queries("ss_ivf_rebalance")(spark, skewDir).collect()
+    val preMax = admit.map(_.getAs[Long]("occ_ppm_of_mean")).max
+    val postMax = reb.map(_.getAs[Long]("occ_ppm_of_mean")).max
+    assert(reb.count(_.getAs[Boolean]("from_split")) == 2,
+      "one split must leave exactly two sub-cells")
+    assert(postMax < preMax,
+      s"split did not reduce worst-cell occupancy ($preMax -> $postMax)")
     val rebq = SparkEntry.queries("ss_ivf_rebalance_q")(spark, skewDir).collect()
+    assert(rebq.head.getAs[Long]("n_splits") >= 2L,
+      "a 90% cell needs at least two splits to quiet the alarm")
     val out = SparkEntry.queries("ss_ivf_rebalance_mq")(spark, skewDir).collect()
     // the designed fractions map through Lloyd training non-linearly
     // (measured: the 1.5% cluster's cell lands at ~148k ppm, the 0.5%

@@ -89,6 +89,33 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got.forall(_._2 == 0L), s"non-minimum labels: ${got.filter(_._2 != 0L).take(5).toSeq}")
   }
 
+  test("ARI unit-shift ladder: 2·(⌊log₂ n⌋ − 24) from 2²⁵ docs on, 0 below") {
+    // the rung SQL on literal doc counts, so the forcing counts (4·10⁷
+    // docs and up) need no corpus of that size
+    val ns = Seq(1L, (1L << 25) - 1, 1L << 25, (1L << 26) - 1, 1L << 26,
+      40000000L, 1L << 40, (1L << 41) - 1)
+    val got = ns.map(n => spark.range(1)
+      .select(expr(DedupClusters.ariUnitShiftSql(s"${n}L"))).head().getInt(0))
+    val expected = ns.map(n =>
+      math.max(0, 2 * ((63 - java.lang.Long.numberOfLeadingZeros(n)) - 24)))
+    assert(got == expected)
+  }
+
+  test("ARI: a forced unit shift agrees with the exact path within 5 ppm") {
+    // clusters of 10; every 100th doc defects to a singleton, so the
+    // ratio is non-trivial. n = 100,003 leaves every pair count with
+    // low-order bits set, so the shift really drops units
+    val n = 100003L
+    val joint = spark.range(0, n).select(col("id").as("doc_id"),
+      expr("id DIV 10").as("l1"),
+      expr("CASE WHEN id % 100 = 0 THEN id + 100000000 ELSE id DIV 10 END").as("l2"))
+    val nf = joint.agg(count(lit(1)).as("n_docs"))
+    val Seq(shifted, exact) = Seq("2", "0").map(sh =>
+      DedupClusters.ariFromJoint(joint, nf, shiftSqlOverride = Some(sh))
+        .head().getAs[Long]("ari_ppm"))
+    assert(math.abs(shifted - exact) <= 5, s"shifted $shifted vs exact $exact")
+  }
+
   test("starContraction: path, clique, two components, shuffled ids — exact minima") {
     // direct unit coverage of the adversarial-diameter body: a 64-node
     // path with ids reversed (so the component minimum sits at the far

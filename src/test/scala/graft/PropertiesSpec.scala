@@ -17,7 +17,7 @@ class PropertiesSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
   import spark.implicits._
 
-  private def check(prop: Prop, n: Int = 20): Unit = {
+  private def check(prop: Prop, n: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
     assert(res.passed, res.status.toString)
   }
@@ -123,7 +123,6 @@ class PropertiesSpec extends AnyFunSuite {
       val df = docs.zipWithIndex.map { case ((lang, n), i) => (i.toLong, lang, n) }
         .toDF("doc_id", "lang", "n_tokens")
       // the same shape the query uses: co-partition by lang, scan sorted
-      import org.apache.spark.sql.Dataset
       val packed = df.repartition(col("lang")).sortWithinPartitions("lang", "doc_id")
         .as[(Long, String, Long)]
         .mapPartitions { it =>

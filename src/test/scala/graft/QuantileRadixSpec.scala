@@ -55,7 +55,6 @@ class QuantileRadixSpec extends AnyFunSuite {
     // 300k identical rows: every histogram bucket stays oversized at a
     // tiny rank cap, so refinement must walk to shift 0 where the
     // prefix IS the value — no window ever sees the 300k rows.
-    import spark.implicits._
     val df = spark.range(300000).select(org.apache.spark.sql.functions.lit(42.625).as("v"))
     val got = QuantileQueries.kthValues(spark, df, "v",
       Seq("median" -> (n => (n + 1) / 2)))

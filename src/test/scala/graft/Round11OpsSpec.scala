@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators._
-
 /** Properties of the round-8 session-3 operators: attribution credit
   * conservation, the KS statistic against a brute-force ECDF scan,
   * and per-purchase credit-rule exactness.

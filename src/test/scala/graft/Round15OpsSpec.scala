@@ -227,7 +227,7 @@ class Round15OpsSpec extends AnyFunSuite {
   }
 
   test("ta_best_passage: the winner really is the max-scoring chunk of its doc") {
-    import org.apache.spark.sql.functions.{col, count, explode, expr, lit, posexplode, sum}
+    import org.apache.spark.sql.functions.{col, count, expr, lit, posexplode, sum}
     // recompute every chunk's score independently and check the
     // reported winner dominates (earliest chunk on ties)
     val toks = Tables.documents(spark, sf)

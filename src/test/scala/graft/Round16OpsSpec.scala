@@ -26,7 +26,6 @@ class Round16OpsSpec extends AnyFunSuite {
     }
     // the walk must never do WORSE than its entry point: recompute the
     // entry cosine per query and compare (greedy moves only improve)
-    import spark.implicits._
     val fin = rows.map(r => (r.getLong(0), r.getDouble(r.fieldIndex("cos4"))))
       .toMap
     val entries = SparkEntry.queries("ss_greedy_walk")(spark, sf)

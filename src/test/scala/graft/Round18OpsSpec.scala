@@ -439,7 +439,7 @@ class Round18OpsSpec extends AnyFunSuite {
     import graft.functions.RollingHash.cdc_chunks
     import operators.Dedup.{CdcMask, CdcWindow}
     // the r17 dd_cdc_chunks chunk chain (the cdcab A/B's reference arm)
-    def legacyChunks(d: org.apache.spark.sql.DataFrame) = Stress.legacyCdcChunkRows(d)
+    def legacyChunks(d: org.apache.spark.sql.DataFrame) = LegacyAb.legacyCdcChunkRows(d)
     def newChunks(d: org.apache.spark.sql.DataFrame) = d
       .filter(length(col("text")) >= 1)
       .select(col("doc_id"),

@@ -16,7 +16,6 @@ class Round9OpsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSpark.session
   val sf = "/root/testdata/sf0.001"
-  import spark.implicits._
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

@@ -162,7 +162,6 @@ class ScaleSpec extends AnyFunSuite {
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      import spark.implicits._
       val fact = spark.range(0, 60000)
         .select(when(col("id") % 10 =!= 0, lit(0L)).otherwise(col("id")).as("k"),
           concat(lit("payload_payload_payload_"), col("id")).as(("v")))
@@ -262,7 +261,6 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("binned range join plans as an equi-join, not a nested loop") {
-    import graft.operators.RangeJoin
     val df = SparkEntry.queries("ev_range_join")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("NestedLoop"), s"range join fell back to a loop:\n$plan")

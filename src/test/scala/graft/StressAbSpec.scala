@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The contract of [[Stress.ab]], the one A/B driver the Stress modes
-  * share: equality before timing, ABBA-BAAB legs, per-arm minimum.
+/** The contract of [[LegacyAb.ab]], the one A/B harness the LegacyAb
+  * modes share: equality before timing, ABBA-BAAB legs, per-arm
+  * minimum.
   */
 class StressAbSpec extends AnyFunSuite {
 
@@ -15,7 +16,7 @@ class StressAbSpec extends AnyFunSuite {
     def arm(n: Long): () => DataFrame = () => { built += 1; spark.range(n).toDF() }
     val buf = new java.io.ByteArrayOutputStream()
     val e = intercept[IllegalArgumentException] {
-      Console.withOut(buf)(Stress.ab("t", "", Seq("a" -> arm(3), "b" -> arm(4)), Stress.rowsDiffer))
+      Console.withOut(buf)(LegacyAb.ab("t", "", Seq("a" -> arm(3), "b" -> arm(4)), LegacyAb.rowsDiffer))
     }
     assert(e.getMessage.contains("differ in 1 rows"))
     assert(built == 2, "each arm is built once, for the equality check only")
@@ -24,9 +25,9 @@ class StressAbSpec extends AnyFunSuite {
 
   test("legs run ABBA-BAAB and the summary reports each arm's minimum") {
     val buf = new java.io.ByteArrayOutputStream()
-    val legs = Console.withOut(buf)(Stress.ab("t", "k=1", Seq(
+    val legs = Console.withOut(buf)(LegacyAb.ab("t", "k=1", Seq(
       "old" -> (() => spark.range(5).toDF()),
-      "new" -> (() => spark.range(0, 5).toDF())), Stress.rowsDiffer))
+      "new" -> (() => spark.range(0, 5).toDF())), LegacyAb.rowsDiffer))
     val lines = buf.toString("UTF-8").linesIterator.toSeq
     assert(legs.map(_._1) == Seq("old", "new", "new", "old", "new", "old", "old", "new"))
     assert(legs.forall(_._2 == 5L))

@@ -67,7 +67,6 @@ class SuffixCleanSpec extends AnyFunSuite {
       "doc 2's stitched text is not prefix+suffix with the span removed")
   }
   test("st_suffix_admit: streamed spans equal the order-free batch dual (sf0.001)") {
-    import spark.implicits._
     val dir = "/root/testdata/sf0.001"
     val l = Dedup.SuffixSpanL
     // the row's own requires prove crash-replay exactly-once; here:

@@ -9,7 +9,7 @@ import graft.operators.Dedup
 /** Round-18 suffix rewrite equivalence pins: the window-min /
   * fp128-keyed / join-free suffixSpansOf and the fp128-winner /
   * interval-union / array-join suffixCleanOf must be ROW-IDENTICAL to
-  * the round-17 shapes (kept verbatim in [[Stress]] as the A/B
+  * the round-17 shapes (kept verbatim in [[LegacyAb]] as the A/B
   * harness's reference arms) — on the real corpus AND on a crafted
   * fixture hitting every edge the rewrite touched:
   *
@@ -67,7 +67,7 @@ class SuffixImplSpec extends AnyFunSuite {
   test("suffixSpansOf == r17 reference on the edge fixture (L=32)") {
     rowSetEqual(
       Dedup.suffixSpansOf(fixture, 32),
-      Stress.legacySuffixSpansOf(fixture, 32))
+      LegacyAb.legacySuffixSpansOf(fixture, 32))
   }
 
   test("suffixSpansOf == r17 reference at L=8 (multi-round loop)") {
@@ -75,23 +75,23 @@ class SuffixImplSpec extends AnyFunSuite {
     // body (not just the fused last round) must agree too
     rowSetEqual(
       Dedup.suffixSpansOf(fixture, 8),
-      Stress.legacySuffixSpansOf(fixture, 8))
+      LegacyAb.legacySuffixSpansOf(fixture, 8))
   }
 
   test("suffixCleanOf == r17 reference on the edge fixture (L=32)") {
     rowSetEqual(
       Dedup.suffixCleanOf(fixture, 32),
-      Stress.legacySuffixCleanOf(fixture, 32))
+      LegacyAb.legacySuffixCleanOf(fixture, 32))
   }
 
   test("suffixSpansOf and suffixCleanOf == r17 reference on sf0.001") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     rowSetEqual(
       Dedup.suffixSpansOf(docs, Dedup.SuffixSpanL),
-      Stress.legacySuffixSpansOf(docs, Dedup.SuffixSpanL))
+      LegacyAb.legacySuffixSpansOf(docs, Dedup.SuffixSpanL))
     rowSetEqual(
       Dedup.suffixCleanOf(docs, Dedup.SuffixSpanL),
-      Stress.legacySuffixCleanOf(docs, Dedup.SuffixSpanL))
+      LegacyAb.legacySuffixCleanOf(docs, Dedup.SuffixSpanL))
   }
 
   test("fixture conservation law + the fully-cut doc") {
@@ -115,5 +115,20 @@ class SuffixImplSpec extends AnyFunSuite {
       "sub-L docs can never hold a span")
     assert(spans.filter(col("doc_id").isin(9L, 10L)).count() > 0,
       "the cross-doc hot-gram run must span")
+  }
+
+  test("suffixSpansOf: one island per doc when every doc shares one boilerplate span") {
+    // the hot class of the class-pair join: g docs, each md5-pad ‖ the
+    // same 32-char run ‖ md5-pad. Boundary windows merge with the
+    // boilerplate island and the pads are unique, so each doc holds
+    // exactly one span
+    val g = 200L
+    val boiler = "THE SAME 32-CHAR BOILERPLATE RUN"
+    assert(boiler.length == 32)
+    val docs = spark.range(0, g).select(
+      col("id").as("doc_id"),
+      concat(md5(col("id").cast("string")), lit(boiler),
+        md5(concat(col("id").cast("string"), lit("x")))).as("text"))
+    assert(Dedup.suffixSpansOf(docs, 32).count() == g)
   }
 }
