@@ -45,17 +45,27 @@ object Md5Longs {
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** Shared by the interpreted path and generated code. */
-  def hash(s: UTF8String): GenericArrayData = {
+  /** The 16-byte md5 digest of `s` — the one digest behind both
+    * md5 expressions ([[Md5PrefixLong]] reads its first word).
+    */
+  def digest(s: UTF8String): Array[Byte] = {
     val md = digests.get()
     md.reset()
-    val d = md.digest(s.getBytes)
-    var hi = 0L
-    var lo = 0L
-    var i = 0
-    while (i < 8) { hi = (hi << 8) | (d(i) & 0xffL); i += 1 }
-    while (i < 16) { lo = (lo << 8) | (d(i) & 0xffL); i += 1 }
-    new GenericArrayData(Array(hi, lo))
+    md.digest(s.getBytes)
+  }
+
+  /** Bytes `from until from + 8` of `d` as a big-endian long. */
+  def word(d: Array[Byte], from: Int): Long = {
+    var h = 0L
+    var i = from
+    while (i < from + 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
+    h
+  }
+
+  /** Shared by the interpreted path and generated code. */
+  def hash(s: UTF8String): GenericArrayData = {
+    val d = digest(s)
+    new GenericArrayData(Array(word(d, 0), word(d, 8)))
   }
 
   /** Column API (classic-session Expression↔Column bridge). */

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -39,20 +37,10 @@ case class Md5PrefixLong(child: Expression) extends UnaryExpression {
 
 object Md5PrefixLong {
 
-  // MessageDigest is not thread-safe; one instance per executor thread.
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** Shared by the interpreted path and generated code. */
-  def hash(s: UTF8String): Long = {
-    val md = digests.get()
-    md.reset()
-    val d = md.digest(s.getBytes)
-    var h = 0L
-    var i = 0
-    while (i < 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
-    h
-  }
+  /** Shared by the interpreted path and generated code; it builds no
+    * 2-long array as [[Md5Longs.hash]] does (the SimHash hot path).
+    */
+  def hash(s: UTF8String): Long = Md5Longs.word(Md5Longs.digest(s), 0)
 
   /** Column API (classic-session Expression↔Column bridge). */
   def md5_prefix_long(c: Column): Column = {

@@ -17,7 +17,7 @@ import graft.Tables
   * fixpoint, which is exactly the component minimum. Each iteration is
   * one shuffle-join + one aggregation on the (tiny relative to the
   * corpus) edge set; the edge set is persisted once, and label lineage
-  * is cut per iteration with `localCheckpoint` so the plan doesn't grow
+  * is cut per iteration by [[Rounds]] so the plan doesn't grow
   * exponentially. Near-dup clusters are dense (quasi-cliques), so the
   * effective diameter — and the iteration count — is small; a graph
   * still unconverged after [[StarSwitchRound]] gather rounds has real
@@ -56,22 +56,20 @@ object DedupClusters {
     *
     * Both preserve connectivity; the fixpoint is the star forest whose
     * roots are component minima, reached in O(log² n) rounds even on a
-    * pure path — vs O(diameter) for plain propagation. Per round the
-    * edge set is localCheckpoint'ed (lineage cut, dd_pagerank-style)
-    * and convergence is the exact set test |next| = |e| ∧ next\e = ∅.
+    * pure path — vs O(diameter) for plain propagation. Rounds are cut
+    * by [[Rounds]]; convergence is the exact set test next = e, one
+    * aggregation per round ([[starStable]]), and a graph still
+    * unconverged after `maxIters` rounds fails loudly.
     * At 100 TB every pass is edge-partitioned — no node ever holds
     * more than its neighborhood, no driver state beyond the round
     * counter.
     */
   private[graft] def starContraction(edges: DataFrame, maxIters: Int = 25): DataFrame = {
     // canonical larger→smaller orientation, one row per undirected edge
-    var e = edges.filter(col("src") > col("dst"))
+    val e0 = edges.filter(col("src") > col("dst"))
       .select(col("src").as("hi"), col("dst").as("lo"))
       .distinct().localCheckpoint(false)
-    var eCount = e.count()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
+    val (e, _) = Rounds.untilStable(maxIters, e0)((e, _) => {
       val b = e.select(col("hi").as("u"), col("lo").as("v"))
         .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
       val lmins = b.groupBy("u").agg(least(col("u"), min(col("v"))).as("m"))
@@ -80,24 +78,13 @@ object DedupClusters {
         .select(col("v").as("hi"), col("m").as("lo"))
         .distinct()
       val smins = large.groupBy("hi").agg(min(col("lo")).as("m"))
-      val small = large.join(smins, "hi")
+      large.join(smins, "hi")
         .select(col("lo").as("v"), col("m"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("hi"), col("m").as("lo"))
         .unionAll(smins.select(col("hi"), col("m").as("lo")))
         .distinct()
-      val next = small.localCheckpoint(false)
-      val nextCount = next.count()
-      converged = nextCount == eCount &&
-        next.exceptAll(e).limit(1).count() == 0
-      e = next
-      eCount = nextCount
-      iter += 1
-    }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-stars] converged after $iter rounds")
-    if (!converged) throw new IllegalStateException(
-      s"starContraction did not converge within $maxIters rounds")
+    }, starStable)
     // star forest → labels: non-roots point at their root (defensive
     // groupBy-min in case of a duplicate hi row), roots label themselves
     val star = e.groupBy(col("hi")).agg(min(col("lo")).as("lo"))
@@ -106,89 +93,78 @@ object DedupClusters {
       .select(col("id"), coalesce(col("lo"), col("id")).as("label"))
   }
 
+  /** The star rounds' fixpoint test: two distinct (hi, lo) edge sets
+    * are equal iff every edge of their union is in both, i.e. its side
+    * tags sum to 1 + 2 — one aggregation, one action.
+    */
+  private[graft] def starStable(e: DataFrame, next: DataFrame): Boolean =
+    next.select(col("hi"), col("lo"), lit(1).as("side"))
+      .unionAll(e.select(col("hi"), col("lo"), lit(2).as("side")))
+      .groupBy("hi", "lo").agg(sum(col("side")).as("sides"))
+      .agg(count(when(col("sides") =!= 3, lit(1))))
+      .head().getLong(0) == 0L
+
   /** (id, label) per node of `pairs` (cols doc_a < doc_b); label = min
     * doc_id reachable in the component.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    // Both edge directions in ONE pass over `pairs` (a union of two
-    // selects would execute the upstream pair pipeline twice), then
-    // persist: the edge set is re-joined every iteration.
-    val edges = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    // persisted: the edge set is re-joined every round
+    val edges = GraphQueries.undirected(pairs)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels: DataFrame = null
-    var iter = 0
-    var converged = false
-    while (!converged && iter < math.min(StarSwitchRound, maxIters)) {
-      // Round 1 needs no node table and no join: every node appears as
-      // `src` (edges are bidirectional), so label₁(v) = min(v, min
-      // neighbor id) is ONE aggregation over the edge set — it also
-      // subsumes the identity-label initialization (saving the
-      // init-distinct job the loop used to pay up front). Later rounds
-      // gather lbl(v) ← min(label(v), label(u) for u ∈ N(v)) as a
-      // single union+min aggregation: incoming rows cover every
-      // neighbor, and the node's own row both joins the min and
-      // carries the previous label out for the convergence check — no
-      // separate left join. Dense near-dup clusters converge in two
-      // rounds (propagate + confirm, the minimum — measured via
-      // GRAFT_CC_DEBUG); a graph still unconverged at StarSwitchRound
-      // has real chains and falls through to starContraction below.
-      val gathered =
-        if (iter == 0)
-          edges.groupBy(col("src"))
-            .agg(min(col("dst")).as("nmin"))
-            .select(col("src").as("id"),
-              least(col("src"), col("nmin")).as("label"),
-              col("src").as("old"))
-        else
-          edges.join(labels, edges("dst") === labels("id"))
-            .select(col("src").as("id"), col("label").as("cand"))
-            .withColumn("own", lit(false))
-            .unionByName(labels.select(col("id"), col("label").as("cand"))
-              .withColumn("own", lit(true)))
-            .groupBy("id")
-            .agg(min(col("cand")).as("label"),
-              max(when(col("own"), col("cand"))).as("old"))
-      // Pointer jumping (label(v) ← label(label(v)), a self-join on
-      // the node-sized label table) doubles effective reach in the
-      // rounds before the star swap — it lets moderately-chained
-      // graphs still finish inside the propagation phase.
-      val jumped =
-        if (iter < 2) gathered
+    // Round 1 needs no node table and no join: every node appears as
+    // `src` (edges are bidirectional), so label₁(v) = min(v, min
+    // neighbor id) is ONE aggregation over the edge set — it also
+    // subsumes the identity-label initialization. It always changes
+    // the labels of a nonempty edge set (each pair's larger endpoint
+    // drops to the smaller), so it runs outside the loop with no
+    // convergence test; round 2's action materializes its checkpoint
+    // as part of its lineage.
+    val first = edges.groupBy(col("src"))
+      .agg(min(col("dst")).as("nmin"))
+      .select(col("src").as("id"),
+        least(col("src"), col("nmin")).as("label"),
+        col("src").as("old"))
+      .localCheckpoint(false)
+    // Later rounds gather lbl(v) ← min(label(v), label(u) for u ∈
+    // N(v)) as a single union+min aggregation: incoming rows cover
+    // every neighbor, and the node's own row both joins the min and
+    // carries the previous label out for the convergence test — no
+    // separate left join. Dense near-dup clusters converge in two
+    // rounds (propagate + confirm, the minimum); a graph still
+    // unconverged at StarSwitchRound has real chains and falls
+    // through to starContraction below.
+    val (labels, _, converged) =
+      Rounds.atMost(math.min(StarSwitchRound, maxIters) - 1, first)((prev, r) => {
+        val labels = prev.select("id", "label")
+        val gathered = edges.join(labels, edges("dst") === labels("id"))
+          .select(col("src").as("id"), col("label").as("cand"))
+          .withColumn("own", lit(false))
+          .unionByName(labels.select(col("id"), col("label").as("cand"))
+            .withColumn("own", lit(true)))
+          .groupBy("id")
+          .agg(min(col("cand")).as("label"),
+            max(when(col("own"), col("cand"))).as("old"))
+        // Pointer jumping (label(v) ← label(label(v)), a self-join on
+        // the node-sized label table) doubles effective reach from
+        // round 3 on — it lets moderately-chained graphs still finish
+        // inside the propagation phase.
+        if (r < 2) gathered
         else gathered.as("x")
           .join(gathered.as("y"), col("x.label") === col("y.id"), "left")
           .select(col("x.id").as("id"),
             coalesce(col("y.label"), col("x.label")).as("label"),
             col("x.old").as("old"))
-      // the lazy localCheckpoint caches `next` as a side effect of
-      // count() (count computes every partition, unlike isEmpty), so
-      // each round costs exactly one job
-      val next = jumped.localCheckpoint(false)
-      // Round 1 of a nonempty edge set ALWAYS changes labels (each
-      // pair's larger endpoint drops to the smaller), so its
-      // convergence job is skipped — round 2's action materializes the
-      // round-1 checkpoint as part of its lineage (block-level compute
-      // locks keep the doubly-referenced label table computed once).
-      if (iter > 0)
-        converged = next.filter(col("label") =!= col("old")).count() == 0
-      labels = next.select("id", "label")
-      iter += 1
-    }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] gather phase: $iter rounds, converged=$converged")
+      }, (_, next) => next.filter(col("label") =!= col("old")).count() == 0)
     // Adversarial-diameter fallback: the propagation loop didn't
     // converge, so the graph has long chains — run the O(log²)-round
     // star contraction on the same persisted edge set. It fails
     // loudly itself if ITS round budget is exceeded (an unconverged
     // result would be silently wrong — labels not yet component
     // minima).
-    if (!converged)
-      try labels = starContraction(edges, maxIters)
-      finally edges.unpersist()
-    else edges.unpersist()
-    labels
+    try
+      if (converged) labels.select("id", "label")
+      else starContraction(edges, maxIters)
+    finally edges.unpersist()
   }
 
   /** DBSCAN ε (cosine floor — looser than dd_embed_cos's 0.3
@@ -509,7 +485,7 @@ object DedupClusters {
     // ties broken by smallest label — the per-node argmax is the
     // two-HashAggregate trick (max count, then min label over the
     // tied rows), never a per-node sort. Per round: one join + two
-    // aggregations, labels localCheckpoint'ed — the dd_pagerank loop
+    // aggregations, rounds cut by [[Rounds]] — the dd_pagerank loop
     // shape. Each node also votes its OWN label once (a single
     // self-loop): without it, synchronous LPA on an isolated pair
     // swaps labels every round and an even round count undoes all
@@ -589,7 +565,7 @@ object DedupClusters {
     // q_num are directly comparable per community. Headroom: every
     // product ≤ 2m·deg ≤ 4m² — BIGINT to m ~ 1.5e9 pairs,
     // dd_modularity's bound. Per round: two joins + four aggregations
-    // over the symmetric edge list, labels checkpointed (the
+    // over the symmetric edge list, rounds cut by [[Rounds]] (the
     // dd_pagerank loop shape) — shuffles are edge-count-keyed, never
     // all-pairs.
     "dd_louvain" -> ((s, dir) => {
@@ -600,10 +576,7 @@ object DedupClusters {
       val pairs = Dedup.verifiedPairs(s, dir, dedup = true)
         .select("doc_a", "doc_b")
       val m = pairs.count()
-      val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs
-          .select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .localCheckpoint(false)
+      val sym = GraphQueries.undirected(pairs).localCheckpoint(false)
       val deg = sym.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("deg"))
       def step(comm: DataFrame): DataFrame = {
@@ -635,9 +608,9 @@ object DedupClusters {
             when(col("tsz") === 1 && col("osz") === 1 &&
               col("c") > col("comm"), col("comm"))
               .otherwise(col("c")).as("comm"))
-          .localCheckpoint(true)
       }
-      val comm2 = step(step(deg.select(col("id"), col("id").as("comm"))))
+      val comm2 = Rounds.fixed(2, deg.select(col("id"), col("id").as("comm")))(
+        (comm, _) => step(comm))
       val withL = pairs
         .join(comm2.select(col("id").as("doc_a"), col("comm").as("la")),
           "doc_a")
@@ -715,25 +688,19 @@ object DedupClusters {
     * query, structurally.
     */
   private def lpaLabels(pairs: DataFrame): DataFrame = {
-    val sym = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val sym = GraphQueries.undirected(pairs)
     val edges = sym.unionAll(
         sym.select(col("src")).distinct().select(col("src"), col("src").as("dst")))
       .localCheckpoint(false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-    for (_ <- 1 to LpaRounds) {
+    Rounds.fixed(LpaRounds, edges.select(col("src").as("id")).distinct()
+        .withColumn("lbl", col("id"))) { (labels, _) =>
       val cnt = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
       val best = cnt.groupBy("src").agg(max(col("c")).as("c"))
-      labels = cnt.join(best, Seq("src", "c"))
+      cnt.join(best, Seq("src", "c"))
         .groupBy("src", "c").agg(min(col("lbl")).as("lbl"))
         .select(col("src").as("id"), col("lbl"))
-        .localCheckpoint(true) // eager: cut lineage per round
     }
-    labels
   }
 
   /** The dd_label_prop oracle's CTE chain through l[[LpaRounds]] —

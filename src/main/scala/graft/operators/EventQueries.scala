@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -151,16 +151,54 @@ object EventQueries {
     val p = transitionMicro(s, dir).select("cur", "nxt", "pm")
     val states = p.select(col("cur").as("state")).distinct()
     val nStates = states.count()
-    var pi = states.select(col("state"),
-      lit(1000000L / nStates).as("pim"))
-    (1 to MarkovPowerRounds).foreach { _ =>
-      pi = pi.join(p, pi("state") === p("cur"))
+    Rounds.fixed(MarkovPowerRounds, states.select(col("state"),
+        lit(1000000L / nStates).as("pim"))) { (pi, _) =>
+      pi.join(p, pi("state") === p("cur"))
         .groupBy(col("nxt").as("s2"))
         .agg(expr("sum(pim * pm) DIV 1000000").as("pim"))
         .select(col("s2").as("state"), col("pim"))
-        .localCheckpoint(false)
     }
-    pi
+  }
+
+  /** The first-passage absorption recurrence into 'purchase', one
+    * chain per removal variant `rem`: `pv` is (rem, cur, nxt, pm), `sv`
+    * is (rem, state). Each round,
+    * am'(s) = Σ_{s→t} pm·am(t) DIV 10⁶, with the absorber clamped to
+    * 10⁶ and sink states at 0 — one join + one aggregation keyed by
+    * (rem, state). Returns (rem, state, am) after
+    * [[MarkovPowerRounds]] rounds.
+    */
+  private def absorption(pv: DataFrame, sv: DataFrame): DataFrame = {
+    def clamped(step: Column) =
+      when(col("state") === "purchase", lit(1000000L)).otherwise(step).as("am")
+    Rounds.fixed(MarkovPowerRounds,
+        sv.select(col("rem"), col("state"), clamped(lit(0L)))) { (ab, _) =>
+      val stepped = pv
+        .join(ab.select(col("rem"), col("state").as("nxt"), col("am")),
+          Seq("rem", "nxt"))
+        .groupBy(col("rem"), col("cur").as("state"))
+        .agg(expr("sum(pm * am) DIV 1000000").as("step"))
+      sv.join(stepped, Seq("rem", "state"), "left")
+        .select(col("rem"), col("state"), clamped(coalesce(col("step"), lit(0L))))
+    }
+  }
+
+  /** Every state of a transition frame (cur, nxt, pm), checkpointed:
+    * each absorption round joins it.
+    */
+  private def markovStates(p: DataFrame): DataFrame =
+    p.select(col("cur").as("state"))
+      .unionAll(p.select(col("nxt").as("state"))).distinct()
+      .localCheckpoint(false)
+
+  /** ev_absorption over a transition frame (cur, nxt, pm): the 'none'
+    * (no removal) chain of [[absorption]]. Returns (state, absorb_micro).
+    */
+  private[graft] def absorptionOf(p: DataFrame): DataFrame = {
+    val none = lit("none").as("rem")
+    absorption(p.select(none, col("cur"), col("nxt"), col("pm")),
+        markovStates(p).select(none, col("state")))
+      .select(col("state"), col("am").as("absorb_micro"))
   }
 
   /** DuckDB mirror of [[transitionMicro]]: CTEs seq/tr/p, where `p`
@@ -923,29 +961,9 @@ object EventQueries {
     // micro-integer fixed-round loop and types²-broadcast frame as
     // ev_markov_stationary; sink states other than the absorber stay
     // at 0. Oracle unrolls the identical rounds.
-    "ev_absorption" -> ((s, dir) => {
-      val p = transitionMicro(s, dir).select("cur", "nxt", "pm")
-      val states = p.select(col("cur").as("state"))
-        .unionAll(p.select(col("nxt").as("state"))).distinct()
-        .localCheckpoint(false)
-      var ab = states.select(col("state"),
-        when(col("state") === "purchase", lit(1000000L))
-          .otherwise(lit(0L)).as("am"))
-      (1 to MarkovPowerRounds).foreach { _ =>
-        val stepped = p
-          .join(ab.select(col("state").as("nxt"), col("am")), "nxt")
-          .groupBy(col("cur").as("state"))
-          .agg(expr("sum(pm * am) DIV 1000000").as("step"))
-        ab = states
-          .join(stepped, Seq("state"), "left")
-          .select(col("state"),
-            when(col("state") === "purchase", lit(1000000L))
-              .otherwise(coalesce(col("step"), lit(0L))).as("am"))
-          .localCheckpoint(false)
-      }
-      ab.select(col("state"), col("am").as("absorb_micro"))
-        .orderBy("state")
-    }),
+    "ev_absorption" -> ((s, dir) =>
+      absorptionOf(transitionMicro(s, dir).select("cur", "nxt", "pm"))
+        .orderBy("state")),
 
     // MARKOV REMOVAL-EFFECT ATTRIBUTION (Anderl et al. 2016) — the
     // principled multi-touch attribution model: channel c's credit is
@@ -966,35 +984,18 @@ object EventQueries {
     // the per-round floor is monotone, so effect ≥ 0 exactly.
     "ev_attribution_removal" -> ((s, dir) => {
       val p = transitionMicro(s, dir).select("cur", "nxt", "pm")
-      val states = p.select(col("cur").as("state"))
-        .unionAll(p.select(col("nxt").as("state"))).distinct()
-        .localCheckpoint(false)
+      val states = markovStates(p)
       val variants = states.filter(col("state") =!= "purchase")
         .select(col("state").as("rem"))
         .unionAll(states.sparkSession.range(1).select(lit("none").as("rem")))
         .localCheckpoint(false)
-      val pv = p.crossJoin(broadcast(variants))
-        .filter(col("cur") =!= col("rem") && col("nxt") =!= col("rem"))
-        .localCheckpoint(false)
-      val sv = states.crossJoin(broadcast(variants))
-        .filter(col("state") =!= col("rem"))
-        .localCheckpoint(false)
-      var ab = sv.select(col("rem"), col("state"),
-        when(col("state") === "purchase", lit(1000000L))
-          .otherwise(lit(0L)).as("am"))
-      (1 to MarkovPowerRounds).foreach { _ =>
-        val stepped = pv
-          .join(ab.select(col("rem"), col("state").as("nxt"), col("am")),
-            Seq("rem", "nxt"))
-          .groupBy(col("rem"), col("cur").as("state"))
-          .agg(expr("sum(pm * am) DIV 1000000").as("step"))
-        ab = sv
-          .join(stepped, Seq("rem", "state"), "left")
-          .select(col("rem"), col("state"),
-            when(col("state") === "purchase", lit(1000000L))
-              .otherwise(coalesce(col("step"), lit(0L))).as("am"))
-          .localCheckpoint(false)
-      }
+      val ab = absorption(
+        p.crossJoin(broadcast(variants))
+          .filter(col("cur") =!= col("rem") && col("nxt") =!= col("rem"))
+          .localCheckpoint(false),
+        states.crossJoin(broadcast(variants))
+          .filter(col("state") =!= col("rem"))
+          .localCheckpoint(false))
       val wU = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val first = Tables.events(s, dir)

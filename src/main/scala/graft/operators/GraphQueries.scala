@@ -24,27 +24,77 @@ object GraphQueries {
   val DampMicro = 850000 // d = 0.85 in micro-units
   val JumpMicro = 150000 // (1 - d)
 
-  /** PageRank over an undirected edge list: each round,
-    * pr'(v) = (1-d)/N + d · Σ_{u∈N(v)} pr(u)/deg(u), all in integer
-    * micro-units with truncating division. Edges are materialized once
-    * (`localCheckpoint`) — the verify pipeline upstream must not re-run
-    * per round; each round is one join + one aggregation keyed by the
-    * destination, the same shape GraphX/Pregel lowers to.
+  /** The undirected edge list of a (doc_a, doc_b) pair list: both
+    * directions as (src, dst), built in ONE pass over `pairs` (a union
+    * of two selects would run the upstream pair pipeline twice).
+    */
+  def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** The one micro-integer PageRank round loop, shared by the
+    * undirected, personalized and directed variants. `nodes` is
+    * (id, deg, tele, pr): out-degree, teleport micro-mass and initial
+    * rank. Each round,
+    * pr'(v) = tele(v) + d · (Σ_{u→v} pr(u) DIV deg(u) + D DIV N) DIV 10⁶,
+    * one join + one aggregation keyed by the destination (the shape
+    * GraphX/Pregel lowers to), rounds cut by [[Rounds]].
     *
-    * Iteration discipline (same as the CC loop in
-    * [[DedupClusters]]): the rank frame is `localCheckpoint`ed every
-    * round, so lineage stays one-round deep no matter how large
-    * `iters` is. With `tolMicro >= 0` the loop also stops early once
-    * max |Δpr| over all nodes is ≤ tolMicro — integer arithmetic makes
-    * this an exact, deterministic fixpoint test, not a float
-    * tolerance. It is OFF by default because early stopping makes the
-    * result depend on the convergence path, and the oracle pins the
-    * exact `iters`-round value.
-    *
-    * Note the no-dangling-nodes argument (every node has deg ≥ 1, so
-    * the left join never fabricates mass) holds for THIS undirected
-    * construction only; a directed edge list would need an explicit
-    * dangling-mass redistribution term.
+    * D is the dangling mass, Σ pr over out-degree-0 nodes, one 1-row
+    * aggregate broadcast per round; only a directed edge list has
+    * such nodes, so `dangling = false` drops the term and its
+    * aggregate (it would add 0). With `tolMicro >= 0` the loop stops
+    * early once max |Δpr| ≤ tolMicro — integer arithmetic makes this
+    * an exact fixpoint test — and otherwise runs all `iters` rounds.
+    * Returns (id, pr) and the rounds run.
+    */
+  private def pageRankRounds(edges: DataFrame, nodes: DataFrame, iters: Int,
+      dangling: Boolean, tolMicro: Long = -1L): (DataFrame, Int) = {
+    def step(pr: DataFrame, r: Int): DataFrame = {
+      val contrib = edges.join(pr, edges("src") === pr("id"))
+        .select(edges("dst").as("id"), expr("pr DIV deg").as("c"))
+        .groupBy("id").agg(sum(col("c")).as("cs"))
+      val next = pr.select(col("id"), col("deg"), col("tele"),
+          col("pr").as("pr_prev"))
+        .join(contrib, Seq("id"), "left")
+      val (withMass, mass) =
+        if (!dangling) (next, "coalesce(cs, 0)")
+        else (next.crossJoin(broadcast(pr.agg(
+            coalesce(sum(when(col("deg") === 0, col("pr"))), lit(0L)).as("dmass"),
+            count(lit(1)).as("n_nodes")))),
+          "coalesce(cs, 0) + dmass DIV n_nodes")
+      withMass.select(col("id"), col("deg"), col("tele"), col("pr_prev"),
+        (col("tele") + expr(s"($DampMicro * ($mass)) DIV 1000000")).as("pr"))
+    }
+    val (pr, rounds, _) =
+      if (tolMicro < 0L) (Rounds.fixed(iters, nodes)(step), iters, false)
+      else Rounds.atMost(iters, nodes)(step, (_, next) =>
+        next.agg(coalesce(max(abs(col("pr") - col("pr_prev"))), lit(0L)))
+          .head().getLong(0) <= tolMicro)
+    (pr.select(col("id"), col("pr")), rounds)
+  }
+
+  /** (id, deg) of an undirected edge list: every node has deg ≥ 1,
+    * so the dangling term is 0 for both undirected variants.
+    */
+  private def undirectedDeg(edges: DataFrame): DataFrame =
+    edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      .select(col("src").as("id"), col("deg"))
+
+  /** The node frame of uniform PageRank over (id, deg): teleport
+    * (1-d)/N and initial rank 1/N, in micro-units.
+    */
+  private def uniform(deg: DataFrame): DataFrame =
+    deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
+      .select(col("id"), col("deg"), expr(s"$JumpMicro DIV n_nodes").as("tele"),
+        expr("1000000 DIV n_nodes").as("pr"))
+
+  /** PageRank over an undirected edge list ([[pageRankRounds]] with the
+    * uniform teleport (1-d)/N). The fixed `iters` is the oracle's
+    * contract; the `tolMicro` early stop is off by default because it
+    * makes the result depend on the convergence path.
     */
   def pageRankMicro(pairs: DataFrame, iters: Int = Iters,
                     tolMicro: Long = -1L): DataFrame =
@@ -57,123 +107,43 @@ object GraphQueries {
     */
   def pageRankMicroRounds(pairs: DataFrame, iters: Int = Iters,
                           tolMicro: Long = -1L): (DataFrame, Int) = {
-    val edges = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("id"), col("deg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    var pr = deg.crossJoin(broadcast(n))
-      .select(col("id"), col("deg"), col("n_nodes"),
-        expr("1000000 DIV n_nodes").as("pr"))
-      .localCheckpoint(true)
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      val contrib = edges.join(pr, edges("src") === pr("id"))
-        .select(edges("dst").as("id"), expr("pr DIV deg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("cs"))
-      val next = pr.select(col("id"), col("deg"), col("n_nodes"),
-          col("pr").as("pr_prev"))
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"), col("deg"), col("n_nodes"), col("pr_prev"),
-          (expr(s"$JumpMicro DIV n_nodes") +
-            expr(s"($DampMicro * coalesce(cs, 0)) DIV 1000000")).as("pr"))
-        .localCheckpoint(true) // eager: lineage is cut before the next round
-      if (tolMicro >= 0L) {
-        val delta = next
-          .agg(coalesce(max(abs(col("pr") - col("pr_prev"))), lit(0L)).as("d"))
-          .head().getLong(0)
-        converged = delta <= tolMicro
-      }
-      pr = next.select("id", "deg", "n_nodes", "pr")
-      round += 1
-    }
-    (pr.select(col("id"), col("pr")), round)
+    val edges = undirected(pairs).localCheckpoint(false)
+    pageRankRounds(edges, uniform(undirectedDeg(edges)), iters,
+      dangling = false, tolMicro)
   }
 
-  /** PERSONALIZED PageRank: identical micro-integer loop, but the
-    * teleport mass returns to the SEED node alone instead of
-    * spreading uniformly — rank becomes proximity TO THE SEED through
-    * the graph ("related documents", the retrieval-side PPR use).
-    * Seed = the smallest node id (deterministic probe); rank of nodes
-    * the seed can't reach within `iters` hops stays 0.
+  /** PERSONALIZED PageRank: the same rounds, but the teleport mass
+    * returns to the SEED node alone instead of spreading uniformly —
+    * rank becomes proximity TO THE SEED through the graph ("related
+    * documents", the retrieval-side PPR use). Seed = the smallest node
+    * id (deterministic probe); rank of nodes the seed can't reach
+    * within `iters` hops stays 0.
     */
   def pprMicro(pairs: DataFrame, iters: Int = Iters): DataFrame = {
-    val edges = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("id"), col("deg"))
-    val seed = deg.agg(min(col("id")).as("seed_id"))
-    var pr = deg.crossJoin(broadcast(seed))
-      .select(col("id"), col("deg"), col("seed_id"),
-        when(col("id") === col("seed_id"), lit(1000000L))
-          .otherwise(lit(0L)).as("pr"))
-      .localCheckpoint(true)
-    (1 to iters).foreach { _ =>
-      val contrib = edges.join(pr, edges("src") === pr("id"))
-        .select(edges("dst").as("id"), expr("pr DIV deg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("cs"))
-      pr = pr.select(col("id"), col("deg"), col("seed_id"))
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"), col("deg"), col("seed_id"),
-          (when(col("id") === col("seed_id"), lit(JumpMicro))
-            .otherwise(lit(0L)) +
-            expr(s"($DampMicro * coalesce(cs, 0)) DIV 1000000")).as("pr"))
-        .localCheckpoint(true)
-    }
-    pr.select(col("id"), col("pr"))
+    val edges = undirected(pairs).localCheckpoint(false)
+    val deg = undirectedDeg(edges)
+    def atSeed(micro: Long) =
+      when(col("id") === col("seed_id"), lit(micro)).otherwise(lit(0L))
+    pageRankRounds(edges, deg.crossJoin(broadcast(deg.agg(min(col("id")).as("seed_id"))))
+        .select(col("id"), col("deg"), atSeed(JumpMicro).as("tele"),
+          atSeed(1000000L).as("pr")),
+      iters, dangling = false)._1
   }
 
-  /** Directed PageRank with DANGLING-MASS redistribution — the term
-    * the undirected variant can legitimately skip (every node there
-    * has deg ≥ 1). On a directed edge list, out-degree-0 nodes absorb
-    * rank and leak total mass unless their rank is redistributed:
-    * each round, D = Σ pr over dangling nodes (one 1-row aggregate,
-    * broadcast) and every node receives d·(contrib + D/N) + (1-d)/N.
-    * All arithmetic stays in integer micro-units with truncating
-    * division — same engine-exactness discipline as [[pageRankMicro]].
-    *
-    * Per-round cost over the undirected form: one extra scalar
-    * aggregate + broadcast — nothing keyed, so the 100 TB shape is
-    * unchanged (edges checkpoint once, one join + one aggregation per
-    * round, lineage cut every round).
+  /** Directed PageRank with DANGLING-MASS redistribution: on a directed
+    * edge list, out-degree-0 nodes absorb rank and would leak total
+    * mass, so each round every node also receives d·D/N (see
+    * [[pageRankRounds]]). Per-round cost over the undirected form: one
+    * extra scalar aggregate + broadcast — nothing keyed.
     */
   def pageRankDirectedMicro(edgesIn: DataFrame, iters: Int = Iters): DataFrame = {
-    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint(true)
+    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint(false)
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val nodes = edges.select(col("src").as("id"))
+    val ids = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
-    val base = nodes.join(outdeg, nodes("id") === outdeg("src"), "left")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
-    val n = base.agg(count(lit(1)).as("n_nodes"))
-    var pr = base.crossJoin(broadcast(n))
-      .select(col("id"), col("outdeg"), col("n_nodes"),
-        expr("1000000 DIV n_nodes").as("pr"))
-      .localCheckpoint(true)
-    var round = 0
-    while (round < iters) {
-      val dang = pr.filter(col("outdeg") === 0)
-        .agg(coalesce(sum(col("pr")), lit(0L)).as("dmass"))
-      val contrib = edges.join(pr, edges("src") === pr("id"))
-        .select(edges("dst").as("id"), expr("pr DIV outdeg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("cs"))
-      pr = pr.select(col("id"), col("outdeg"), col("n_nodes"))
-        .join(contrib, Seq("id"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("id"), col("outdeg"), col("n_nodes"),
-          (expr(s"$JumpMicro DIV n_nodes") +
-            expr(s"($DampMicro * (coalesce(cs, 0) + dmass DIV n_nodes)) " +
-              "DIV 1000000")).as("pr"))
-        .localCheckpoint(true) // eager: lineage is cut before the next round
-      round += 1
-    }
-    pr.select(col("id"), col("pr"))
+    val base = ids.join(outdeg, ids("id") === outdeg("src"), "left")
+      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("deg"))
+    pageRankRounds(edges, uniform(base), iters, dangling = true)._1
   }
 
   val HitsRounds = 4 // fixed HITS rounds (same doctrine as [[Iters]])
@@ -198,49 +168,34 @@ object GraphQueries {
     *
     * Dataflow per round: two keyed join+aggregates (one per role) +
     * two 1-row max aggregates broadcast back — the dd_pagerank loop
-    * shape with the same per-round localCheckpoint lineage cut. Nodes
-    * without in-edges hold authority 0, without out-edges hub 0 (true
-    * zeros of the model, not artifacts).
+    * shape, rounds cut by [[Rounds]] with the (authority, hub) pair
+    * as the state. Nodes without in-edges hold authority 0, without
+    * out-edges hub 0 (true zeros of the model, not artifacts).
     */
   def hitsMicro(edgesIn: DataFrame, iters: Int = HitsRounds): DataFrame = {
-    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint(true)
+    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint(false)
     val nodes = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    // raw → max-normalized micro frame; mx ≥ 0 always, greatest(,1)
-    // only guards the all-zero frame (empty edge side). The
-    // localCheckpoint sits on the RAW frame (round-12 ADVICE: it used
-    // to land after the crossJoin, so the max aggregate and the
-    // projection each re-ran the keyed join+aggregate — twice per
-    // side per round); the normalized projection is a cheap scan of
-    // the checkpointed blocks, so consumers re-derive it instead of
-    // paying a second materialization.
-    def norm(rawIn: DataFrame): DataFrame = {
-      val raw = rawIn.localCheckpoint(true)
-      val mx = raw.agg(coalesce(max(col("r")), lit(0L)).as("mx"))
-      raw.crossJoin(broadcast(mx))
+      .localCheckpoint(false)
+    // one role's raw sums over the other role's scores `v`, max-
+    // normalized to micro; mx ≥ 0 always, greatest(,1) only guards
+    // the all-zero frame (empty edge side)
+    def side(v: DataFrame, from: String, to: String): DataFrame = {
+      val raw = nodes.join(
+          edges.join(v.withColumnRenamed("id", "vid"), col(from) === col("vid"))
+            .groupBy(col(to).as("id")).agg(sum(col("v")).as("s")),
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("s"), lit(0L)).as("r"))
+      raw.crossJoin(broadcast(raw.agg(coalesce(max(col("r")), lit(0L)).as("mx"))))
         .select(col("id"), expr(
           "CAST((CAST(r AS DECIMAL(38,0)) * 1000000) " +
             "DIV greatest(mx, CAST(1 AS BIGINT)) AS BIGINT)").as("v"))
     }
-    var hub = nodes.select(col("id"), lit(1000000L).as("v"))
-      .localCheckpoint(true)
-    var auth = hub
-    for (_ <- 1 to iters) {
-      val ar = nodes.join(
-          edges.join(hub.withColumnRenamed("id", "hid"),
-              col("src") === col("hid"))
-            .groupBy(col("dst").as("id")).agg(sum(col("v")).as("s")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("r"))
-      auth = norm(ar)
-      val hr = nodes.join(
-          edges.join(auth.withColumnRenamed("id", "aid"),
-              col("dst") === col("aid"))
-            .groupBy(col("src").as("id")).agg(sum(col("v")).as("s")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("r"))
-      hub = norm(hr)
+    val hub0 = nodes.select(col("id"), lit(1000000L).as("v"))
+    val (auth, hub) = Rounds.fixed(iters, (hub0, hub0)) { case ((_, hub), _) =>
+      // read by this round's hub side and, after the last round, the result
+      val auth = side(hub, "src", "dst").localCheckpoint(false)
+      (auth, side(auth, "dst", "src"))
     }
     auth.withColumnRenamed("v", "auth_micro")
       .join(hub.withColumnRenamed("v", "hub_micro"), "id")
@@ -260,11 +215,7 @@ object GraphQueries {
     */
   def triangleCount(pairs: DataFrame): DataFrame = {
     // Both directions once, so degrees fall out of one groupBy.
-    val und = pairs.select(explode(array(
-        struct(col("doc_a").as("x"), col("doc_b").as("y")),
-        struct(col("doc_b").as("x"), col("doc_a").as("y")))).as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-      .localCheckpoint(true)
+    val und = undirected(pairs).toDF("x", "y").localCheckpoint(true)
     val deg = und.groupBy("x").agg(count(lit(1)).as("d"))
       .select(col("x").as("id"), col("d"))
     // Keep the direction whose source precedes its destination in the
@@ -299,9 +250,8 @@ object GraphQueries {
     * endpoint goes). Near-dup use: a 2-core separates genuine
     * duplicate communities (quasi-cliques) from incidental pair
     * bridges — the LSH-threshold health signal one level above
-    * dd_triangles. Fixed [[KcoreRounds]] rounds, per-round
-    * localCheckpoint (lineage one round deep, the dd_pagerank
-    * discipline); each round is one degree aggregation + two
+    * dd_triangles. Fixed [[KcoreRounds]] rounds cut by [[Rounds]];
+    * each round is one degree aggregation + two
     * semi-joins, all keyed shuffles. Both engines run the SAME round
     * count, so results agree even on a graph that hasn't reached the
     * peeling fixpoint (an adversarial path graph unravels one node
@@ -311,19 +261,13 @@ object GraphQueries {
     */
   def kcoreMembers(pairs: DataFrame, k: Int = KcoreK,
                    rounds: Int = KcoreRounds): DataFrame = {
-    val all = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true)
-    var edges = all
-    for (_ <- 1 to rounds) {
+    val all = undirected(pairs).localCheckpoint(false)
+    val edges = Rounds.fixed(rounds, all) { (edges, _) =>
       val keep = edges.groupBy("src").agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select(col("src").as("id"))
-      edges = edges
+      edges
         .join(keep, edges("src") === keep("id"), "left_semi")
         .join(keep, edges("dst") === keep("id"), "left_semi")
-        .localCheckpoint(true)
     }
     val core = edges.select(col("src").as("id")).distinct()
       .withColumn("in_core", lit(true))

@@ -2178,8 +2178,7 @@ object Similarity {
     // 100 TB only covFrame touches data; the iteration runs on d²
     // rows regardless of corpus size.
     "ss_pca_power" -> ((s, dir) => {
-      val (v, nrm) = powerLoop(covMicro(s, dir))
-      v.crossJoin(broadcast(nrm))
+      powerLoop(covMicro(s, dir))
         .select(col("dim"),
           col("vm"),
           floor(col("nrm") * lit(1000000.0)).cast("long").as("lambda_micro"))
@@ -2201,16 +2200,16 @@ object Similarity {
     // pass touches data; both loops run on d² broadcast-scale cells.
     "ss_pca_top2" -> ((s, dir) => {
       val m = covMicro(s, dir)
-      val (v1, n1) = powerLoop(m)
+      val v1 = powerLoop(m)
       val m2 = m
-        .join(broadcast(v1.select(col("dim").as("i"), col("vm").as("vi"))), "i")
+        .join(broadcast(v1.select(col("dim").as("i"), col("vm").as("vi"),
+          col("nrm"))), "i")
         .join(broadcast(v1.select(col("dim").as("j"), col("vm").as("vj"))), "j")
-        .crossJoin(broadcast(n1))
         .select(col("i"), col("j"),
           (col("cm") - floor(col("nrm") * (col("vi") * col("vj")).cast("double")
             / lit(10000.0)).cast("long")).as("cm"))
         .localCheckpoint(false)
-      val (v2r, n2) = powerLoop(m2)
+      val v2r = powerLoop(m2)
       // Gram–Schmidt: v2 := normalize(v2r − (v1·v2r) v1), micro-exact
       val d12 = v1.as("a")
         .join(v2r.as("b"), col("a.dim") === col("b.dim"))
@@ -2221,19 +2220,19 @@ object Similarity {
         .select(col("dim"),
           ((col("vm").cast("double")
             - col("dt").cast("double") / lit(1000000000000.0) * col("vm1").cast("double"))
-            / lit(1000000.0)).as("d"))
+            / lit(1000000.0)).as("d"), col("nrm"))
         .localCheckpoint(false)
       val gn = gd.agg(sum(floor(col("d") * col("d") * lit(1000000000000.0))
           .cast("long")).as("nsq"))
-        .select(sqrt(col("nsq").cast("double") / lit(1000000000000.0)).as("nrm"))
+        .select(sqrt(col("nsq").cast("double") / lit(1000000000000.0)).as("gnrm"))
       val v2 = gd.crossJoin(broadcast(gn))
         .select(col("dim"),
-          floor(col("d") / col("nrm") * lit(1000000.0)).cast("long").as("vm"))
-      def leg(v: DataFrame, nrm: DataFrame, c: Int) =
-        v.crossJoin(broadcast(nrm))
-          .select(lit(c).as("comp"), col("dim"), col("vm"),
-            floor(col("nrm") * lit(1000000.0)).cast("long").as("lambda_micro"))
-      leg(v1, n1, 1).unionAll(leg(v2, n2, 2)).orderBy("comp", "dim")
+          floor(col("d") / col("gnrm") * lit(1000000.0)).cast("long").as("vm"),
+          col("nrm"))
+      def leg(v: DataFrame, c: Int) =
+        v.select(lit(c).as("comp"), col("dim"), col("vm"),
+          floor(col("nrm") * lit(1000000.0)).cast("long").as("lambda_micro"))
+      leg(v1, 1).unionAll(leg(v2, 2)).orderBy("comp", "dim")
     }),
 
     // MATRYOSHKA (prefix-dimension) retrieval — the modern MRL
@@ -2404,8 +2403,7 @@ object Similarity {
             (col("hops") + when(col("best_cos") > col("cur_cos"), 1L)
               .otherwise(0L)).as("hops"))
       }
-      (1 to WalkHops).foldLeft(start)((st, _) =>
-          hop(st).localCheckpoint(false))
+      Rounds.fixed(WalkHops, start)((st, _) => hop(st))
         .select(col("query_id"), col("cur").as("landed_id"),
           col("cur_cos").as("cos4"), col("hops"))
         .orderBy("query_id")
@@ -2463,8 +2461,7 @@ object Similarity {
           .filter(col("rn") <= BeamWidth)
           .drop("rn")
       }
-      (1 to BeamSteps).foldLeft(beam0)((b, _) =>
-          step(b).localCheckpoint(false))
+      Rounds.fixed(BeamSteps, beam0)((b, _) => step(b))
         .withColumn("rank", row_number().over(w).cast("int"))
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos4"))
         .orderBy("query_id", "rank")
@@ -2646,29 +2643,25 @@ object Similarity {
 
   /** [[PowerRounds]] fixed micro-integer matrix-vector rounds over a
     * symmetrized matrix frame (see ss_pca_power's comment for the
-    * exactness argument). Returns (unit vector at 1e6 micro-scale,
-    * 1-row ‖Mv‖ frame — the eigenvalue estimate at a normalized v).
+    * exactness argument), cut by [[Rounds]]. Returns (dim, vm, nrm):
+    * the unit vector at 1e6 micro-scale and, on every row, ‖Mv‖ of the
+    * last round — the eigenvalue estimate at a normalized v.
     */
-  private def powerLoop(m: DataFrame): (DataFrame, DataFrame) = {
-    var v = m.select(col("i").as("dim")).distinct()
-      .withColumn("vm", lit(125000L)) // 1/√64 at 1e6 micro-scale
-    var nrm: DataFrame = null
-    for (_ <- 1 to PowerRounds) {
+  private def powerLoop(m: DataFrame): DataFrame =
+    Rounds.fixed(PowerRounds, m.select(col("i").as("dim")).distinct()
+        .withColumn("vm", lit(125000L))) { (v, _) => // vm: 1/√64 at 1e6 micro-scale
       val p = m.join(v, col("j") === col("dim"))
         .select(col("i"), (col("cm") * col("vm")).as("pm"))
         .groupBy("i").agg(sum(col("pm")).as("sp"))
         .withColumn("d", col("sp").cast("double") / lit(1.0e14))
-        .localCheckpoint(false)
-      nrm = p.agg(sum(floor(col("d") * col("d") * lit(1000000000000.0))
+      val nrm = p.agg(sum(floor(col("d") * col("d") * lit(1000000000000.0))
           .cast("long")).as("nsq"))
         .select(sqrt(col("nsq").cast("double") / lit(1000000000000.0)).as("nrm"))
-      v = p.crossJoin(broadcast(nrm))
+      p.crossJoin(broadcast(nrm))
         .select(col("i").as("dim"),
-          floor(col("d") / col("nrm") * lit(1000000.0)).cast("long").as("vm"))
-        .localCheckpoint(true) // eager: cut lineage before the next round
+          floor(col("d") / col("nrm") * lit(1000000.0)).cast("long").as("vm"),
+          col("nrm"))
     }
-    (v, nrm)
-  }
 
   /** Exact covariance pieces (i, j, n, sxy_micro, cov8) shared by
     * ss_embed_cov and ss_pca_power — see the ss_embed_cov comment for

@@ -44,11 +44,6 @@ object SketchQueries {
     */
   val HllRegisters = 256
 
-  /** Leading-zero rank comes from the next 13 hex chars = 52 hash
-    * bits, so rho ∈ [1, 53].
-    */
-  val HllRhoBits = 52
-
   /** Fixed-point cap on rho inside the harmonic sum: 2^(20−rho)
     * truncates to 0 past 20 — a ≤2⁻²⁰·m relative perturbation of Z,
     * far below the sketch's own 6.5% error, and it keeps

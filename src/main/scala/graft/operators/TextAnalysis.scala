@@ -82,8 +82,8 @@ object TextAnalysis {
     * iterations of pair-count over the VOCABULARY (word-frequency
     * weighted, never corpus-sized state) → single best pair
     * (deterministic ties) → leftmost-greedy non-overlapping re-merge
-    * of every word's symbol array. Per-round localCheckpoint cuts the
-    * lineage exactly like the PageRank loop.
+    * of every word's symbol array. [[Rounds]] cuts the lineage
+    * exactly like the PageRank loop, with (merges, syms) as the state.
     *
     * @return (merges: iter/s1/s2/cnt — one row per round,
     *          syms: word/wc/syms — the final segmentation of every
@@ -94,36 +94,35 @@ object TextAnalysis {
     val wc = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wc"))
-    var syms = wc.select(col("word"), col("wc"),
+    val syms0 = wc.select(col("word"), col("wc"),
       expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
         .as("syms"))
       .localCheckpoint(false)
-    var merges: DataFrame = null
-    for (r <- 1 to BpeTrainRounds) {
-      val pc = syms.filter(size(col("syms")) >= 2)
+    def bestPair(syms: DataFrame): DataFrame =
+      syms.filter(size(col("syms")) >= 2)
         .select(col("wc"), explode(expr(
           "transform(sequence(1, size(syms) - 1), " +
             "i -> struct(element_at(syms, i) AS s1, element_at(syms, i + 1) AS s2))"))
           .as("p"))
         .select(col("wc"), col("p.s1").as("s1"), col("p.s2").as("s2"))
         .groupBy("s1", "s2").agg(sum(col("wc")).as("cnt"))
-      val best = pc.orderBy(col("cnt").desc, col("s1"), col("s2")).limit(1)
-        .localCheckpoint(true) // reused by the merge step AND the report
-      merges =
-        if (merges == null) best.withColumn("iter", lit(r))
-        else merges.unionByName(best.withColumn("iter", lit(r)))
-      syms = syms
-        .crossJoin(broadcast(best.select(col("s1").as("ms1"), col("s2").as("ms2"))))
-        .withColumn("syms", expr(
-          """aggregate(syms, cast(array() as array<string>),
-            |  (acc, x) -> CASE
-            |    WHEN size(acc) > 0 AND element_at(acc, -1) = ms1 AND x = ms2
-            |    THEN concat(slice(acc, 1, size(acc) - 1), array(concat(ms1, ms2)))
-            |    ELSE concat(acc, array(x)) END)""".stripMargin))
-        .select(col("word"), col("wc"), col("syms"))
-        .localCheckpoint(true) // eager: cut lineage before the next round
+        .orderBy(col("cnt").desc, col("s1"), col("s2")).limit(1)
+    // no merges before round 1: an empty frame of the merges schema
+    val none = bestPair(syms0).withColumn("iter", lit(0)).limit(0)
+    Rounds.fixed(BpeTrainRounds, (none, syms0)) { case ((merges, syms), r) =>
+      val best = bestPair(syms)
+        .localCheckpoint(false) // reused by the merge step AND the report
+      (merges.unionByName(best.withColumn("iter", lit(r))),
+        syms
+          .crossJoin(broadcast(best.select(col("s1").as("ms1"), col("s2").as("ms2"))))
+          .withColumn("syms", expr(
+            """aggregate(syms, cast(array() as array<string>),
+              |  (acc, x) -> CASE
+              |    WHEN size(acc) > 0 AND element_at(acc, -1) = ms1 AND x = ms2
+              |    THEN concat(slice(acc, 1, size(acc) - 1), array(concat(ms1, ms2)))
+              |    ELSE concat(acc, array(x)) END)""".stripMargin))
+          .select(col("word"), col("wc"), col("syms")))
     }
-    (merges, syms)
   }
 
   /** Per-doc bigram-LM aggregate (doc_id, n_bigrams, sum_microp) —

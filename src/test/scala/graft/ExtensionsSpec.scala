@@ -64,6 +64,34 @@ class ExtensionsSpec extends AnyFunSuite {
       org.apache.spark.unsafe.types.UTF8String.fromString("hello")))
   }
 
+  test("md5_longs halves: [0] is md5_prefix_long, [1] the digest's last 8 bytes, both eval paths") {
+    import graft.functions.{Md5Longs, Md5PrefixLong}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val inputs = Seq("", "a", "hello", "wordcount", "ü∂é", "x" * 100)
+    def lastWord(s: String): Long =
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .drop(8).foldLeft(0L)((h, b) => (h << 8) | (b & 0xffL))
+    GraftExtensions.register(spark)
+    // codegen path
+    val rows = inputs.toDF("s")
+      .select(col("s"), Md5Longs.md5_longs(col("s")).as("w"),
+        expr("md5_prefix_long(s)").as("hl"))
+      .collect()
+    assert(rows.length == inputs.length)
+    rows.foreach { r =>
+      val w = r.getSeq[Long](1)
+      assert(w(0) == r.getLong(2), s"md5_longs(${r.getString(0)})[0]")
+      assert(w(1) == lastWord(r.getString(0)), s"md5_longs(${r.getString(0)})[1]")
+    }
+    // interpreted path
+    inputs.foreach { s =>
+      val w = Md5Longs(Literal(s)).eval(null).asInstanceOf[ArrayData]
+      assert(w.getLong(0) == Md5PrefixLong(Literal(s)).eval(null))
+      assert(w.getLong(1) == lastWord(s))
+    }
+  }
+
   test("ta_rolling_fp: one fingerprint per doc, deterministic") {
     val a = SparkEntry.queries("ta_rolling_fp")(spark, sf).collect()
     val b = SparkEntry.queries("ta_rolling_fp")(spark, sf).collect()
