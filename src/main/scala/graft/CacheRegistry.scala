@@ -4,9 +4,10 @@ import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
 
 import org.apache.spark.sql.SparkSession
 
-/** Central registry for the engine's derived-artifact memo caches
-  * ([[operators.Dedup]]'s verified pairs, [[operators.Similarity]]'s
-  * trained codebooks): each cache keys entries by
+/** Central registry for the engine's memo caches ([[Tables]]' table
+  * handles, [[operators.Dedup]]'s verified pairs,
+  * [[operators.Similarity]]'s trained codebooks): each cache keys
+  * entries by
   * (sessionUUID, data dir, kind) and registers itself here, so the
   * staleness/lifetime controls live in ONE place:
   *

@@ -15,32 +15,23 @@ object Explain {
       if (n == "st_suffix_admit_batch") {
         // The streaming row's returned frame is a checkpoint scan —
         // the interesting plan lives per micro-batch inside
-        // foreachBatch. This replica builds the SAME probe join the
-        // batch body runs (batch grams, fingerprinted, vs the
-        // published static index) and dumps BOTH forms, so the
-        // r17-claimed join inversion is plan-visible and checkable:
-        //  - r16 shape: bg LEFT SEMI staticIdx — a left-semi can only
-        //    broadcast its RIGHT side, so the millions-row index
-        //    shuffles+sorts every micro-batch;
-        //  - r17+ shape (the code in StreamingQueries): staticIdx
-        //    INNER JOIN broadcast(bg) — the served index streams
-        //    through a BroadcastHashJoin, only the batch ships.
+        // foreachBatch. This runs the row's own probe join
+        // (StreamingQueries.suffixProbe) over the whole delta as one
+        // batch with no prior segments, against the published static
+        // index. The pre-inversion plan (bg LEFT SEMI staticIdx) is
+        // kept in plans/r18/st_suffix_admit_before.txt.
         import org.apache.spark.sql.functions._
         import graft.operators.Dedup
+        import graft.streaming.StreamingQueries
         val delta = Tables.documents(spark, dir)
           .filter(pmod(col("doc_id"), lit(10)) === 7)
           .select("doc_id", "text")
-        val bgk = Dedup.suffixGramsOf(delta, Dedup.SuffixSpanL)
-          .select(Seq(col("doc_id"), col("p")) ++
-            Dedup.gramFp(col("g")): _*)
+        val bg = StreamingQueries.suffixBatchGrams(delta)
         val staticIdx = spark.read.parquet(
           Dedup.publishedSuffixGramIndex(spark, dir))
-        println("--- r16 shape: bg LEFT SEMI staticIdx ---")
-        bgk.join(staticIdx, Seq("fp1", "fp2"), "left_semi")
-          .select("doc_id", "p").explain("formatted")
-        println("--- current shape: staticIdx INNER JOIN broadcast(bg) ---")
-        staticIdx.join(broadcast(bgk), Seq("fp1", "fp2"))
-          .select("doc_id", "p").explain("formatted")
+        val noPrior = bg.select("fp1", "fp2").limit(0)
+        StreamingQueries.suffixProbe(staticIdx, noPrior, bg)
+          .explain("formatted")
       } else SparkEntry.queries(n)(spark, dir).explain("formatted")
     }
     spark.stop()

@@ -11,28 +11,20 @@ import org.apache.spark.sql.types.StructType
   * `ReadSchema`).
   */
 object Tables {
-  // Memoized per (sessionUUID, path): re-reading a table otherwise
-  // re-lists the directory and re-reads parquet footers on every
-  // query — pure overhead when a bench/verify session touches each
-  // table dozens of times. The cached object is just the resolved
-  // DataFrame handle (plan + file index), not materialized data.
-  // Caveats (by design, for these short-lived driver sessions): the
-  // handle serves a STALE file listing if the path's files are
-  // rewritten — writers must call invalidate(path) — and entries for a
-  // stopped session linger until invalidateSession; keying by the UUID
-  // string (not the session object) at least keeps the key itself from
-  // pinning anything.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  // sessionUUID lives on the classic session (the only runtime flavor
-  // here) and is private[sql] — accessed via the bridge
-  private def uuidOf(spark: SparkSession): String =
-    org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)
+  // Memoized per (session, dir, table) in a CacheRegistry cache:
+  // re-reading a table otherwise re-lists the directory and re-reads
+  // parquet footers on every query — pure overhead when a bench/verify
+  // session touches each table dozens of times. The cached object is
+  // just the resolved DataFrame handle (plan + file index), not
+  // materialized data. Caveats (by design, for these short-lived
+  // driver sessions): the handle serves a STALE file listing if the
+  // path's files are rewritten — writers must call invalidate(dir) —
+  // and entries for a stopped session linger until invalidateSession.
+  private val handles = CacheRegistry.newCache()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((uuidOf(spark), s"$dir/$name.parquet"),
-      key => read(spark, key._2))
+    CacheRegistry.cached[DataFrame](handles, spark, dir, name)(
+      read(spark, s"$dir/$name.parquet"))
 
   // JVM-wide parquet schemas. Inferring one is a Spark job that reads
   // footers, so without this every fresh session pays a job on its
@@ -78,25 +70,23 @@ object Tables {
   }
 
   /** Drop every cached handle and schema under `pathPrefix` (all
-    * sessions). Call after rewriting parquet files in place, or the
-    * cached file index serves deleted/stale files.
+    * sessions), and every derived artifact (verified dedup pairs,
+    * trained codebooks) built from tables under it. Call after
+    * rewriting parquet files in place, or the cached file index serves
+    * deleted/stale files.
     */
   def invalidate(pathPrefix: String): Unit = {
-    cache.keySet.removeIf(_._2.startsWith(pathPrefix))
     schemas.keySet.removeIf(_._1.startsWith(pathPrefix))
-    // derived artifacts (verified dedup pairs, trained codebooks)
-    // built from tables under the prefix go stale with them
     CacheRegistry.invalidate(pathPrefix)
   }
 
-  /** Drop a session's cached handles (call when done with a session so
-    * its resolved file indexes are not pinned for the JVM lifetime).
-    * The JVM-wide schemas stay: the next session reuses them.
+  /** Drop a session's cached handles and derived artifacts (call when
+    * done with a session so its resolved file indexes are not pinned
+    * for the JVM lifetime). The JVM-wide schemas stay: the next
+    * session reuses them.
     */
-  def invalidateSession(spark: SparkSession): Unit = {
-    cache.keySet.removeIf(_._1 == uuidOf(spark))
+  def invalidateSession(spark: SparkSession): Unit =
     CacheRegistry.invalidateSession(spark)
-  }
 
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")

@@ -17,9 +17,15 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // row-stamped progress on stderr, so every log line between a
+      // row's start and ok lines can be placed in that row
+      System.err.println(s"[verify] $name start")
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -250,6 +250,16 @@ object Dedup {
         (col("eq").cast("double") / OphBuckets).as("est_jaccard"))
   }
 
+  /** Where pipe_forget publishes its post-forget artifacts for `dir`.
+    * Scoped by SESSION UUID (round-15 advice): keyed by dir alone, two
+    * concurrent JVMs over the same testdata race overwrite-vs-read on
+    * the published "after" artifacts.
+    */
+  private[graft] def forgetRoot(s: SparkSession, dir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_forget_" +
+      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
+      org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s).take(8)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Exact dedup: one hash-shuffle; min(doc_id) is the deterministic
@@ -807,13 +817,8 @@ object Dedup {
       // republish + read back: the audit's "after" frame is always a
       // parquet scan of the published artifact, never the write's own
       // lineage (idempotent overwrite per (session, sf dir) — the
-      // segment-overwrite idiom, safe across bench reps). The root is
-      // scoped by SESSION UUID (round-15 advice): keyed by dir alone,
-      // two concurrent JVMs over the same testdata race
-      // overwrite-vs-read on the published "after" artifacts.
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_forget_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-        org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s).take(8)
+      // segment-overwrite idiom, safe across bench reps)
+      val root = forgetRoot(s, dir)
       def publish(df: DataFrame, name: String): DataFrame = {
         df.write.mode("overwrite").parquet(s"$root/$name")
         s.read.parquet(s"$root/$name")

@@ -212,7 +212,7 @@ object Similarity {
     * must find the same published tables, not silently retrain a
     * second copy.
     */
-  private def indexRoot(dir: String): String =
+  private[graft] def indexRoot(dir: String): String =
     sys.props.getOrElse("graft.index.root",
       s"${System.getProperty("java.io.tmpdir")}/graft_index") +
       "/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")

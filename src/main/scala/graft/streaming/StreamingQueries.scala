@@ -42,18 +42,12 @@ object StreamingQueries {
       s"${stageRoot(dir)}/events"), ev.schema)
   }
 
-  private def stageRoot(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_stream_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-
-  /** Remove a run-scoped checkpoint/store tree after its results are
-    * materialized — the admission rows mint UUID-scoped dirs per
-    * execution, and without cleanup every bench pass accumulates
-    * full copies under tmp.
+  /** Where the staged sources and the crash-replay runs' checkpoint
+    * and store directories of `dir` live (JVM tmpdir, one tree per
+    * testdata dir).
     */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-    f.delete(); ()
-  }
+  private[graft] def stageRoot(dir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_stream_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** Write `df` to `staged` once per SOURCE generation: the staged
     * copy is reused only while it is newer than the source parquet —
@@ -64,6 +58,23 @@ object StreamingQueries {
   private def stage(df: DataFrame, sourcePath: String, staged: String): String = {
     if (isStale(staged, sourcePath))
       df.write.mode(SaveMode.Overwrite).parquet(staged)
+    staged
+  }
+
+  /** [[stage]] `df` range-partitioned by `key` into 4 files, then pin
+    * oldest-first processing: range partition i holds the i-th `key`
+    * quantile and part files sort by name in partition order, so mtime
+    * base + i·60 s makes FileStreamSource's mod-time order equal `key`
+    * order (fixed epoch values keep re-runs deterministic and stay far
+    * inside maxFileAge of the newest file).
+    */
+  private def stageOrdered(df: DataFrame, key: String, sourcePath: String,
+      staged: String): String = {
+    stage(df.repartitionByRange(4, col(key)), sourcePath, staged)
+    Option(new java.io.File(staged).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        f.setLastModified(1700000000000L + i * 60000L) }
     staged
   }
 
@@ -80,7 +91,29 @@ object StreamingQueries {
       (src.exists() && src.lastModified() >= marker.lastModified())
   }
 
-  /** Latest-batch-id merge of a foreachBatch upsert store over the
+  /** The hourly (window, event_type) count and value sum the upsert
+    * rows stream. It groups on the window STRUCT, not
+    * `.getField("start")`: extracting the field before the aggregation
+    * strips the event-time column metadata the state-cleanup predicate
+    * is derived from, and a watermarked store then never evicts — the
+    * field is flattened to `hour` in [[upsertSink]] instead.
+    */
+  private def hourlyCounts(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        Agg.dsum(col("value")).as("sum_value"))
+
+  /** The upsert sink body of the [[hourlyCounts]] rows: each batch's
+    * updated rows land idempotently at an offset-derived path, stamped
+    * with the batch id — the Delta/JDBC-upsert shape on plain parquet.
+    */
+  private def upsertSink(df: DataFrame, batchId: Long, store: String): Unit =
+    df.select(col("window").getField("start").as("hour"),
+        col("event_type"), col("n_events"), col("sum_value"))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode(SaveMode.Overwrite).parquet(s"$store/b$batchId")
+
+  /** Latest-batch-id merge of an [[upsertSink]] store over the
     * (hour, event_type) key: update mode re-emits a key whenever it
     * changes, so a key's LAST emission is its final total — shared by
     * the restart rows and the late-drop control.
@@ -96,19 +129,58 @@ object StreamingQueries {
       .orderBy("hour", "event_type")
   }
 
-  /** Run `df` (a streaming frame) to a complete-mode memory sink and
-    * return the final table. Complete mode emits every window at each
+  /** Run `df` (a streaming frame) to a memory sink and return the final
+    * table. The default complete mode emits every window at each
     * trigger regardless of the watermark, so the bounded-input run
     * yields exactly the batch result (append mode would hold back
     * windows the final watermark hasn't passed — correct for infinite
-    * streams, wrong for a drain-and-compare gate).
+    * streams, wrong for a drain-and-compare gate); `"append"` serves
+    * the shapes that emit final rows only (dedup, joins, custom state).
     */
-  private def drain(s: SparkSession, df: DataFrame, name: String): DataFrame = {
-    val q = df.writeStream.outputMode("complete").format("memory")
+  private def drain(s: SparkSession, df: DataFrame, name: String,
+      outputMode: String = "complete"): DataFrame = {
+    val q = df.writeStream.outputMode(outputMode).format("memory")
       .queryName(name).start()
     try q.processAllAvailable() finally q.stop()
     s.table(name)
   }
+
+  /** st_suffix_admit's batch grams: every L-gram position of `df`'s
+    * docs as (doc_id, p, fp1, fp2) — fingerprints only: fp equality is
+    * gram equality (the [[graft.operators.Dedup.gramFp]] argument the
+    * index format rests on), so the probe keys on two longs.
+    */
+  private[graft] def suffixBatchGrams(df: DataFrame): DataFrame = {
+    import graft.operators.Dedup
+    Dedup.suffixGramsOf(df, Dedup.SuffixSpanL)
+      .select(Seq(col("doc_id"), col("p")) ++ Dedup.gramFp(col("g")): _*)
+  }
+
+  /** st_suffix_admit's per-batch probe: the positions (doc_id, p) of
+    * the batch grams `bg` that match (a) the served static index, (b)
+    * an earlier batch's delta grams `priorFp`, or (c) a same-batch doc
+    * with a smaller doc_id. Probe direction: a left-semi can only
+    * broadcast its RIGHT side, so `bg ⋉ staticIdx` would sort-merge
+    * the millions-row served index every micro-batch; instead the
+    * index streams through a BroadcastHashJoin against the broadcast
+    * batch grams — the served table never shuffles, the batch side
+    * ships. Row-identical: staticIdx is unique per (fp1, fp2), so the
+    * inner join emits each matching bg row once; priorFp can repeat a
+    * fingerprint across batch segments, and the final `.distinct()`
+    * absorbs that multiplicity. Explain prints this plan.
+    */
+  private[graft] def suffixProbe(staticIdx: DataFrame, priorFp: DataFrame,
+      bg: DataFrame): DataFrame =
+    staticIdx.join(broadcast(bg), Seq("fp1", "fp2"))
+      .select("doc_id", "p")
+      .union(priorFp.join(broadcast(bg), Seq("fp1", "fp2"))
+        .select("doc_id", "p"))
+      .union(bg.as("a").join(bg.as("b"),
+          col("a.fp1") === col("b.fp1") && col("a.fp2") === col("b.fp2")
+            && col("b.doc_id") < col("a.doc_id"),
+          "left_semi")
+        .select(col("doc_id"), col("p")))
+      .distinct()
 
   // ---- streams: each is the streaming body of one row below,
   // shared with the ExtensionsSpec test that pins its mechanics
@@ -300,10 +372,7 @@ object StreamingQueries {
       val staged = stage(docs, s"$dir/documents.parquet",
         s"${stageRoot(dir)}/docs")
       val deduped = dedupStream(s, staged, docs.schema).select("fp")
-      val q = deduped.writeStream.outputMode("append").format("memory")
-        .queryName("st_dedup_exact").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("st_dedup_exact").orderBy("fp")
+      drain(s, deduped, "st_dedup_exact", "append").orderBy("fp")
     }),
 
     // CUSTOM STATE through the gate — the flatMapGroupsWithState
@@ -320,10 +389,7 @@ object StreamingQueries {
       val staged = stage(docs.coalesce(1), s"$dir/documents.parquet",
         s"${stageRoot(dir)}/docs_src")
       val capped = domainCapStream(s, staged, docs.schema, QualityQueries.DomainCap)
-      val q = capped.writeStream.outputMode("append").format("memory")
-        .queryName("st_domain_cap").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("st_domain_cap").orderBy("source", "doc_id")
+      drain(s, capped, "st_domain_cap", "append").orderBy("source", "doc_id")
     }),
 
     // Stream-stream INTERVAL JOIN through the gate: every view matched
@@ -337,10 +403,7 @@ object StreamingQueries {
       val (staged, schema) = stageEvents(s, dir)
       val joined = clickAfterViewJoin(s, staged, schema)
         .select(col("view_id"), col("click_id"), col("v_user").as("user_id"))
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName("st_click_after_view").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("st_click_after_view")
+      drain(s, joined, "st_click_after_view", "append")
         .orderBy("view_id", "click_id")
     }),
 
@@ -381,10 +444,7 @@ object StreamingQueries {
         s"$dir/events.parquet", s"${stageRoot(dir)}/ev_outer")
       val joined = clickAfterViewJoinOuter(s, staged, ev.schema)
         .select(col("view_id"), col("v_user").as("user_id"), col("click_id"))
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName("st_view_conversion").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("st_view_conversion").filter(col("view_id") >= 0L)
+      drain(s, joined, "st_view_conversion", "append").filter(col("view_id") >= 0L)
         .orderBy(col("view_id"), col("click_id").asc_nulls_first)
     }),
 
@@ -495,16 +555,13 @@ object StreamingQueries {
     // CRASH RECOVERY through the gate (round-10 verdict #5) — the one
     // behavior class the steady-state st_* rows never exercise:
     // EXACTLY-ONCE across a mid-run failure. Every execution stages
-    // the events as 4 files, runs an update-mode aggregation one file
-    // per micro-batch through a foreachBatch upsert sink (each batch's
-    // updated rows land idempotently at an offset-derived path,
-    // stamped with the batch id — the Delta/JDBC-upsert shape on plain
-    // parquet), and INJECTS A CRASH in batch 1 after the sink write
-    // but BEFORE the commit log records it — the hardest window: the
-    // offset WAL already names batch 1, so the restarted query (same
-    // checkpoint dir, injection off) must REPLAY it with identical
-    // contents, and only the sink's by-batch-id idempotent overwrite
-    // keeps the store exactly-once. The merged store (latest batch id
+    // the events as 4 files and runs an update-mode aggregation one
+    // file per micro-batch through the [[upsertSink]] on the
+    // [[CrashReplay]] harness, which INJECTS A CRASH in batch 1 after
+    // the sink write but BEFORE the commit log records it and
+    // requires the restarted query to REPLAY it; only the sink's
+    // by-batch-id idempotent overwrite keeps the store exactly-once.
+    // The merged store (latest batch id
     // per key; a key's last update IS its total — update mode re-emits
     // a key whenever it changes) must equal the batch dual verbatim —
     // the same oracle SQL as st_tumbling_hour. State is unwatermarked
@@ -512,60 +569,15 @@ object StreamingQueries {
     // round-robin, so "late" rows are the norm); a production infinite
     // stream adds the watermark back and the recovery story is
     // unchanged (state reload + offset replay are watermark-agnostic).
-    // Fresh checkpoint/store per execution: repeat runs re-exercise
-    // the crash, not a cached recovery.
+    // Fresh checkpoint/store per execution (deleted on return):
+    // repeat runs re-exercise the crash, not a cached recovery.
     "st_restart_upsert" -> ((s, dir) => {
-            val ev = Tables.events(s, dir)
+      val ev = Tables.events(s, dir)
       val staged = stage(ev.repartition(4), s"$dir/events.parquet",
         s"${stageRoot(dir)}/ev_restart")
-      // expected batch count derives from what was ACTUALLY staged
-      // (not the literal 4): a testdata/staging refresh that changes
-      // the file count must not flip a correct engine red; the crash
-      // injects at batch 1, so >= 2 staged files is the precondition
-      val nFiles = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.count(_.getName.endsWith(".parquet"))
-      require(nFiles >= 2,
-        s"staged $nFiles parquet files — the batch-1 crash injection " +
-          "needs at least 2 one-file micro-batches")
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/restart_ckpt_$run"
-      val store = s"${stageRoot(dir)}/restart_store_$run"
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      def start(injectCrash: Boolean) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .groupBy(window(col("ts"), "1 hour").getField("start").as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          Agg.dsum(col("value")).as("sum_value"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Overwrite).parquet(s"$store/b$batchId")
-          if (injectCrash && batchId == 1L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after sink write, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      // processAllAvailable unblocks on the injected failure (and
-      // would return normally if injection never fired — caught by
-      // the require below instead of hanging)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () } finally q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 1 to REPLAY after restart (batches 0,1 then " +
-          s"replay-1..${nFiles - 1} = ${nFiles + 1} foreachBatch calls), " +
-          s"saw ${batchesSeen.get()}")
-      latestByBatch(s, store)
+      CrashReplay.run(s, "st_restart_upsert", staged, ev.schema,
+          crashAt = Some(1L), "update", hourlyCounts)(
+        upsertSink, latestByBatch(s, _))._1
     }),
 
     // WATERMARKED CRASH RECOVERY (round-11 verdict #5) — replay and
@@ -588,89 +600,19 @@ object StreamingQueries {
     // final total and the latest-batch-id merge equals the batch
     // aggregate. Fresh checkpoint/store per execution, as above.
     "st_restart_watermark" -> ((s, dir) => {
-            val ev = Tables.events(s, dir)
-      val staged = stage(ev.repartitionByRange(4, col("ts")),
-        s"$dir/events.parquet", s"${stageRoot(dir)}/ev_restart_wm")
-      // pin oldest-first processing: range partition i holds the i-th
-      // time quartile and part files sort by name in partition order,
-      // so mtime base+i makes FileStreamSource's mod-time order equal
-      // time order (fixed epoch values keep re-runs deterministic and
-      // stay far inside maxFileAge of the newest file)
-      val parts = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L) }
-      val nFiles = parts.length
-      require(nFiles >= 3,
-        s"staged $nFiles parquet files — the batch-2 crash injection " +
-          "needs at least 3 one-file micro-batches")
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/restartwm_ckpt_$run"
-      val store = s"${stageRoot(dir)}/restartwm_store_$run"
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      // group on the window STRUCT, not .getField("start"): extracting
-      // the field before the aggregation strips the event-time column
-      // metadata the state-cleanup predicate is derived from, and the
-      // store then never evicts (rem=0 forever) — the field is
-      // flattened to `hour` inside the sink instead
-      def start(injectCrash: Boolean) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          Agg.dsum(col("value")).as("sum_value"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
-          df.select(col("window").getField("start").as("hour"),
-              col("event_type"), col("n_events"), col("sum_value"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Overwrite).parquet(s"$store/b$batchId")
-          if (injectCrash && batchId == 2L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after sink write, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () }
-      val evictedPreCrash = q1.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsRemoved).sum
-      q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      require(evictedPreCrash > 0L,
+      val ev = Tables.events(s, dir)
+      val staged = stageOrdered(ev, "ts", s"$dir/events.parquet",
+        s"${stageRoot(dir)}/ev_restart_wm")
+      val (out, preCrash) = CrashReplay.run(s, "st_restart_watermark",
+          staged, ev.schema, crashAt = Some(2L), "update",
+          d => hourlyCounts(d.withWatermark("ts", "30 minutes")))(
+        upsertSink, latestByBatch(s, _))
+      require(preCrash.flatMap(_.stateOperators.toSeq).map(_.numRowsRemoved).sum > 0L,
         "watermark never evicted state before the crash — the row would " +
           "silently degrade to the unwatermarked st_restart_upsert shape")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 2 to REPLAY after restart, saw only " +
-          s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
-      latestByBatch(s, store)
+      out
     }),
 
-    // LATE-DATA DROP as a NEGATIVE CONTROL — every other st_* row
-    // stages so that nothing is ever late (that is what makes the
-    // batch SQL the oracle); this row proves the OTHER half of the
-    // watermark contract: data arriving behind the watermark is
-    // DROPPED, exactly and only it. Staging splits the corpus at the
-    // fixed-interval boundary min(ts) + 100 h (computed as a
-    // broadcast agg leg — no driver action — and recomputable in SQL,
-    // unlike a sampled repartitionByRange boundary): the on-time side
-    // stages time-ordered (the st_restart_watermark no-drop
-    // argument), the early quartile stages LAST, arriving when the
-    // watermark sits ~520 h past its newest window — so the streaming
-    // result is the batch aggregate over ts >= boundary, the oracle
-    // verbatim, and a require on numRowsDroppedByWatermark proves the
-    // drop actually fired (a complete-mode or unwatermarked engine
-    // that counts everything flips red on the hash; an engine that
-    // never drops flips red on the require). Update mode + the
-    // by-batch-id store merge, as in st_restart_upsert.
     // STREAMING LSH ADMISSION (round-13 verdict #5) — the
     // pipe_incremental_dedup shape as a live admission stream: each
     // micro-batch of NEW docs is fingerprinted and band-hashed
@@ -699,20 +641,8 @@ object StreamingQueries {
       val isNew = pmod(col("doc_id"), lit(10)) === 7
       val docs = Tables.documents(s, dir)
       val delta = docs.filter(isNew)
-      val staged = stage(delta.repartitionByRange(4, col("doc_id")),
-        s"$dir/documents.parquet", s"${stageRoot(dir)}/doc_admission")
-      // pin oldest-first processing so micro-batch order is doc_id
-      // order (FileStreamSource processes files in mtime order; range
-      // partition i holds the i-th doc_id quantile and part files
-      // sort by name in partition order)
-      val parts = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L) }
-      val nFiles = parts.length
-      require(nFiles >= 2,
-        s"staged $nFiles parquet files — the batch-1 crash injection " +
-          "needs at least 2 one-file micro-batches")
+      val staged = stageOrdered(delta, "doc_id", s"$dir/documents.parquet",
+        s"${stageRoot(dir)}/doc_admission")
       // static corpus index — the served fingerprint/band tables of
       // the nightly-crawl shape, memoized per (session, dir) like
       // every served index (rebuilding per execution would price the
@@ -728,37 +658,14 @@ object StreamingQueries {
         Dedup.bandFrameOf(docs.filter(!isNew))
           .select("band_idx", "band_hash").distinct()
           .localCheckpoint(false))
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/admission_ckpt_$run"
-      val store = s"${stageRoot(dir)}/admission_store_$run"
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      // accumulated delta index from batches STRICTLY BEFORE b — a
-      // replayed batch must not see its own pre-crash writes
-      def prior(s2: SparkSession, sub: String, b: Long,
-                schema: org.apache.spark.sql.types.StructType): DataFrame = {
-        val paths = Option(new java.io.File(s"$store/$sub").listFiles())
-          .toSeq.flatten
-          .filter(f => f.getName.startsWith("b") &&
-            f.getName.drop(1).forall(_.isDigit) &&
-            f.getName.drop(1).toLong < b)
-          .map(_.getPath)
-        if (paths.isEmpty)
-          s2.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        else s2.read.parquet(paths: _*)
-      }
-      def start(injectCrash: Boolean) = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
+      CrashReplay.run(s, "st_incremental_dedup", staged, delta.schema,
+          crashAt = Some(1L))({ (df, batchId, store) =>
           val s2 = df.sparkSession
           val fps = df.select(col("doc_id"), md5(col("text")).as("fp"))
             .localCheckpoint(false)
           val bnd = Dedup.bandFrameOf(df).localCheckpoint(false)
-          val priorFp = prior(s2, "fps", batchId, fps.schema)
-          val priorBnd = prior(s2, "bands", batchId, bnd.schema)
+          val priorFp = CrashReplay.priorSegments(s2, s"$store/fps", batchId, fps.schema)
+          val priorBnd = CrashReplay.priorSegments(s2, s"$store/bands", batchId, bnd.schema)
           val exactIds = fps.join(corpusFp, Seq("fp"), "left_semi")
             .select("doc_id")
             .union(fps.join(priorFp.select("fp"), Seq("fp"), "left_semi")
@@ -799,32 +706,8 @@ object StreamingQueries {
               .parquet(s"$store/fps/b$batchId"),
             bnd.write.mode(SaveMode.Overwrite)
               .parquet(s"$store/bands/b$batchId"))
-          if (injectCrash && batchId == 1L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after sink writes, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () } finally q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 1 to REPLAY after restart, saw only " +
-          s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
-      // EAGERLY materialize the read-back, then remove this run's
-      // UUID-scoped checkpoint/store trees — without the cleanup every
-      // bench pass (reps × re-measure) accumulates full copies of the
-      // delta fingerprint/band/status tables under tmp. The staged
-      // source stays (it is generation-keyed and reused across runs).
-      val out = s.read.parquet(s"$store/status/b*").orderBy("doc_id")
-        .localCheckpoint(true)
-      Seq(ckpt, store).foreach(p => rmTree(new java.io.File(p)))
-      out
+        },
+        store => s.read.parquet(s"$store/status/b*").orderBy("doc_id"))._1
     }),
 
     // STREAMING ANN ADMISSION (round-13 verdict stretch #7) — the
@@ -853,59 +736,23 @@ object StreamingQueries {
         .select((col("vec_id") + lit(1000000L)).as("vec_id"),
           reverse(TextOps.toDouble(col("embedding"))).as("e"))
       val expected = delta.count()
-      val staged = stage(delta.repartitionByRange(4, col("vec_id")),
-        s"$dir/embeddings.parquet", s"${stageRoot(dir)}/vec_admission")
-      val parts = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L) }
-      val nFiles = parts.length
-      require(nFiles >= 2,
-        s"staged $nFiles parquet files — the batch-1 crash injection " +
-          "needs at least 2 one-file micro-batches")
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/vec_admission_ckpt_$run"
-      val store = s"${stageRoot(dir)}/vec_admission_store_$run"
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      def start(injectCrash: Boolean) = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
-          val s2 = df.sparkSession
+      val staged = stageOrdered(delta, "vec_id", s"$dir/embeddings.parquet",
+        s"${stageRoot(dir)}/vec_admission")
+      val (out, _) = CrashReplay.run(s, "st_ivf_admit", staged, delta.schema,
+          crashAt = Some(1L))({ (df, batchId, store) =>
           val dims = df
             .select(col("vec_id"), posexplode(col("e")).as(Seq("p", "x")))
             .select(col("vec_id"), (col("p") + 1).cast("int").as("dim"),
               col("x"))
-          val cents = s2.read.parquet(s"$root/centroids")
+          val cents = df.sparkSession.read.parquet(s"$root/centroids")
           Similarity.assignL2(dims, cents)
             .write.mode(SaveMode.Overwrite).parquet(s"$store/asg/b$batchId")
-          if (injectCrash && batchId == 1L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after sink writes, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () } finally q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 1 to REPLAY after restart, saw only " +
-          s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
-      val out = s.read.parquet(s"$store/asg/b*").orderBy("vec_id")
-        .localCheckpoint(true)
+        },
+        store => s.read.parquet(s"$store/asg/b*").orderBy("vec_id"))
       val n = out.count()
       require(n == expected,
         s"admission log holds $n rows for $expected delta vectors — " +
           "a replayed batch double-admitted (exactly-once broken)")
-      Seq(ckpt, store).foreach(p => rmTree(new java.io.File(p)))
       out
     }),
 
@@ -946,96 +793,30 @@ object StreamingQueries {
       import org.apache.spark.sql.expressions.Window
       import graft.operators.Dedup
       val spanL = Dedup.SuffixSpanL
-      val isNew = pmod(col("doc_id"), lit(10)) === 7
-      val docs = Tables.documents(s, dir)
-      def gramsOf(d: DataFrame) = Dedup.suffixGramsOf(d, spanL)
-      val delta = docs.filter(isNew).select("doc_id", "text")
-      val staged = stage(delta.repartitionByRange(4, col("doc_id")),
-        s"$dir/documents.parquet", s"${stageRoot(dir)}/suffix_admission")
-      val parts = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L) }
-      val nFiles = parts.length
-      require(nFiles >= 2,
-        s"staged $nFiles parquet files — the batch-1 crash injection " +
-          "needs at least 2 one-file micro-batches")
+      val delta = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(10)) === 7).select("doc_id", "text")
+      val staged = stageOrdered(delta, "doc_id", s"$dir/documents.parquet",
+        s"${stageRoot(dir)}/suffix_admission")
       // the published static index (the dd_suffix_index_build parquet
       // table, publish-once per session — resolved on the DRIVER
       // before any stream starts, the st_ivf_admit rule): every
       // micro-batch probes the READ-BACK table, so admission never
       // silently rebuilds the index it serves from
-      val staticIdx = s.read.parquet(
-        graft.operators.Dedup.publishedSuffixGramIndex(s, dir))
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/suffix_admission_ckpt_$run"
-      val store = s"${stageRoot(dir)}/suffix_admission_store_$run"
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      // delta-gram index accumulated from batches STRICTLY BEFORE b —
-      // a replayed batch must not see its own pre-crash writes
-      def prior(s2: SparkSession, b: Long,
-                schema: org.apache.spark.sql.types.StructType): DataFrame = {
-        val paths = Option(new java.io.File(s"$store/grams").listFiles())
-          .toSeq.flatten
-          .filter(f => f.getName.startsWith("b") &&
-            f.getName.drop(1).forall(_.isDigit) &&
-            f.getName.drop(1).toLong < b)
-          .map(_.getPath)
-        if (paths.isEmpty)
-          s2.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        else s2.read.parquet(paths: _*)
-      }
-      def start(injectCrash: Boolean) = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
-          val s2 = df.sparkSession
-          // fingerprints only (round 18): the raw gram string rode the
-          // per-batch checkpoint and the within-batch dup self-join
-          // solely as a join key — fp equality is gram equality (the
-          // gramFp argument the whole index format rests on), so bg
-          // materializes 4 fixed-width columns instead of L raw chars
-          // per position and the self-join below keys on two longs.
-          val bg = gramsOf(df)
-            .select(Seq(col("doc_id"), col("p")) ++
-              graft.operators.Dedup.gramFp(col("g")): _*)
-            .localCheckpoint(false)
+      val staticIdx = s.read.parquet(Dedup.publishedSuffixGramIndex(s, dir))
+      val (out, _) = CrashReplay.run(s, "st_suffix_admit", staged,
+          delta.schema, crashAt = Some(1L))({ (df, batchId, store) =>
+          // bg feeds four branches of the probe: checkpointed once
+          val bg = suffixBatchGrams(df).localCheckpoint(false)
           // no localCheckpoint: the distinct-fp frame has exactly ONE
-          // consumer (the by-batch-id gram write below — prior() only
-          // needs its schema), so checkpointing it materialized the
+          // consumer (the by-batch-id gram write below — priorSegments
+          // only needs its schema), so checkpointing it materialized the
           // frame once per micro-batch just to re-read it for the
-          // write (round-17: one job per batch saved; bg stays
-          // checkpointed, it feeds four branches)
+          // write (round-17: one job per batch saved)
           val fpOnly = bg.select("fp1", "fp2").distinct()
-          val priorFp = prior(s2, batchId, fpOnly.schema)
-          // Probe direction (round-17): a left-semi can only broadcast
-          // its RIGHT side, so `bg ⋉ staticIdx` sort-merge-joined the
-          // MILLIONS-row served index (shuffle + sort of the index
-          // EVERY micro-batch). Inverted: the index streams through a
-          // BroadcastHashJoin against the broadcast batch grams — the
-          // 100-TB-correct asymmetry (index ≫ batch; the served table
-          // never shuffles, the batch side ships). Row-identical:
-          // staticIdx is unique per (fp1, fp2) (distinct grams), so
-          // the inner join emits each matching bg row once; priorFp
-          // can repeat a fingerprint across batch segments, and the
-          // final `.distinct()` (already present for the 3-way union)
-          // absorbs that multiplicity.
-          val bgk = bg
-          val matched = staticIdx.join(broadcast(bgk), Seq("fp1", "fp2"))
-            .select("doc_id", "p")
-            .union(priorFp.join(broadcast(bgk), Seq("fp1", "fp2"))
-              .select("doc_id", "p"))
-            .union(bg.as("a").join(bg.as("b"),
-                col("a.fp1") === col("b.fp1") && col("a.fp2") === col("b.fp2")
-                  && col("b.doc_id") < col("a.doc_id"),
-                "left_semi")
-              .select(col("doc_id"), col("p")))
-            .distinct()
+          val priorFp = CrashReplay.priorSegments(df.sparkSession,
+            s"$store/grams", batchId, fpOnly.schema)
           val wIsl = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-          val spans = matched
+          val spans = suffixProbe(staticIdx, priorFp, bg)
             .withColumn("grp", col("p") - row_number().over(wIsl))
             .groupBy("doc_id", "grp")
             .agg(min(col("p")).as("s0"), max(col("p")).as("s1"))
@@ -1045,38 +826,20 @@ object StreamingQueries {
           // contribution (replay overwrites identically). The two
           // writes are independent (both read the CHECKPOINTED bg) and
           // OVERLAP as concurrent jobs (guide §2.6, round 18) — both
-          // complete before the crash-injection point below, so the
+          // complete before the crash-injection point, so the
           // exactly-once contract is untouched.
           graft.Overlap.par(
             spans.write.mode(SaveMode.Overwrite)
               .parquet(s"$store/spans/b$batchId"),
             fpOnly.write.mode(SaveMode.Overwrite)
               .parquet(s"$store/grams/b$batchId"))
-          if (injectCrash && batchId == 1L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after sink writes, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () } finally q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 1 to REPLAY after restart, saw only " +
-          s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
-      val out = s.read.parquet(s"$store/spans/b*")
-        .orderBy("doc_id", "span_start").localCheckpoint(true)
+        },
+        store => s.read.parquet(s"$store/spans/b*").orderBy("doc_id", "span_start"))
       val n = out.count()
       val nDistinct = out.dropDuplicates("doc_id", "span_start").count()
       require(n == nDistinct,
         s"span log holds $n rows but $nDistinct distinct (doc, start) — " +
           "a replayed batch double-admitted (exactly-once broken)")
-      Seq(ckpt, store).foreach(p => rmTree(new java.io.File(p)))
       out
     }),
 
@@ -1103,56 +866,20 @@ object StreamingQueries {
       val delReq = docs.filter(col("doc_id") % 97 === 13)
         .select(col("doc_id"))
       val expectedDel = delReq.count()
-      val staged = stage(delReq.repartitionByRange(4, col("doc_id")),
-        s"$dir/documents.parquet", s"${stageRoot(dir)}/forget_req")
-      val parts = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L) }
-      val nFiles = parts.length
-      require(nFiles >= 2,
-        s"staged $nFiles parquet files — the batch-1 crash injection " +
-          "needs at least 2 one-file micro-batches")
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/forget_ckpt_$run"
-      val store = s"${stageRoot(dir)}/forget_store_$run"
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      def start(injectCrash: Boolean) = s.readStream.schema(delReq.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
-          df.select("doc_id")
-            .write.mode(SaveMode.Overwrite).parquet(s"$store/tomb/b$batchId")
-          if (injectCrash && batchId == 1L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after tombstone write, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () } finally q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 1 to REPLAY after restart, saw only " +
-          s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
-      val tomb = s.read.parquet(s"$store/tomb/b*").localCheckpoint(true)
+      val staged = stageOrdered(delReq, "doc_id", s"$dir/documents.parquet",
+        s"${stageRoot(dir)}/forget_req")
+      val (tomb, _) = CrashReplay.run(s, "st_forget", staged, delReq.schema,
+          crashAt = Some(1L))(
+        (df, batchId, store) => df.select("doc_id")
+          .write.mode(SaveMode.Overwrite).parquet(s"$store/tomb/b$batchId"),
+        store => s.read.parquet(s"$store/tomb/b*"))
       val nT = tomb.count()
       require(nT == expectedDel,
         s"tombstone log holds $nT rows for $expectedDel requests — " +
           "a replayed batch double-recorded (exactly-once broken)")
-      val out = docs.select(col("doc_id"), md5(col("text")).as("fp"))
+      docs.select(col("doc_id"), md5(col("text")).as("fp"))
         .join(tomb, Seq("doc_id"), "left_anti")
-        .orderBy("doc_id").localCheckpoint(true)
-      Seq(ckpt, store).foreach(p => rmTree(new java.io.File(p)))
-      out
+        .orderBy("doc_id")
     }),
 
     // STREAMING ERASURE OF A SHARED SET ARTIFACT (round 16 — the
@@ -1190,9 +917,6 @@ object StreamingQueries {
         .select(col("doc_id"), col("g")).distinct()
         .select(Seq(col("doc_id"), substring(col("g"), 1, 1).as("c")) ++
           Dedup.gramFp(col("g")): _*)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/suffix_forget_ckpt_$run"
-      val store = s"${stageRoot(dir)}/suffix_forget_store_$run"
       // served base refcount segment — publish-ONCE per (session, dir)
       // like every served index (the st_incremental_dedup
       // corpusFp/corpusBnd rule and the pipe_forget/persistedIvfIndex
@@ -1218,67 +942,53 @@ object StreamingQueries {
       // (deleted doc, owned gram)
       val expectedDecs = docGrams(static.join(broadcast(delReq), "doc_id"))
         .count()
-      val staged = stage(delReq.repartitionByRange(4, col("doc_id")),
-        s"$dir/documents.parquet", s"${stageRoot(dir)}/suffix_forget_req")
-      val parts = Option(new java.io.File(staged).listFiles()).toSeq
-        .flatten.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1700000000000L + i * 60000L) }
-      val nFiles = parts.length
-      require(nFiles >= 2,
-        s"staged $nFiles parquet files — the batch-1 crash injection " +
-          "needs at least 2 one-file micro-batches")
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val batchesSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      def start(injectCrash: Boolean) = s.readStream.schema(delReq.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          batchesSeen.incrementAndGet()
-          val s2 = df.sparkSession
+      val staged = stageOrdered(delReq, "doc_id", s"$dir/documents.parquet",
+        s"${stageRoot(dir)}/suffix_forget_req")
+      val (decs, _) = CrashReplay.run(s, "st_suffix_forget", staged,
+          delReq.schema, crashAt = Some(1L))(
+        { (df, batchId, store) =>
           // the batch's deleted docs' grams — batch-sized work: one
           // broadcast semi of the corpus down to the batch docs, one
           // gram explode of THOSE docs only
-          docGrams(Tables.documents(s2, dir)
+          docGrams(Tables.documents(df.sparkSession, dir)
               .filter(pmod(col("doc_id"), lit(10)) =!= 7)
               .join(broadcast(df.select("doc_id")), "doc_id"))
             .select(col("c"), col("fp1"), col("fp2"), lit(-1L).as("n"))
             .write.mode(SaveMode.Overwrite).parquet(s"$store/dec/b$batchId")
-          if (injectCrash && batchId == 1L) {
-            crashed.set(true)
-            throw new IllegalStateException(
-              "injected crash: after decrement write, before commit-log entry")
-          }
-        }
-        .start()
-      val q1 = start(injectCrash = true)
-      try { q1.processAllAvailable(); () }
-      catch { case _: Exception => () } finally q1.stop()
-      require(crashed.get(), "crash injection never fired — staged file " +
-        "count changed? the recovery contract was not exercised")
-      val q2 = start(injectCrash = false)
-      try q2.processAllAvailable() finally q2.stop()
-      require(batchesSeen.get() >= nFiles + 1L,
-        s"expected batch 1 to REPLAY after restart, saw only " +
-          s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
-      val decs = s.read.parquet(s"$store/dec/b*").localCheckpoint(true)
+        },
+        store => s.read.parquet(s"$store/dec/b*"))
       val nDecs = decs.count()
       require(nDecs == expectedDecs,
         s"decrement log holds $nDecs rows for $expectedDecs " +
           "(doc, gram) pairs — a replayed batch double-decremented " +
           "(over-deletion of co-owned grams)")
-      val out = base.unionByName(decs)
+      base.unionByName(decs)
         .groupBy("c", "fp1", "fp2").agg(sum(col("n")).as("owners"))
         .filter(col("owners") > 0)
         .groupBy("c").agg(count(lit(1)).as("n_grams"))
-        .orderBy("c").localCheckpoint(true)
-      Seq(ckpt, store).foreach(p => rmTree(new java.io.File(p)))
-      out
+        .orderBy("c")
     }),
 
+    // LATE-DATA DROP as a NEGATIVE CONTROL — every other st_* row
+    // stages so that nothing is ever late (that is what makes the
+    // batch SQL the oracle); this row proves the OTHER half of the
+    // watermark contract: data arriving behind the watermark is
+    // DROPPED, exactly and only it. Staging splits the corpus at the
+    // fixed-interval boundary min(ts) + 100 h (computed as a
+    // broadcast agg leg — no driver action — and recomputable in SQL,
+    // unlike a sampled repartitionByRange boundary): the on-time side
+    // stages time-ordered (the st_restart_watermark no-drop
+    // argument), the early quartile stages LAST, arriving when the
+    // watermark sits ~520 h past its newest window — so the streaming
+    // result is the batch aggregate over ts >= boundary, the oracle
+    // verbatim, and a require on numRowsDroppedByWatermark proves the
+    // drop actually fired (a complete-mode or unwatermarked engine
+    // that counts everything flips red on the hash; an engine that
+    // never drops flips red on the require). Update mode + the
+    // by-batch-id store merge, as in st_restart_upsert, on the
+    // crash-replay harness with no crash.
     "st_late_drop" -> ((s, dir) => {
-            val ev = Tables.events(s, dir)
+      val ev = Tables.events(s, dir)
       val staged = s"${stageRoot(dir)}/ev_late_drop"
       if (isStale(staged, s"$dir/events.parquet")) {
         // boundary leg materialized ONCE (1 row) — both filtered
@@ -1320,32 +1030,15 @@ object StreamingQueries {
           new java.io.File(staged, "_SUCCESS").toPath, Array.emptyByteArray)
         ()
       }
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${stageRoot(dir)}/latedrop_ckpt_$run"
-      val store = s"${stageRoot(dir)}/latedrop_store_$run"
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          Agg.dsum(col("value")).as("sum_value"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.select(col("window").getField("start").as("hour"),
-              col("event_type"), col("n_events"), col("sum_value"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode(SaveMode.Overwrite).parquet(s"$store/b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val dropped = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum
-      require(dropped > 0L,
+      val (out, progress) = CrashReplay.run(s, "st_late_drop", staged,
+          ev.schema, crashAt = None, "update",
+          d => hourlyCounts(d.withWatermark("ts", "30 minutes")))(
+        upsertSink, latestByBatch(s, _))
+      require(progress.flatMap(_.stateOperators.toSeq)
+          .map(_.numRowsDroppedByWatermark).sum > 0L,
         "no row was ever dropped by the watermark — the late staging " +
           "never exercised the drop path, the control is void")
-      latestByBatch(s, store)
+      out
     })
   )
 

@@ -68,7 +68,7 @@ class Round16OpsSpec extends AnyFunSuite {
     // the staged dir the row itself uses at this sf
     SparkEntry.queries("st_restart_watermark")(spark, sf).count()
     val staged = new java.io.File(
-      s"/tmp/graft_stream_${sf.replaceAll("[^A-Za-z0-9]", "_")}/ev_restart_wm")
+      s"${graft.streaming.StreamingQueries.stageRoot(sf)}/ev_restart_wm")
     assert(staged.exists(), s"staged dir missing: $staged")
     val parts = staged.listFiles().filter(_.getName.endsWith(".parquet"))
       .sortBy(_.getName)

@@ -39,9 +39,7 @@ class SuffixForgetSpec extends AnyFunSuite {
     assert(audit(0).getAs[Long]("rows_removed") > 0L,
       "fixture vacuous: the delete slice removed no grams at sf0.001")
 
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_forget_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark).take(8)
+    val root = Dedup.forgetRoot(spark, dir)
     val idx = spark.read.parquet(s"$root/suffix_grams")
 
     val docs = Tables.documents(spark, dir)
