@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   *    the JVM lifetime (keying by the session UUID string, not the
   *    session object, keeps the KEY itself from pinning anything;
   *    dropping the value lets the ContextCleaner reap checkpoint
-  *    blocks);
+  *    blocks), and deletes the session-scope files those entries
+  *    point at ([[Scratch.session]]);
   *  - a blunt [[MaxEntries]] bound (clear-all on overflow) backstops
   *    pathological many-session/many-dir JVMs — these caches hold
   *    O(10) entries in any sane run, so hitting the bound at all
@@ -60,9 +61,12 @@ object CacheRegistry {
   def invalidate(pathPrefix: String): Unit =
     caches.forEach(_.keySet.removeIf(_._2.startsWith(pathPrefix)))
 
-  /** Drop a session's entries across all registered caches. */
+  /** Drop a session's entries across all registered caches and
+    * delete its session-scope files.
+    */
   def invalidateSession(spark: SparkSession): Unit = {
     val u = uuidOf(spark)
     caches.forEach(_.keySet.removeIf(_._1 == u))
+    Scratch.dropSession(spark)
   }
 }

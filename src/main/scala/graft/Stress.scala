@@ -100,7 +100,7 @@ object Stress {
     // 2-3 s warm, which bends every fitted exponent down
     warm(spark, src, queries)
     factors.foreach { f =>
-      val dst = java.nio.file.Files.createTempDirectory(s"graft_curve_$f").toString
+      val dst = Scratch.temp(s"graft_curve_$f")
       amplify(spark, src, dst, f, "documents", Seq("doc_id"))
       amplify(spark, src, dst, f, "embeddings", Seq("vec_id"))
       // part amplifies with CONTIGUOUS key offsets (i·|part|, not the
@@ -193,7 +193,7 @@ object Stress {
         "mm_pgm_equalize", "dd_cluster_agreement",
         "dd_cluster_weakest_link", "pipe_rebalance_plan")
     val src = "/root/testdata/sf0.1"
-    val dst = java.nio.file.Files.createTempDirectory("graft_stress").toString
+    val dst = Scratch.temp("graft_stress")
     amplify(spark, src, dst, factor, "documents", Seq("doc_id"))
     amplify(spark, src, dst, factor, "embeddings", Seq("vec_id"))
     amplify(spark, src, dst, factor, "lineitem", Seq("l_orderkey"))

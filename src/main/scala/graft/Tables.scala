@@ -80,10 +80,11 @@ object Tables {
     CacheRegistry.invalidate(pathPrefix)
   }
 
-  /** Drop a session's cached handles and derived artifacts (call when
-    * done with a session so its resolved file indexes are not pinned
-    * for the JVM lifetime). The JVM-wide schemas stay: the next
-    * session reuses them.
+  /** Drop a session's cached handles and derived artifacts, and delete
+    * its session-scope files ([[Scratch]]). Call when done with a
+    * session, after the last action on its frames, so its resolved
+    * file indexes are not pinned for the JVM lifetime. The JVM-wide
+    * schemas stay: the next session reuses them.
     */
   def invalidateSession(spark: SparkSession): Unit =
     CacheRegistry.invalidateSession(spark)

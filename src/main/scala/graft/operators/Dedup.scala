@@ -250,15 +250,11 @@ object Dedup {
         (col("eq").cast("double") / OphBuckets).as("est_jaccard"))
   }
 
-  /** Where pipe_forget publishes its post-forget artifacts for `dir`.
-    * Scoped by SESSION UUID (round-15 advice): keyed by dir alone, two
-    * concurrent JVMs over the same testdata race overwrite-vs-read on
-    * the published "after" artifacts.
+  /** Where pipe_forget publishes its post-forget artifacts for `dir`
+    * (session scope, [[graft.Scratch.session]]).
     */
   private[graft] def forgetRoot(s: SparkSession, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_forget_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s).take(8)
+    graft.Scratch.session(s, dir, "forget")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -1751,8 +1747,7 @@ object Dedup {
   private val suffixIndexCache = graft.CacheRegistry.newCache()
   private[graft] def publishedSuffixGramIndex(s: SparkSession, dir: String): String =
     graft.CacheRegistry.cached[String](suffixIndexCache, s, dir, "suffixGramIdx") {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_suffix_index_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val root = graft.Scratch.session(s, dir, "suffix_index")
       suffixGramsOf(
           Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(10)) =!= 7),
           SuffixSpanL)
@@ -2196,15 +2191,6 @@ object Dedup {
 
   private val toksSql = OracleSql.toks
 
-  /** DuckDB mirror of `conv(substring(h, start, len), 16, 10)` — the
-    * positional nibble-decode idiom (see SketchQueries.hexLong).
-    */
-  private def hexLongSql(h: String, start: Int, len: Int): String =
-    (0 until len).map { i =>
-      val pow = Math.pow(16.0, (len - 1 - i).toDouble).toLong
-      s"(strpos('0123456789abcdef', substring($h, ${start + i}, 1)) - 1)::BIGINT * $pow"
-    }.mkString("(", " + ", ")")
-
   /** DuckDB mirror of [[ophSignaturesOf]] as a self-contained
     * WITH…SELECT (nestable in parens): (doc_id, bucket, sig,
     * src_dist).
@@ -2212,7 +2198,7 @@ object Dedup {
   private def ophSqlFrom(src: String): String =
     s"""WITH oph_sh AS (${shinglesSqlFrom(src)}),
        |oph_hv AS (SELECT doc_id,
-       |         ${hexLongSql("md5(shingle)", 1, 8)} AS h
+       |         ${OracleSql.hexLong("md5(shingle)", 1, 8)} AS h
        |       FROM oph_sh),
        |oph_ne AS MATERIALIZED (
        |  SELECT doc_id, CAST(h % $OphBuckets AS INT) AS bucket,
@@ -2456,7 +2442,7 @@ object Dedup {
     "dd_exact" ->
       """SELECT md5(text) AS fp, count(*) AS n_docs, min(doc_id) AS keep_id
         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
-    // Top-32-bits-of-md5 decode = hexLongSql over the first 8 hex
+    // Top-32-bits-of-md5 decode = OracleSql.hexLong over the first 8 hex
     // chars — the exact dual of shiftrightunsigned(hl[0], 32).
     "dd_oph_minhash" ->
       s"""SELECT * FROM (${ophSqlFrom("documents")})
@@ -2808,7 +2794,7 @@ object Dedup {
          |  WHERE len(t) >= 3),
          |g AS (
          |  SELECT doc_id, pos,
-         |    ${hexLongSql("hh", 1, 10)} * 1048576 + (1048575 - pos) AS key
+         |    ${OracleSql.hexLong("hh", 1, 10)} * 1048576 + (1048575 - pos) AS key
          |  FROM wg),
          |p AS (
          |  SELECT doc_id, pos, key,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.{PgmCodec, WavCodec}
 
 /** Multimodal-column plumbing: media treated as opaque `binary`
@@ -167,7 +167,7 @@ object Multimodal {
   private def phashHashesFromFiles(s: SparkSession, dir: String): DataFrame =
     graft.CacheRegistry.cached[DataFrame](phashCache, s, dir, "phashHashes") {
       import s.implicits._
-      val out = tmp("png_all_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
+      val out = Scratch.process(dir, "png_all")
       ensureLandingOnce(s, dir, out) {
         landFiles(s, dir, out, "true", "png")(b =>
           graft.functions.PngCodec.encode(PgmCodec.decode(PgmCodec.encode(b))))
@@ -223,14 +223,6 @@ object Multimodal {
       .filter(col("hamming") <= 3)
       .distinct()
   }
-
-  /** Per-process landing root for the real-file leg (the
-    * SourceQueries.tmp pattern: unique per JVM so concurrent runs
-    * can't race each other's overwrite-then-read).
-    */
-  private val runId = java.util.UUID.randomUUID().toString.take(8)
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mm_$runId/$name"
 
   /** Subset predicate for the real-file leg: ~1/8 of the corpus by
     * md5 prefix (78 files at sf0.01, 659 at sf0.1) — enough to carry
@@ -311,32 +303,13 @@ object Multimodal {
       }
   }
 
-  /** Sidecar path of the JPEG landing the CURRENT process last built
-    * — read by [[oracleSql]] at dump time (graft.Verify runs every
-    * query, which sets this, BEFORE dumping oracle_sql.json), so the
-    * driver's DuckDB gate compares the fresh decode against the
-    * landing-time pin instead of skipping the row. The default is a
-    * nonexistent path so a dump taken without running the query fails
-    * loudly in DuckDB rather than silently passing.
-    */
-  private val jpegSidecar = new java.util.concurrent.atomic.AtomicReference[String](
-    "/graft_jpeg_sidecar_never_landed")
-
-  /** PNG landing dir the CURRENT process last built — same
-    * dump-time-assembly contract as [[jpegSidecar]]: the
-    * mm_png_chunks oracle re-walks these exact files in DuckDB, and
-    * the never-landed default makes a query-less dump fail loudly.
-    */
-  private val pngChunkLanding = new java.util.concurrent.atomic.AtomicReference[String](
-    "/graft_png_landing_never_landed")
-
   /** Ensure the shared real-PNG subset landing exists (idempotent,
     * once per (session, dir)) and return its path — ONE definition of
     * the dir/predicate/encode chain so mm_png_files and mm_png_chunks
     * provably walk the same files.
     */
   private def pngSubsetLanding(s: SparkSession, dir: String): String = {
-    val out = tmp("png_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
+    val out = Scratch.process(dir, "png")
     ensureLandingOnce(s, dir, out) {
       landFiles(s, dir, out, PngSubsetPred, "png")(b =>
         graft.functions.PngCodec.encode(PgmCodec.decode(PgmCodec.encode(b))))
@@ -463,7 +436,7 @@ object Multimodal {
     // formula. Same idempotent-landing discipline as the PNG leg.
     "mm_wav_files" -> ((s, dir) => {
       import s.implicits._
-      val out = tmp("wav_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
+      val out = Scratch.process(dir, "wav")
       ensureLandingOnce(s, dir, out) {
         landFiles(s, dir, out, PngSubsetPred, "wav")(WavCodec.encode(_))
       }
@@ -510,8 +483,7 @@ object Multimodal {
     // dims. Narrow per-file map over the shared idempotent landing.
     "mm_png_chunks" -> ((s, dir) => {
       import s.implicits._
-      val out = pngSubsetLanding(s, dir)
-      pngChunkLanding.set(out)
+      val out = Scratch.pin("mm_png_chunks", pngSubsetLanding(s, dir))
       s.read.format("binaryFile").load(out)
         .select(regexp_extract(col("path"), "(\\d+)\\.png$", 1)
             .cast("long").as("doc_id"),
@@ -599,14 +571,14 @@ object Multimodal {
     // stay codec-defined; the error-bound ScalaTests
     // (MultimodalJpegSpec) still pin plausibility.
     "mm_decode_jpeg" -> ((s, dir) => {
-      val out = tmp("jpeg_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
+      val out = Scratch.process(dir, "jpeg")
       ensureLandingOnce(s, dir, out) {
         landFiles(s, dir, out, PngSubsetPred, "jpg")(b =>
           graft.functions.JpegCodec.encode(PgmCodec.decode(PgmCodec.encode(b))))
         jpegDecodeFromFiles(s, dir, out).write.mode("overwrite")
           .parquet(out + "_sidecar")
       }
-      jpegSidecar.set(out + "_sidecar")
+      Scratch.pin("mm_decode_jpeg", out + "_sidecar")
       jpegDecodeFromFiles(s, dir, out).orderBy("doc_id")
     }),
 
@@ -2298,14 +2270,17 @@ object Multimodal {
   )
 
   /** Assembled at ACCESS time: mm_decode_jpeg's oracle reads the
-    * landing-time sidecar parquet THIS process pinned ([[jpegSidecar]]
-    * — graft.Verify runs every query, which sets it, before dumping
-    * oracle_sql.json), joined against arithmetic dims from the
-    * documents table. DuckDB's `read_parquet` takes the absolute
-    * path; everything else stays on the bare table views.
+    * landing-time sidecar parquet THIS process pinned
+    * ([[graft.Scratch.pin]] — graft.Verify runs every query, which
+    * pins it, before dumping oracle_sql.json), joined against
+    * arithmetic dims from the documents table; mm_png_chunks' oracle
+    * re-walks the pinned PNG landing. A dump taken without running
+    * the query names a nonexistent path and fails loudly in DuckDB.
+    * DuckDB's `read_parquet` takes the absolute path; everything else
+    * stays on the bare table views.
     */
   def oracleSql: Map[String, String] = staticOracleSql + ("mm_decode_jpeg" ->
-    s"""WITH sc AS (SELECT * FROM read_parquet('${jpegSidecar.get()}/*.parquet')),
+    s"""WITH sc AS (SELECT * FROM read_parquet('${Scratch.pinned("mm_decode_jpeg")}/*.parquet')),
        |sub AS (SELECT doc_id, greatest(1, (length(text) + 7) // 8) AS h
        |        FROM documents WHERE $PngSubsetPredSql)
        |SELECT d.doc_id, sc.n_jpeg_bytes, CAST(8 AS INT) AS width,
@@ -2324,7 +2299,7 @@ object Multimodal {
        |  SELECT CAST(regexp_extract(filename, '(\\d+)\\.png$$', 1) AS BIGINT)
        |      AS doc_id,
        |    hex(content) AS hx, size AS n_bytes
-       |  FROM read_blob('${pngChunkLanding.get()}/shard=*/*.png')),
+       |  FROM read_blob('${Scratch.pinned("mm_png_chunks")}/shard=*/*.png')),
        |walk AS (
        |  SELECT doc_id, hx, n_bytes, CAST(8 AS BIGINT) AS off,
        |    CAST(0 AS BIGINT) AS n_chunks, CAST(0 AS BIGINT) AS n_idat,

@@ -204,18 +204,19 @@ object Similarity {
 
   /** On-disk IVF index root for `dir` — parquet index tables, the
     * local stand-in for the index bucket/catalog a 100 TB deployment
-    * serves from. Anchored to an ABSOLUTE base (the
-    * `graft.index.root` system property, else the JVM tmpdir — the
-    * StreamingQueries.stageRoot convention) so the published-index
-    * location cannot depend on the launching process's CWD: a search
-    * row run from a different working directory than the build row
-    * must find the same published tables, not silently retrain a
-    * second copy.
+    * serves from. Session scope ([[graft.Scratch.session]]): an
+    * absolute path whatever the launching CWD, published once per
+    * (session, dir) through the memo and deleted with its entries.
     */
-  private[graft] def indexRoot(dir: String): String =
-    sys.props.getOrElse("graft.index.root",
-      s"${System.getProperty("java.io.tmpdir")}/graft_index") +
-      "/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
+  private[graft] def indexRoot(s: SparkSession, dir: String): String =
+    graft.Scratch.session(s, dir, "graft_index")
+
+  /** A published assignment segment of the index at `root`, read back
+    * with its partition column restored to the cell id's width.
+    */
+  private def seg(s: SparkSession, root: String, name: String): DataFrame =
+    s.read.parquet(s"$root/$name")
+      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
 
   /** Round-13 verdict #4 — the ANN index persistence lifecycle. Write
     * the trained index as PARQUET TABLES: the long-format coarse
@@ -230,7 +231,7 @@ object Similarity {
     * so a read-back search is row-identical to an in-session one.
     */
   private def writeIvfIndex(s: SparkSession, dir: String): String = {
-    val root = indexRoot(dir)
+    val root = indexRoot(s, dir)
     // Two independent lanes, overlapped as concurrent jobs (guide
     // §2.6, round 18): the coarse lane (Lloyd → centroids write →
     // assignment write) and the PQ lane (PQ Lloyd → codebook write)
@@ -274,11 +275,8 @@ object Similarity {
     * no Lloyd anywhere in the returned frame's lineage (the partition
     * column comes back as the pruning key; cast restores its width).
     */
-  private def persistedAssignment(s: SparkSession, dir: String): DataFrame = {
-    val root = persistedIvfIndex(s, dir)
-    s.read.parquet(s"$root/assignments")
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-  }
+  private def persistedAssignment(s: SparkSession, dir: String): DataFrame =
+    seg(s, persistedIvfIndex(s, dir), "assignments")
 
   /** Rebalance alarm threshold for ss_ivf_admit, in ppm of the mean
     * post-admission occupancy: a cell past 2× mean flags — the point
@@ -512,9 +510,7 @@ object Similarity {
   private[graft] def writeRebalanceQ(
       s: SparkSession, dir: String): (DataFrame, Int) = {
     val root = publishDeltaSegment(s, dir)
-    def seg(name: String) = s.read.parquet(s"$root/$name")
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-    val baseAsg = seg("assignments").unionByName(seg("assignments_delta"))
+    val baseAsg = seg(s, root, "assignments").unionByName(seg(s, root, "assignments_delta"))
     // all vectors' micro dims (base + delta transform); only the worst
     // cell's slice is ever materialized per round via the semi-join
     val dimsAll = kmDims(s, dir).unionByName(admitDeltaDims(s, dir))
@@ -534,7 +530,7 @@ object Similarity {
         // final sub-cell means over the PUBLISHED membership (each
         // vector lives in exactly one final cell, so the end-state
         // mean equals the per-round accumulation)
-        val rb = seg("assignments_q").localCheckpoint(false)
+        val rb = seg(s, root, "assignments_q").localCheckpoint(false)
         val live = rb.select("cent_id").distinct()
         val ncent = dimsAll.join(rb.filter(col("cent_id") > trainedMax), "vec_id")
           .groupBy("cent_id", "dim")
@@ -546,7 +542,7 @@ object Similarity {
           .join(live, Seq("cent_id"), "left_semi")
           .unionByName(ncent)
           .write.mode("overwrite").parquet(s"$root/centroids_q")
-        seg("assignments_q")
+        seg(s, root, "assignments_q")
       }
     val cells = finalAsg.groupBy("cent_id").agg(count(lit(1)).as("n_total"))
       .localCheckpoint(false)
@@ -623,9 +619,7 @@ object Similarity {
   private[graft] def writeRebalanceMQ(
       s: SparkSession, dir: String): (DataFrame, Int, Int) = {
     val root = publishDeltaSegment(s, dir)
-    def seg(name: String) = s.read.parquet(s"$root/$name")
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-    val baseAsg = seg("assignments").unionByName(seg("assignments_delta"))
+    val baseAsg = seg(s, root, "assignments").unionByName(seg(s, root, "assignments_delta"))
     val dimsAll = kmDims(s, dir).unionByName(admitDeltaDims(s, dir))
       .select(col("vec_id"), col("dim"),
         floor(col("x") * lit(1000000.0)).cast("long").as("xm"))
@@ -693,7 +687,7 @@ object Similarity {
       else {
         asg.write.mode("overwrite").partitionBy("cent_id")
           .parquet(s"$root/assignments_mq")
-        val rb = seg("assignments_mq").localCheckpoint(false)
+        val rb = seg(s, root, "assignments_mq").localCheckpoint(false)
         val live = rb.select("cent_id").distinct()
         val ncent = dimsAll.join(rb.filter(col("cent_id") > trainedMax), "vec_id")
           .groupBy("cent_id", "dim")
@@ -705,7 +699,7 @@ object Similarity {
           .join(live, Seq("cent_id"), "left_semi")
           .unionByName(ncent)
           .write.mode("overwrite").parquet(s"$root/centroids_mq")
-        seg("assignments_mq")
+        seg(s, root, "assignments_mq")
       }
     val cells = finalAsg.groupBy("cent_id").agg(count(lit(1)).as("n_total"))
       .localCheckpoint(false)
@@ -1392,12 +1386,10 @@ object Similarity {
     // admit row reported — the merge must lose and invent nothing.
     "ss_ivf_compact" -> ((s, dir) => {
       val root = publishDeltaSegment(s, dir)
-      def seg(name: String) = s.read.parquet(s"$root/$name")
-        .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-      seg("assignments").unionByName(seg("assignments_delta"))
+      seg(s, root, "assignments").unionByName(seg(s, root, "assignments_delta"))
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/assignments_compacted")
-      seg("assignments_compacted")
+      seg(s, root, "assignments_compacted")
         .groupBy("cent_id").agg(count(lit(1)).as("n_total"))
         .orderBy("cent_id")
     }),
@@ -1416,16 +1408,14 @@ object Similarity {
     // incomplete erasure cannot pass.
     "ss_ivf_forget" -> ((s, dir) => {
       val root = publishDeltaSegment(s, dir)
-      def seg(name: String) = s.read.parquet(s"$root/$name")
-        .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-      val both = seg("assignments").unionByName(seg("assignments_delta"))
+      val both = seg(s, root, "assignments").unionByName(seg(s, root, "assignments_delta"))
       // delete predicate: the raw slice and its +10⁶ admitted re-key
       val deleted = (col("vec_id") % 97 === 13) ||
         ((col("vec_id") - lit(1000000L)) % 97 === 13 &&
           col("vec_id") >= lit(1000000L))
       both.filter(!deleted).write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/assignments_forgotten")
-      val survivors = seg("assignments_forgotten")
+      val survivors = seg(s, root, "assignments_forgotten")
       val forgot = both.filter(deleted)
         .groupBy("cent_id").agg(count(lit(1)).as("n_forgotten"))
       survivors.groupBy("cent_id").agg(
@@ -1456,10 +1446,8 @@ object Similarity {
     "ss_ivf_search_v2" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val root = rebalancedIndexRoot(s, dir)
-      def seg(name: String) = s.read.parquet(s"$root/$name")
-        .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-      val split = seg("assignments_split")
-      val v2asg = seg("assignments").unionByName(seg("assignments_delta"))
+      val split = seg(s, root, "assignments_split")
+      val v2asg = seg(s, root, "assignments").unionByName(seg(s, root, "assignments_delta"))
         .join(split.select("vec_id"), Seq("vec_id"), "left_anti")
         .unionByName(split)
       val vBase = Tables.embeddings(s, dir)

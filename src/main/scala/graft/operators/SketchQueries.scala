@@ -732,14 +732,6 @@ object SketchQueries {
     })
   )
 
-  /** DuckDB mirror of `conv(substring(h, start, len), 16, 10)`: the
-    * dd_simhash nibble-decode idiom, generalized — a positional sum of
-    * strpos-decoded nibbles (BIGINT-cast so 13-nibble powers up to
-    * 16¹² stay exact).
-    */
-  private[operators] def hexLong(h: String, start: Int, len: Int): String =
-    OracleSql.hexLong(h, start, len) // one shared idiom (round-12 ADVICE)
-
   /** Shared oracle CTE: word-3-gram shingles with multiplicity (the
     * non-DISTINCT sibling of Dedup's shingle CTE) and their digest.
     */
@@ -754,9 +746,9 @@ object SketchQueries {
   /** Shared oracle CTE on top of `w`: per-token (reg, rho). */
   private val regRhoSql =
     s"""rr AS (
-       |  SELECT ${hexLong("h", 1, 2)}::INT AS reg,
+       |  SELECT ${OracleSql.hexLong("h", 1, 2)}::INT AS reg,
        |    CASE WHEN v = 0 THEN 53 ELSE 53 - length(bin(v)) END::INT AS rho
-       |  FROM (SELECT h, ${hexLong("h", 3, 13)} AS v FROM w))""".stripMargin
+       |  FROM (SELECT h, ${OracleSql.hexLong("h", 3, 13)} AS v FROM w))""".stripMargin
 
   /** Occupied registers → the estimate row (mirror of [[hllEstimate]]). */
   private val estimateSql =
@@ -794,9 +786,9 @@ object SketchQueries {
          |    md5(CAST(user_id AS VARCHAR)) AS h, user_id
          |  FROM events),
          |rr AS (
-         |  SELECT hour, ${hexLong("h", 1, 2)}::INT AS reg,
+         |  SELECT hour, ${OracleSql.hexLong("h", 1, 2)}::INT AS reg,
          |    CASE WHEN v = 0 THEN 53 ELSE 53 - length(bin(v)) END::INT AS rho
-         |  FROM (SELECT hour, h, ${hexLong("h", 3, 13)} AS v FROM ev)),
+         |  FROM (SELECT hour, h, ${OracleSql.hexLong("h", 3, 13)} AS v FROM ev)),
          |hourly AS (SELECT hour, reg, max(rho) AS rho FROM rr GROUP BY 1, 2),
          |hours AS (SELECT DISTINCT hour FROM ev),
          |merged AS (
@@ -844,9 +836,9 @@ object SketchQueries {
     // one-pass scale form (row-identical)
     "sk_cms_sliding" -> {
       val evCells = (0 until CmsRows).map(i =>
-        s"{'r': $i, 'b': ${hexLong("h", i + 1, 1)}::INT}").mkString(", ")
+        s"{'r': $i, 'b': ${OracleSql.hexLong("h", i + 1, 1)}::INT}").mkString(", ")
       val probeCells = (0 until CmsRows).map(i =>
-        s"{'r': $i, 'b': ${hexLong("md5(key)", i + 1, 1)}::INT}").mkString(", ")
+        s"{'r': $i, 'b': ${OracleSql.hexLong("md5(key)", i + 1, 1)}::INT}").mkString(", ")
       s"""WITH ev AS (
          |  SELECT date_trunc('hour', ts) AS hour,
          |    json_extract_string(props, '$$.k') AS key
@@ -901,7 +893,7 @@ object SketchQueries {
          |cells AS (
          |  SELECT cell.r AS r, cell.b AS b, count(*)::BIGINT AS c FROM (
          |    SELECT unnest([${(0 until CmsRows).map(i =>
-               s"{'r': $i, 'b': ${hexLong("h", i + 1, 1)}::INT}").mkString(", ")}]) AS cell
+               s"{'r': $i, 'b': ${OracleSql.hexLong("h", i + 1, 1)}::INT}").mkString(", ")}]) AS cell
          |    FROM w)
          |  GROUP BY 1, 2),
          |top AS (
@@ -910,7 +902,7 @@ object SketchQueries {
          |probe AS (
          |  SELECT key, exact_cnt, cell.r AS r, cell.b AS b FROM (
          |    SELECT key, exact_cnt, unnest([${(0 until CmsRows).map(i =>
-               s"{'r': $i, 'b': ${hexLong("md5(key)", i + 1, 1)}::INT}").mkString(", ")}]) AS cell
+               s"{'r': $i, 'b': ${OracleSql.hexLong("md5(key)", i + 1, 1)}::INT}").mkString(", ")}]) AS cell
          |    FROM top))
          |SELECT p.key, p.exact_cnt, min(c.c)::BIGINT AS est_cnt
          |FROM probe p JOIN cells c ON c.r = p.r AND c.b = p.b
@@ -923,13 +915,13 @@ object SketchQueries {
          |    SELECT unnest(${OracleSql.toks}) AS key FROM documents))
          |SELECT cell.r AS r, cell.b AS b, count(*)::BIGINT AS c FROM (
          |  SELECT unnest([${(0 until CmsRows).map(i =>
-             s"{'r': $i, 'b': ${hexLong("h", i + 1, 1)}::INT}").mkString(", ")}]) AS cell
+             s"{'r': $i, 'b': ${OracleSql.hexLong("h", i + 1, 1)}::INT}").mkString(", ")}]) AS cell
          |  FROM w)
          |GROUP BY 1, 2 ORDER BY r, b""".stripMargin,
     "sk_kmv_intersect" -> {
       def halfSql(name: String, cond: String) =
         s"""$name AS (
-           |  SELECT DISTINCT ${hexLong("md5(key)", 1, 13)} AS hv FROM (
+           |  SELECT DISTINCT ${OracleSql.hexLong("md5(key)", 1, 13)} AS hv FROM (
            |    SELECT array_to_string(list_slice(t, i, i + 2), ' ') AS key
            |    FROM (SELECT ${OracleSql.toks} AS t FROM documents
            |          WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) $cond),
@@ -961,7 +953,7 @@ object SketchQueries {
     "sk_theta_diff" -> {
       def halfSql(name: String, cond: String) =
         s"""$name AS (
-           |  SELECT DISTINCT ${hexLong("md5(key)", 1, 13)} AS hv FROM (
+           |  SELECT DISTINCT ${OracleSql.hexLong("md5(key)", 1, 13)} AS hv FROM (
            |    SELECT array_to_string(list_slice(t, i, i + 2), ' ') AS key
            |    FROM (SELECT ${OracleSql.toks} AS t FROM documents
            |          WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) $cond),
@@ -1000,7 +992,7 @@ object SketchQueries {
            |    WHERE len(t) >= 3))""".stripMargin
       def posList(keyExpr: String) =
         (0 until BloomHashes).map(i =>
-          s"${hexLong(s"md5($keyExpr)", 4 * i + 1, 4)}").mkString("[", ", ", "]")
+          s"${OracleSql.hexLong(s"md5($keyExpr)", 4 * i + 1, 4)}").mkString("[", ", ", "]")
       s"""WITH ${halfSql("a", "< '8'")},
          |${halfSql("b", ">= '8'")},
          |bits AS (
@@ -1026,7 +1018,7 @@ object SketchQueries {
         s"""$name AS (
            |  SELECT cell.r AS r, cell.b AS b, count(*)::BIGINT AS c FROM (
            |    SELECT unnest([${(0 until CmsRows).map(i =>
-                 s"{'r': $i, 'b': ${hexLong(s"md5(CAST($key AS VARCHAR))", i + 1, 1)}::INT}")
+                 s"{'r': $i, 'b': ${OracleSql.hexLong(s"md5(CAST($key AS VARCHAR))", i + 1, 1)}::INT}")
                  .mkString(", ")}]) AS cell
            |    FROM $table)
            |  GROUP BY 1, 2)""".stripMargin
@@ -1124,7 +1116,7 @@ object SketchQueries {
          |ORDER BY qpct""".stripMargin,
     "sk_kmv_distinct" ->
       s"""WITH $wordsSql,
-         |hv AS (SELECT DISTINCT ${hexLong("h", 1, 13)} AS hv FROM w),
+         |hv AS (SELECT DISTINCT ${OracleSql.hexLong("h", 1, 13)} AS hv FROM w),
          |kth AS (
          |  SELECT count(*)::BIGINT AS k, max(hv)::BIGINT AS kth_hash
          |  FROM (SELECT hv FROM hv ORDER BY hv LIMIT $KmvK)),

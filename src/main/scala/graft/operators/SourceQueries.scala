@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Source-format coverage beyond parquet: CSV and JSON read paths,
   * oracle-checked end-to-end. Each query round-trips a small dimension
@@ -21,21 +21,25 @@ import graft.Tables
   */
 object SourceQueries {
 
-  // Per-process path segment: two concurrent JVMs (e.g. parallel CI
-  // jobs) must not race each other's Overwrite-then-read on a shared
-  // fixed directory; within one process reps reuse the same path.
-  private val runId = java.util.UUID.randomUUID().toString.take(8)
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_src_$runId/$name"
+  // Every landing is process scope (graft.Scratch.process): two
+  // concurrent JVMs (e.g. parallel CI jobs) must not race each other's
+  // Overwrite-then-read on a shared fixed directory; within one
+  // process reps reuse the same path.
 
-  /** Landing path of the parquet-metadata fixture the CURRENT process
-    * last wrote — read by [[oracleSql]] at dump time (the
-    * mm_decode_jpeg sidecar discipline).
+  /** Land the documents table as 8 hash-partitioned parquet files once
+    * per (session, dir), pin it as the landing [[oracleSql]] reads at
+    * dump time (the mm_decode_jpeg sidecar discipline) and return it.
     */
-  private val pqMetaLanding =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/graft_pqmeta_never_landed")
   private val pqMetaCache = graft.CacheRegistry.newCache()
+  private def pqMetaLanding(s: SparkSession, dir: String): String =
+    Scratch.pin("pq_meta", graft.CacheRegistry.cached[String](
+        pqMetaCache, s, dir, "pqMetaLanding") {
+      val p = Scratch.process(dir, "docs_pq_meta")
+      Tables.documents(s, dir)
+        .repartition(8, col("doc_id"))
+        .write.mode(SaveMode.Overwrite).parquet(p)
+      p
+    })
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -54,16 +58,7 @@ object SourceQueries {
     // publication. Hash repartition makes the file assignment
     // deterministic; file identity is the part-NNNNN prefix.
     "src_parquet_meta" -> ((s, dir) => {
-      val out = graft.CacheRegistry.cached[String](
-          pqMetaCache, s, dir, "pqMetaLanding") {
-        val p = tmp("docs_pq_meta_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-        Tables.documents(s, dir)
-          .repartition(8, col("doc_id"))
-          .write.mode(SaveMode.Overwrite).parquet(p)
-        p
-      }
-      pqMetaLanding.set(out)
-      s.read.parquet(out)
+      s.read.parquet(pqMetaLanding(s, dir))
         .groupBy(regexp_extract(input_file_name(), "part-[0-9]+", 0)
           .as("file"))
         .agg(count(lit(1)).as("n_rows"),
@@ -82,16 +77,7 @@ object SourceQueries {
     // statistics from the footers and folds them per file — equality
     // says the skipping substrate tells the truth.
     "src_parquet_stats" -> ((s, dir) => {
-      val out = graft.CacheRegistry.cached[String](
-          pqMetaCache, s, dir, "pqMetaLanding") {
-        val p = tmp("docs_pq_meta_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-        Tables.documents(s, dir)
-          .repartition(8, col("doc_id"))
-          .write.mode(SaveMode.Overwrite).parquet(p)
-        p
-      }
-      pqMetaLanding.set(out)
-      s.read.parquet(out)
+      s.read.parquet(pqMetaLanding(s, dir))
         .groupBy(regexp_extract(input_file_name(), "part-[0-9]+", 0)
           .as("file"))
         .agg(min(col("n_chars")).cast("long").as("min_chars"),
@@ -104,7 +90,7 @@ object SourceQueries {
     // CSV: header + quoted commas (n_comment contains free text).
     "src_csv_roundtrip" -> ((s, dir) => {
       val base = Tables.nation(s, dir)
-      val path = tmp("nation_csv")
+      val path = Scratch.process(dir, "nation_csv")
       base.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
       s.read.schema(base.schema).option("header", "true").csv(path)
         .orderBy("n_nationkey")
@@ -128,7 +114,7 @@ object SourceQueries {
     "src_csv_malformed" -> ((s, dir) => {
       import org.apache.spark.sql.types._
       val corruptPred = "substring(md5(CAST(doc_id AS STRING)), 1, 4) < '2000'"
-      val path = tmp("docs_badcsv")
+      val path = Scratch.process(dir, "docs_badcsv")
       Tables.documents(s, dir)
         .select(concat(
           when(expr(corruptPred), lit("X")).otherwise(lit("")),
@@ -167,7 +153,7 @@ object SourceQueries {
     // is value-exact and the oracle is the plain table read.
     "src_orc_roundtrip" -> ((s, dir) => {
       val base = Tables.supplier(s, dir)
-      val path = tmp("supplier_orc")
+      val path = Scratch.process(dir, "supplier_orc")
       base.write.mode(SaveMode.Overwrite).orc(path)
       s.read.schema(base.schema).orc(path)
         .orderBy("s_suppkey")
@@ -182,7 +168,7 @@ object SourceQueries {
     // table read.
     "src_xml_roundtrip" -> ((s, dir) => {
       val base = Tables.nation(s, dir)
-      val path = tmp("nation_xml")
+      val path = Scratch.process(dir, "nation_xml")
       base.write.mode(SaveMode.Overwrite)
         .option("rootTag", "nations").option("rowTag", "nation").xml(path)
       s.read.schema(base.schema).option("rowTag", "nation").xml(path)
@@ -201,7 +187,7 @@ object SourceQueries {
     "src_schema_evolution" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val h = substring(md5(col("doc_id").cast("string")), 1, 4)
-      val path = tmp("docs_evo")
+      val path = Scratch.process(dir, "docs_evo")
       docs.filter(h < "8000").select("doc_id", "lang")
         .write.mode(SaveMode.Overwrite).parquet(s"$path/v=1")
       docs.filter(h >= "8000").select("doc_id", "lang", "n_chars")
@@ -215,7 +201,7 @@ object SourceQueries {
     // integer types and reorder fields).
     "src_json_roundtrip" -> ((s, dir) => {
       val base = Tables.region(s, dir)
-      val path = tmp("region_json")
+      val path = Scratch.process(dir, "region_json")
       base.write.mode(SaveMode.Overwrite).json(path)
       s.read.schema(base.schema).json(path)
         .orderBy("r_regionkey")
@@ -227,7 +213,7 @@ object SourceQueries {
     // reads it back, and the reference pipeline counts words — same
     // oracle as `wordcount`, different scan leg.
     "src_graftlines_wordcount" -> ((s, dir) => {
-      val out = tmp("docs_txt")
+      val out = Scratch.process(dir, "docs_txt")
       Tables.documents(s, dir).orderBy("doc_id").select("text")
         .coalesce(1).write.mode(SaveMode.Overwrite).text(out)
       val part = new java.io.File(out).listFiles()
@@ -245,7 +231,7 @@ object SourceQueries {
     "src_partitioned_pruning" -> ((s, dir) => {
       val base = Tables.documents(s, dir)
         .select("doc_id", "lang", "source", "n_chars")
-      val path = tmp("docs_part")
+      val path = Scratch.process(dir, "docs_part")
       base.write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(path)
       s.read.parquet(path)
         .filter(col("lang") === "en")
@@ -271,7 +257,7 @@ object SourceQueries {
     // each other's landing. At 100 TB: rewrite cost scales with the
     // revised partition, never the table.
     "src_dynamic_overwrite" -> ((s, dir) => {
-      val path = tmp("ev_dynpart_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
+      val path = Scratch.process(dir, "ev_dynpart")
       val ev = Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value")
       ev.write.mode(SaveMode.Overwrite)
@@ -299,7 +285,7 @@ object SourceQueries {
     // every bench rep actually exercises the exchange-free bucketed
     // join; only the final 4-row mktsegment rollup shuffles.
     "src_bucketed_join" -> ((s, dir) => {
-      val path = tmp("bkt")
+      val path = Scratch.process(dir, "bkt")
       Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice")
         .write.mode(SaveMode.Overwrite).option("path", s"$path/orders")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -336,7 +322,7 @@ object SourceQueries {
     // media blobs; the standing guidance to rewrite into
     // parquet/sequence shards after one pass applies.
     "src_binaryfile_meta" -> ((s, dir) => {
-      val out = tmp("docs_bin")
+      val out = Scratch.process(dir, "docs_bin")
       val h = substring(md5(col("doc_id").cast("string")), 1, 4)
       val conf = new org.apache.spark.util.SerializableConfiguration(
         s.sparkContext.hadoopConfiguration)
@@ -382,7 +368,7 @@ object SourceQueries {
   )
 
   /** Assembled at ACCESS time: src_parquet_meta's oracle reads the
-    * landing THIS process wrote ([[pqMetaLanding]]), taking per-file
+    * landing THIS process pinned ([[pqMetaLanding]]), taking per-file
     * row counts from the parquet FOOTERS while the content aggregates
     * re-scan the data — the footer-vs-scan cross-check.
     */
@@ -393,7 +379,7 @@ object SourceQueries {
          |    path_in_schema,
          |    CAST(stats_min_value AS BIGINT) AS mn,
          |    CAST(stats_max_value AS BIGINT) AS mx
-         |  FROM parquet_metadata('${pqMetaLanding.get()}/*.parquet')
+         |  FROM parquet_metadata('${Scratch.pinned("pq_meta")}/*.parquet')
          |  WHERE path_in_schema IN ('n_chars', 'doc_id'))
          |SELECT file,
          |  CAST(min(CASE WHEN path_in_schema = 'n_chars' THEN mn END)
@@ -410,7 +396,7 @@ object SourceQueries {
          |  -- parquet_metadata() is per COLUMN CHUNK: dedupe to one
          |  -- row per (file, row group) before summing footer claims
          |  SELECT DISTINCT file_name, row_group_id, row_group_num_rows
-         |  FROM parquet_metadata('${pqMetaLanding.get()}/*.parquet')),
+         |  FROM parquet_metadata('${Scratch.pinned("pq_meta")}/*.parquet')),
          |m AS (
          |  SELECT regexp_extract(file_name, 'part-[0-9]+', 0) AS file,
          |    CAST(sum(row_group_num_rows) AS BIGINT) AS n_rows
@@ -419,7 +405,7 @@ object SourceQueries {
          |  SELECT regexp_extract(filename, 'part-[0-9]+', 0) AS file,
          |    CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          |    CAST(sum(doc_id) AS BIGINT) AS sum_ids
-         |  FROM read_parquet('${pqMetaLanding.get()}/*.parquet',
+         |  FROM read_parquet('${Scratch.pinned("pq_meta")}/*.parquet',
          |    filename=true)
          |  GROUP BY 1)
          |SELECT m.file, m.n_rows, c.sum_chars, c.sum_ids

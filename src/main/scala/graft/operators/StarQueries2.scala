@@ -984,15 +984,15 @@ object StarQueries2 {
     // The grouped fixed-point HLL (sk_hll machinery) — engine-exact,
     // so the previously exempt sketch row now carries a full gate.
     "q_approx_distinct" -> {
-      import SketchQueries.{HllNumer, HllRegisters, HllRhoCap, hexLong}
+      import SketchQueries.{HllNumer, HllRegisters, HllRhoCap}
       val zc = s"(z_set + ($HllRegisters - n_set) * ${1L << HllRhoCap})"
       s"""WITH RECURSIVE keyed AS (
          |  SELECT l_returnflag, md5(CAST(l_partkey AS VARCHAR)) AS h
          |  FROM lineitem),
          |rr AS (
-         |  SELECT l_returnflag, ${hexLong("h", 1, 2)}::INT AS reg,
+         |  SELECT l_returnflag, ${OracleSql.hexLong("h", 1, 2)}::INT AS reg,
          |    CASE WHEN v = 0 THEN 53 ELSE 53 - length(bin(v)) END::INT AS rho
-         |  FROM (SELECT l_returnflag, h, ${hexLong("h", 3, 13)} AS v FROM keyed)),
+         |  FROM (SELECT l_returnflag, h, ${OracleSql.hexLong("h", 3, 13)} AS v FROM keyed)),
          |regs AS (SELECT l_returnflag, reg, max(rho) AS rho
          |         FROM rr GROUP BY 1, 2),
          |z AS (

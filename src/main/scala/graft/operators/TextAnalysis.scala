@@ -1287,14 +1287,12 @@ object TextAnalysis {
     // cross-engine. CompressRatioSpec's byte-exact reference pins
     // remain on top.
     "ta_compress_ratio" -> ((s, dir) => {
-      val out = graft.CacheRegistry.cached[String](
+      graft.Scratch.pin("ta_compress_ratio", graft.CacheRegistry.cached[String](
           deflateCache, s, dir, "deflateSidecar") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_deflate").toString + "/pin"
+        val p = graft.Scratch.process(dir, "deflate_pin")
         compressRatioOf(s, dir).write.mode("overwrite").parquet(p)
         p
-      }
-      deflateSidecar.set(out)
+      })
       compressRatioOf(s, dir) // FRESH — the bench row measures deflate
     }),
 
@@ -1547,15 +1545,6 @@ object TextAnalysis {
   val AcPatterns: Vector[String] =
     Vector("a", "an", "can", "data", "scan", "ta")
 
-  /** Sidecar path of the deflate pin the CURRENT process last wrote —
-    * read by [[oracleSql]] at dump time (graft.Verify runs every
-    * query, which sets this, before dumping oracle_sql.json). The
-    * default is a nonexistent path so a dump taken without running
-    * the query fails loudly in DuckDB rather than silently passing.
-    */
-  private val deflateSidecar =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/graft_deflate_sidecar_never_landed")
   private val deflateCache = graft.CacheRegistry.newCache()
 
   /** The ta_compress_ratio pipeline body (per-doc deflate census),
@@ -1644,16 +1633,17 @@ object TextAnalysis {
   }
 
   /** Assembled at ACCESS time: ta_compress_ratio's oracle reads the
-    * sidecar parquet THIS process pinned ([[deflateSidecar]] —
-    * graft.Verify runs every query, which sets it, before dumping
-    * oracle_sql.json): n_bytes and ratio4 recompute ARITHMETICALLY
-    * from the documents table, only the deflate byte count rides the
-    * pin.
+    * sidecar parquet THIS process pinned ([[graft.Scratch.pin]] —
+    * graft.Verify runs every query, which pins it, before dumping
+    * oracle_sql.json; without a run the path does not exist and
+    * DuckDB fails loudly): n_bytes and ratio4 recompute
+    * ARITHMETICALLY from the documents table, only the deflate byte
+    * count rides the pin.
     */
   def oracleSql: Map[String, String] = staticOracleSql +
     ("ta_compress_ratio" ->
       s"""WITH sc AS (SELECT * FROM
-         |  read_parquet('${deflateSidecar.get()}/*.parquet'))
+         |  read_parquet('${graft.Scratch.pinned("ta_compress_ratio")}/*.parquet'))
          |SELECT d.doc_id,
          |  CAST(octet_length(encode(d.text)) AS BIGINT) AS n_bytes,
          |  sc.n_deflated,

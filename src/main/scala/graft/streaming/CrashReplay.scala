@@ -95,7 +95,7 @@ object CrashReplay {
             s"${batchesSeen.get()} foreachBatch calls for $nFiles files")
       }
       (readBack(store).localCheckpoint(true), progress)
-    } finally Seq(ckpt, store).foreach(p => rmTree(new File(p)))
+    } finally Seq(ckpt, store).foreach(graft.Scratch.delete)
   }
 
   /** The by-batch-id segments under `dir` written by batches STRICTLY
@@ -114,9 +114,4 @@ object CrashReplay {
 
   private def causes(e: Throwable): Iterator[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32)
-
-  private def rmTree(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-    f.delete(); ()
-  }
 }

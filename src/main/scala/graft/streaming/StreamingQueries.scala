@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.{Agg, OracleSql, QualityQueries}
 
 /** Oracle-gated streaming surface: each query here runs a REAL
@@ -38,25 +38,19 @@ object StreamingQueries {
     */
   private def stageEvents(s: SparkSession, dir: String): (String, StructType) = {
     val ev = Tables.events(s, dir)
-    (stage(ev, s"$dir/events.parquet",
-      s"${stageRoot(dir)}/events"), ev.schema)
+    (stage(ev, dir, "events", "events"), ev.schema)
   }
 
-  /** Where the staged sources and the crash-replay runs' checkpoint
-    * and store directories of `dir` live (JVM tmpdir, one tree per
-    * testdata dir).
-    */
-  private[graft] def stageRoot(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_stream_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-
-  /** Write `df` to `staged` once per SOURCE generation: the staged
-    * copy is reused only while it is newer than the source parquet —
+  /** Write `df` to the shared stage `name` of `dir` once per SOURCE
+    * generation of `table`: the staged copy (returned) is reused only
+    * while it is newer than the source parquet —
     * a driver-side testdata regeneration at the same path invalidates
     * it (a bare _SUCCESS check would silently serve stale data to
     * every streaming query).
     */
-  private def stage(df: DataFrame, sourcePath: String, staged: String): String = {
-    if (isStale(staged, sourcePath))
+  private def stage(df: DataFrame, dir: String, table: String, name: String): String = {
+    val staged = Scratch.shared(dir, name)
+    if (isStale(staged, s"$dir/$table.parquet"))
       df.write.mode(SaveMode.Overwrite).parquet(staged)
     staged
   }
@@ -68,9 +62,9 @@ object StreamingQueries {
     * order (fixed epoch values keep re-runs deterministic and stay far
     * inside maxFileAge of the newest file).
     */
-  private def stageOrdered(df: DataFrame, key: String, sourcePath: String,
-      staged: String): String = {
-    stage(df.repartitionByRange(4, col(key)), sourcePath, staged)
+  private def stageOrdered(df: DataFrame, key: String, dir: String, table: String,
+      name: String): String = {
+    val staged = stage(df.repartitionByRange(4, col(key)), dir, table, name)
     Option(new java.io.File(staged).listFiles()).toSeq.flatten
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .zipWithIndex.foreach { case (f, i) =>
@@ -369,8 +363,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           expr("timestamp_micros(1000000000000000 + doc_id)").as("ts"))
-      val staged = stage(docs, s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/docs")
+      val staged = stage(docs, dir, "documents", "docs")
       val deduped = dedupStream(s, staged, docs.schema).select("fp")
       drain(s, deduped, "st_dedup_exact", "append").orderBy("fp")
     }),
@@ -386,8 +379,7 @@ object StreamingQueries {
     // single-batch drain can't see) stays pinned by ExtensionsSpec.
     "st_domain_cap" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "source")
-      val staged = stage(docs.coalesce(1), s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/docs_src")
+      val staged = stage(docs.coalesce(1), dir, "documents", "docs_src")
       val capped = domainCapStream(s, staged, docs.schema, QualityQueries.DomainCap)
       drain(s, capped, "st_domain_cap", "append").orderBy("source", "doc_id")
     }),
@@ -440,8 +432,7 @@ object StreamingQueries {
           col("event_type"),
           lit(0.0).as("value"),
           lit(null).cast("string").as("props"))
-      val staged = stage(ev.unionByName(sentinels),
-        s"$dir/events.parquet", s"${stageRoot(dir)}/ev_outer")
+      val staged = stage(ev.unionByName(sentinels), dir, "events", "ev_outer")
       val joined = clickAfterViewJoinOuter(s, staged, ev.schema)
         .select(col("view_id"), col("v_user").as("user_id"), col("click_id"))
       drain(s, joined, "st_view_conversion", "append").filter(col("view_id") >= 0L)
@@ -465,8 +456,7 @@ object StreamingQueries {
     // TIME).
     "st_hll_registers" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val staged = stage(docs.repartition(8), s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/docs_hll")
+      val staged = stage(docs.repartition(8), dir, "documents", "docs_hll")
       val stream = graft.operators.SketchQueries.hllRegRho(
           s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "2").parquet(staged)
@@ -532,8 +522,7 @@ object StreamingQueries {
     "st_new_users" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("d"))
-      val staged = stage(ev.repartition(8), s"$dir/events.parquet",
-        s"${stageRoot(dir)}/ev_first")
+      val staged = stage(ev.repartition(8), dir, "events", "ev_first")
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "2").parquet(staged)
         .groupBy("user_id").agg(min(col("d")).as("fd"))
@@ -573,8 +562,7 @@ object StreamingQueries {
     // repeat runs re-exercise the crash, not a cached recovery.
     "st_restart_upsert" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val staged = stage(ev.repartition(4), s"$dir/events.parquet",
-        s"${stageRoot(dir)}/ev_restart")
+      val staged = stage(ev.repartition(4), dir, "events", "ev_restart")
       CrashReplay.run(s, "st_restart_upsert", staged, ev.schema,
           crashAt = Some(1L), "update", hourlyCounts)(
         upsertSink, latestByBatch(s, _))._1
@@ -601,8 +589,7 @@ object StreamingQueries {
     // aggregate. Fresh checkpoint/store per execution, as above.
     "st_restart_watermark" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val staged = stageOrdered(ev, "ts", s"$dir/events.parquet",
-        s"${stageRoot(dir)}/ev_restart_wm")
+      val staged = stageOrdered(ev, "ts", dir, "events", "ev_restart_wm")
       val (out, preCrash) = CrashReplay.run(s, "st_restart_watermark",
           staged, ev.schema, crashAt = Some(2L), "update",
           d => hourlyCounts(d.withWatermark("ts", "30 minutes")))(
@@ -641,8 +628,7 @@ object StreamingQueries {
       val isNew = pmod(col("doc_id"), lit(10)) === 7
       val docs = Tables.documents(s, dir)
       val delta = docs.filter(isNew)
-      val staged = stageOrdered(delta, "doc_id", s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/doc_admission")
+      val staged = stageOrdered(delta, "doc_id", dir, "documents", "doc_admission")
       // static corpus index — the served fingerprint/band tables of
       // the nightly-crawl shape, memoized per (session, dir) like
       // every served index (rebuilding per execution would price the
@@ -736,8 +722,7 @@ object StreamingQueries {
         .select((col("vec_id") + lit(1000000L)).as("vec_id"),
           reverse(TextOps.toDouble(col("embedding"))).as("e"))
       val expected = delta.count()
-      val staged = stageOrdered(delta, "vec_id", s"$dir/embeddings.parquet",
-        s"${stageRoot(dir)}/vec_admission")
+      val staged = stageOrdered(delta, "vec_id", dir, "embeddings", "vec_admission")
       val (out, _) = CrashReplay.run(s, "st_ivf_admit", staged, delta.schema,
           crashAt = Some(1L))({ (df, batchId, store) =>
           val dims = df
@@ -795,8 +780,7 @@ object StreamingQueries {
       val spanL = Dedup.SuffixSpanL
       val delta = Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(10)) === 7).select("doc_id", "text")
-      val staged = stageOrdered(delta, "doc_id", s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/suffix_admission")
+      val staged = stageOrdered(delta, "doc_id", dir, "documents", "suffix_admission")
       // the published static index (the dd_suffix_index_build parquet
       // table, publish-once per session — resolved on the DRIVER
       // before any stream starts, the st_ivf_admit rule): every
@@ -866,8 +850,7 @@ object StreamingQueries {
       val delReq = docs.filter(col("doc_id") % 97 === 13)
         .select(col("doc_id"))
       val expectedDel = delReq.count()
-      val staged = stageOrdered(delReq, "doc_id", s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/forget_req")
+      val staged = stageOrdered(delReq, "doc_id", dir, "documents", "forget_req")
       val (tomb, _) = CrashReplay.run(s, "st_forget", staged, delReq.schema,
           crashAt = Some(1L))(
         (df, batchId, store) => df.select("doc_id")
@@ -929,8 +912,7 @@ object StreamingQueries {
       // same testdata can't race overwrite-vs-read (round-15 advice).
       val baseRoot = graft.CacheRegistry.cached[String](
         servedCache, s, dir, "suffixRefcountBase") {
-        val r = s"${stageRoot(dir)}/suffix_forget_base_" +
-          org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s).take(8)
+        val r = Scratch.session(s, dir, "suffix_forget_base")
         docGrams(static)
           .groupBy("c", "fp1", "fp2").agg(count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite).parquet(r)
@@ -942,8 +924,7 @@ object StreamingQueries {
       // (deleted doc, owned gram)
       val expectedDecs = docGrams(static.join(broadcast(delReq), "doc_id"))
         .count()
-      val staged = stageOrdered(delReq, "doc_id", s"$dir/documents.parquet",
-        s"${stageRoot(dir)}/suffix_forget_req")
+      val staged = stageOrdered(delReq, "doc_id", dir, "documents", "suffix_forget_req")
       val (decs, _) = CrashReplay.run(s, "st_suffix_forget", staged,
           delReq.schema, crashAt = Some(1L))(
         { (df, batchId, store) =>
@@ -989,7 +970,7 @@ object StreamingQueries {
     // crash-replay harness with no crash.
     "st_late_drop" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val staged = s"${stageRoot(dir)}/ev_late_drop"
+      val staged = Scratch.shared(dir, "ev_late_drop")
       if (isStale(staged, s"$dir/events.parquet")) {
         // boundary leg materialized ONCE (1 row) — both filtered
         // writes reuse it instead of re-running the min(ts) aggregate
@@ -1000,29 +981,26 @@ object StreamingQueries {
         val dirF = new java.io.File(staged)
         if (dirF.exists()) dirF.listFiles().foreach(f => { f.delete(); () })
         dirF.mkdirs()
-        val tmpOn = java.nio.file.Files.createTempDirectory("late_on")
-        val tmpLate = java.nio.file.Files.createTempDirectory("late_l")
+        val tmpOn = Scratch.temp("late_on")
+        val tmpLate = Scratch.temp("late_l")
         withB.filter(col("ts") >= col("b")).drop("b")
           .repartitionByRange(4, col("ts"))
-          .write.mode(SaveMode.Overwrite).parquet(tmpOn.toString)
+          .write.mode(SaveMode.Overwrite).parquet(tmpOn)
         withB.filter(col("ts") < col("b")).drop("b")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpLate.toString)
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpLate)
         // flat dir, name + mtime pinned: on-time parts oldest-first,
         // the early file named AND stamped last; the temp write dirs
         // (and their _SUCCESS/.crc sidecars) are deleted after the
         // move so staging rebuilds don't accumulate orphans
-        def moveParts(from: java.nio.file.Path, prefix: String,
-            mt0: Long): Unit = {
-          val fromF = new java.io.File(from.toString)
-          fromF.listFiles()
+        def moveParts(from: String, prefix: String, mt0: Long): Unit = {
+          new java.io.File(from).listFiles()
             .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
             .zipWithIndex.foreach { case (f, i) =>
               val to = new java.io.File(staged, f"$prefix$i%02d.parquet")
               java.nio.file.Files.move(f.toPath, to.toPath)
               to.setLastModified(mt0 + i * 60000L); ()
             }
-          fromF.listFiles().foreach(f => { f.delete(); () })
-          fromF.delete(); ()
+          Scratch.delete(from)
         }
         moveParts(tmpOn, "a_ontime_", 1700000000000L)
         moveParts(tmpLate, "z_late_", 1700000000000L + 6000000L)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.zip.{Deflater, Inflater}
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,7 +56,7 @@ class CompressRatioSpec extends AnyFunSuite {
   }
 
   test("redundant text scores far below noisy text; empty text yields null ratio") {
-    val dir = Files.createTempDirectory("cr_docs").toString
+    val dir = TestSpark.tempDir("cr_docs").toString
     import spark.implicits._
     val rep = "the cat sat on the mat " * 40
     val rnd = new java.util.Random(42)

@@ -71,7 +71,7 @@ class EmptyInputSpec extends AnyFunSuite {
   }
 
   test("document-scan operators accept an empty documents table") {
-    val dir = java.nio.file.Files.createTempDirectory("empty_docs").toString
+    val dir = TestSpark.tempDir("empty_docs").toString
     Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Seq("ta_sentences", "ta_compress_ratio", "pipe_shard_manifest")

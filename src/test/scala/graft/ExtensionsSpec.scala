@@ -126,7 +126,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming wordcount equals batch wordcount on the same files") {
-    val dir = Files.createTempDirectory("stream_in")
+    val dir = TestSpark.tempDir("stream_in")
     Files.writeString(dir.resolve("a.txt"), "the cat sat\nthe dog sat\n")
     Files.writeString(dir.resolve("b.txt"), "cat and dog\n")
     val q = StreamingWordCount.runToMemory(
@@ -144,8 +144,8 @@ class ExtensionsSpec extends AnyFunSuite {
     // from RECOVERED state + the new file — if state were lost, the
     // counts would cover b only; if files were reprocessed, a's words
     // would double
-    val in = Files.createTempDirectory("stream_ckpt_in")
-    val ckpt = Files.createTempDirectory("stream_ckpt").toString
+    val in = TestSpark.tempDir("stream_ckpt_in")
+    val ckpt = TestSpark.tempDir("stream_ckpt").toString
     Files.writeString(in.resolve("a.txt"), "the cat sat\n")
     val q1 = StreamingWordCount.runToMemoryCheckpointed(
       StreamingWordCount.wordCountStream(spark, in.toString), "wc_ckpt1", ckpt)
@@ -162,7 +162,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming windowed event counts run against parquet input") {
-    val dir = Files.createTempDirectory("stream_ev")
+    val dir = TestSpark.tempDir("stream_ev")
     Tables.events(spark, sf).select("ts", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
@@ -181,7 +181,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming sliding windows fan each event into 3 overlapping windows") {
-    val dir = Files.createTempDirectory("stream_sl")
+    val dir = TestSpark.tempDir("stream_sl")
     Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 10:03:00"), "view", 1.0),
       (java.sql.Timestamp.valueOf("2024-01-01 10:07:00"), "click", 2.0)
@@ -205,7 +205,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming dedup drops exact duplicates within the watermark") {
-    val dir = Files.createTempDirectory("stream_dd")
+    val dir = TestSpark.tempDir("stream_dd")
     Seq(
       (1L, "the cat sat", java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
       (2L, "the dog sat", java.sql.Timestamp.valueOf("2024-01-01 10:01:00")),
@@ -224,7 +224,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming incremental dedup keeps only corpus-novel documents") {
-    val dir = Files.createTempDirectory("stream_idd")
+    val dir = TestSpark.tempDir("stream_idd")
     Seq(
       (1L, "the cat sat", java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
       (2L, "brand new doc", java.sql.Timestamp.valueOf("2024-01-01 10:01:00")),
@@ -248,7 +248,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming domain cap admits per-source quotas across micro-batches") {
-    val dir = Files.createTempDirectory("stream_cap")
+    val dir = TestSpark.tempDir("stream_cap")
     Seq(
       (10L, "srcA"), (11L, "srcA"), (12L, "srcA"),
       (20L, "srcB")
@@ -276,9 +276,9 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming merge sink upserts micro-batches into a keyed parquet store") {
-    val src = Files.createTempDirectory("stream_merge_src")
-    val tgt = Files.createTempDirectory("stream_merge_t").resolve("store").toString
-    val ckp = Files.createTempDirectory("stream_merge_ckp").toString
+    val src = TestSpark.tempDir("stream_merge_src")
+    val tgt = TestSpark.tempDir("stream_merge_t").resolve("store").toString
+    val ckp = TestSpark.tempDir("stream_merge_ckp").toString
     Seq((1L, "v1"), (2L, "v1")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(src.toString)
     val schema = spark.read.parquet(src.toString).schema
@@ -299,7 +299,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("streaming session windows agree with the batch sessionization (closed sessions)") {
-    val dir = Files.createTempDirectory("stream_sw")
+    val dir = TestSpark.tempDir("stream_sw")
     Tables.events(spark, sf).select("ts", "user_id")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
@@ -320,7 +320,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("stream-static broadcast enrichment is stateless and matches the batch join") {
-    val dir = Files.createTempDirectory("stream_en")
+    val dir = TestSpark.tempDir("stream_en")
     Tables.events(spark, sf).select("event_id", "user_id", "ts")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
@@ -341,7 +341,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join matches the batch join (inner, eager emission)") {
-    val dir = Files.createTempDirectory("stream_ss")
+    val dir = TestSpark.tempDir("stream_ss")
     Tables.events(spark, sf).select("event_id", "user_id", "event_type", "ts")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
@@ -366,7 +366,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("left-outer stream-stream join finalizes unconverted views via the watermark") {
-    val dir = Files.createTempDirectory("stream_sso")
+    val dir = TestSpark.tempDir("stream_sso")
     val ev = Tables.events(spark, sf).select("event_id", "user_id", "event_type", "ts")
     ev.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
@@ -404,7 +404,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("JobEventLog: shuffle-free queries after a shuffle log no spurious Finish_Shuffle") {
-    val path = Files.createTempFile("joblog2", ".csv").toString
+    val path = TestSpark.tempDir("joblog2").resolve("joblog2.csv").toString
     val listener = new JobEventLog(path)
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -424,7 +424,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("JobEventLog captures the reference's event vocabulary") {
-    val path = Files.createTempFile("joblog", ".csv").toString
+    val path = TestSpark.tempDir("joblog").resolve("joblog.csv").toString
     val listener = new JobEventLog(path)
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -455,7 +455,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("O12→O13: announced intermediate pair count lands in Start_Shuffle") {
     import graft.operators.{MapReduceJob, MapReducePipeline}
-    val path = Files.createTempFile("joblog3", ".csv").toString
+    val path = TestSpark.tempDir("joblog3").resolve("joblog3.csv").toString
     val listener = new JobEventLog(path)
     val docs = Tables.documents(spark, sf)
     val job = MapReduceJob()

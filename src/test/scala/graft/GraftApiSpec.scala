@@ -278,7 +278,7 @@ class GraftApiSpec extends AnyFunSuite {
 
   test("Graft.packSequences equals PipelineQueries.packBySharded") {
     // 40 docs in two languages, 1-7 tokens each
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack").toString
+    val dir = TestSpark.tempDir("graft_pack").toString
     (1L to 40L).map(i => (i, Seq.fill((i % 7 + 1).toInt)("tok").mkString(" "),
         if (i % 3 == 0) "de" else "en"))
       .toDF("doc_id", "text", "lang")

@@ -14,9 +14,9 @@ class IvfPersistSpec extends AnyFunSuite {
   test("build publishes the three index tables; census is non-empty") {
     val build = SparkEntry.queries("ss_ivf_persist_build")(spark, dir)
     assert(build.count() > 0)
-    // the engine's absolute anchor (graft.index.root prop / tmpdir),
+    // the engine's session-scope index root (graft.Scratch), absolute,
     // so this spec keeps passing regardless of the launching CWD
-    val root = graft.operators.Similarity.indexRoot(dir)
+    val root = graft.operators.Similarity.indexRoot(spark, dir)
     for (t <- Seq("centroids", "assignments", "pq_codebook"))
       assert(new java.io.File(s"$root/$t").isDirectory, s"missing index table $t")
     // the assignment is partitioned BY CELL — the physical layout that
@@ -61,7 +61,7 @@ class IvfPersistSpec extends AnyFunSuite {
         (ppm > graft.operators.Similarity.AdmitRebalancePpm))
     }
     // the delta segment exists on disk, cent_id-partitioned
-    val root = graft.operators.Similarity.indexRoot(dir)
+    val root = graft.operators.Similarity.indexRoot(spark, dir)
     val cells = new java.io.File(s"$root/assignments_delta").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(cells.nonEmpty, "delta segment not partitioned by cent_id")
@@ -85,7 +85,7 @@ class IvfPersistSpec extends AnyFunSuite {
     assert(out.length == admit.length + 1)
     // the republished tables exist: split segment partitioned by cell,
     // v2 centroid table with the sub-cell rows
-    val root = graft.operators.Similarity.indexRoot(dir)
+    val root = graft.operators.Similarity.indexRoot(spark, dir)
     val cells = new java.io.File(s"$root/assignments_split").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(cells.length == 2, "split segment not partitioned into 2 sub-cells")
@@ -115,7 +115,7 @@ class IvfPersistSpec extends AnyFunSuite {
     // 90/5/3/2% across clusters, deterministic jitter — the alarm MUST
     // fire post-admission and the loop MUST leave it quiet
     val n = 3000L
-    val skewDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfskew_spec_$n"
+    val skewDir = TestSpark.tempDir(s"graft_ivfskew_spec_$n").toString
     spark.range(0L, n)
       .selectExpr(
         "id AS vec_id",
@@ -168,7 +168,7 @@ class IvfPersistSpec extends AnyFunSuite {
     // split), 8% healthy, 1.5% + 0.5% dust clusters — post-training
     // at least one of their cells sits below the merge floor
     val n = 3000L
-    val skewDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfskew_mq_spec_$n"
+    val skewDir = TestSpark.tempDir(s"graft_ivfskew_mq_spec_$n").toString
     spark.range(0L, n)
       .selectExpr(
         "id AS vec_id",
@@ -221,7 +221,7 @@ class IvfPersistSpec extends AnyFunSuite {
     assert(occ.min >= graft.operators.Similarity.AdmitMergeFloorPpm,
       s"merge dual left a sub-floor cell (${occ.min} ppm)")
     // the republished end-state artifacts exist, cell-partitioned
-    val root = graft.operators.Similarity.indexRoot(skewDir)
+    val root = graft.operators.Similarity.indexRoot(spark, skewDir)
     val cells = new java.io.File(s"$root/assignments_mq").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(cells.length == out.length,
@@ -237,7 +237,7 @@ class IvfPersistSpec extends AnyFunSuite {
     assert(compact == admit,
       "compacted census diverged from the base+delta census")
     // one segment on disk, still cell-partitioned
-    val root = graft.operators.Similarity.indexRoot(dir)
+    val root = graft.operators.Similarity.indexRoot(spark, dir)
     val cells = new java.io.File(s"$root/assignments_compacted").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(cells.nonEmpty, "compacted segment not partitioned by cent_id")
@@ -254,7 +254,7 @@ class IvfPersistSpec extends AnyFunSuite {
     // survivors + forgotten = the pre-erasure two-segment census
     assert(out.map(r => r.getAs[Long]("n_total") + r.getAs[Long]("n_forgotten")).sum
       == admit.map(_.getAs[Long]("n_total")).sum)
-    val root = graft.operators.Similarity.indexRoot(dir)
+    val root = graft.operators.Similarity.indexRoot(spark, dir)
     val cells = new java.io.File(s"$root/assignments_forgotten").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(cells.nonEmpty, "forgotten segment not partitioned by cent_id")

@@ -17,7 +17,7 @@ class LineFileV2Spec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
 
   private def writeFile(content: String): String = {
-    val p = Files.createTempFile("graftlines", ".txt")
+    val p = TestSpark.tempDir("graftlines").resolve("graftlines.txt")
     Files.writeString(p, content)
     p.toString
   }

@@ -284,7 +284,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the testdata corpus is single-language per doc (all-diagonal
     // matrix, oracle-checked); the gate's purpose needs a synthetic
     // mixed doc: an en+de concatenation must land at (en, de)
-    val dir = java.nio.file.Files.createTempDirectory("mixed_docs").toString
+    val dir = TestSpark.tempDir("mixed_docs").toString
     val en = "the cat and the dog is in a house of the king"
     val de = "der hund und die katze ist ein tier der die und das"
     Seq((1L, s"$en $de", "en"), (2L, s"$en $en", "en"))
@@ -505,7 +505,7 @@ class OperatorsSpec extends AnyFunSuite {
     // floor(v²·1e6) sums land a constant type's variance a hair BELOW
     // zero (s2 floors down, mu² doesn't); the clamp must hold it at
     // σ = 0 → z = 0 instead of NaN (and a DuckDB sqrt error)
-    val dir = java.nio.file.Files.createTempDirectory("ev_const").toString
+    val dir = TestSpark.tempDir("ev_const").toString
     val ts = 1704103200L * 1000000000L // int64 nanos, the testdata layout
     Seq(
       (1L, ts, 1L, "flat", 1.2345, "{}"),

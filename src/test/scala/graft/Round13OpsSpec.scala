@@ -134,13 +134,12 @@ class Round13OpsSpec extends AnyFunSuite {
   test("mm_png_files: genuine PNG files on disk, lossless chain, clusters consistent") {
     val rows = run("mm_png_files").collect()
     assert(rows.nonEmpty)
-    // the landing dir must now hold real .png files with the PNG magic
-    val root = Paths.get(System.getProperty("java.io.tmpdir"))
-    val landing = Files.list(root).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("graft_mm_")).toSeq
-    assert(landing.nonEmpty, "no graft_mm_ landing dir written")
-    val pngs = landing.flatMap(d => Files.walk(d).iterator().asScala
-      .filter(_.toString.endsWith(".png")).toSeq)
+    // this JVM's landing dir must now hold real .png files with the
+    // PNG magic
+    val landing = Paths.get(Scratch.process(sf, "png"))
+    assert(Files.isDirectory(landing), s"no PNG landing dir at $landing")
+    val pngs = Files.walk(landing).iterator().asScala
+      .filter(_.toString.endsWith(".png")).toSeq
     assert(pngs.nonEmpty, "no .png files on disk")
     val magic = Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte)
     pngs.take(5).foreach { p =>

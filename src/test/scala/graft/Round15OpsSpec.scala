@@ -210,7 +210,7 @@ class Round15OpsSpec extends AnyFunSuite {
 
   test("dd_oph_pairs: exact duplicates share all buckets; disjoint docs never pair") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_oph").toString
+    val dir = TestSpark.tempDir("graft_oph").toString
     val dup = "the quick brown fox jumps over the lazy dog today"
     val other = "completely different words everywhere here always forever more again"
     Seq((1L, dup, "en", "t", dup.length.toLong),
@@ -348,7 +348,7 @@ class Round15OpsSpec extends AnyFunSuite {
     // small-sample flag); this sequence draws 46/80 green, checked at
     // authoring time, and is deterministic forever
     val human = (0 to 80).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_wm").toString
+    val dir = TestSpark.tempDir("graft_wm").toString
     Seq((1L, marked, "en", "t", marked.length.toLong),
         (2L, human, "en", "t", human.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -174,7 +172,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet write prunes partitions at read time") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part").toString
     Tables.documents(spark, sf).write.mode("overwrite").partitionBy("lang").parquet(dir)
     val lang = spark.read.parquet(dir).select("lang").head.getString(0)
     val df = spark.read.parquet(dir).filter(col("lang") === lang)
@@ -215,7 +213,7 @@ class ScaleSpec extends AnyFunSuite {
   test("parquet schema evolution: mergeSchema unions batches with added columns") {
     // the ingestion reality at 100 TB: later batches carry new columns;
     // a mergeSchema read must union the schemas and null-fill old rows
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = TestSpark.tempDir("graft_evolve").toString
     val v1 = Tables.region(spark, sf).select(col("r_regionkey"), col("r_name"))
     val v2 = Tables.region(spark, sf)
       .select(col("r_regionkey"), col("r_name"),
@@ -233,7 +231,7 @@ class ScaleSpec extends AnyFunSuite {
   test("nested schema pruning: struct field selection reaches the parquet scan") {
     // multimodal/metadata structs at 100 TB: selecting one field of a
     // struct must prune the scan to that subfield, not read the struct
-    val dir = Files.createTempDirectory("graft_nested").toString
+    val dir = TestSpark.tempDir("graft_nested").toString
     Tables.documents(spark, sf)
       .select(col("doc_id"),
         struct(col("lang").as("l"), col("text").as("t"),
@@ -250,7 +248,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("ORC round-trip preserves rows and schema") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = TestSpark.tempDir("graft_orc").toString
     val src = Tables.orders(spark, sf)
     src.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -282,7 +280,7 @@ class ScaleSpec extends AnyFunSuite {
     // fact side is partitioned by the join key's column, the dim side
     // is filtered, and the fact scan must carry a dynamicpruning
     // subquery instead of reading every partition
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = TestSpark.tempDir("graft_dpp").toString
     Tables.documents(spark, sf).write.mode("overwrite").partitionBy("lang").parquet(dir)
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "10")
@@ -291,7 +289,7 @@ class ScaleSpec extends AnyFunSuite {
       // DPP fires only when the build side carries a selective filter —
       // and the filter must survive optimization, so the dim is a file
       // source (a local relation would constant-fold the predicate away)
-      val dimDir = Files.createTempDirectory("graft_dpp_dim").toString
+      val dimDir = TestSpark.tempDir("graft_dpp_dim").toString
       Seq(("en", 1), ("de", 2), ("es", 3)).toDF("d_lang", "flag")
         .write.mode("overwrite").parquet(dimDir)
       val dim = spark.read.parquet(dimDir).filter(col("flag") === 1)

@@ -19,11 +19,11 @@ class SinksSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("WordCountOutput: per-reducer sorted text files in reference format") {
-    val tmpIn = Files.createTempFile("wc_in", ".txt")
+    val tmpIn = TestSpark.tempDir("wc_in").resolve("wc_in.txt")
     Files.writeString(tmpIn, "the cat sat\nthe dog sat\ncat and dog\n")
     val counts = MapReducePipeline.run(
       LineFile.read(spark, tmpIn.toString), MapReduceJob(keyCol = "line_no"))
-    val out = Files.createTempDirectory("wc_out").toString
+    val out = TestSpark.tempDir("wc_out").toString
     WordCountOutput.write(counts, 3, out)
 
     // every bucket=K dir holds `word count` lines sorted by word (W4)
@@ -43,7 +43,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("CSV sink/source roundtrip preserves values") {
-    val dir = Files.createTempDirectory("csv_rt").toString
+    val dir = TestSpark.tempDir("csv_rt").toString
     val df = Tables.nation(spark, "/root/testdata/sf0.001")
     df.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
@@ -53,7 +53,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("JSON sink/source roundtrip preserves values") {
-    val dir = Files.createTempDirectory("json_rt").toString
+    val dir = TestSpark.tempDir("json_rt").toString
     val df = Tables.region(spark, "/root/testdata/sf0.001")
     df.write.mode("overwrite").json(dir)
     val back = spark.read.json(dir)
@@ -63,8 +63,8 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("foreachBatch: idempotent batch-id-keyed parquet sink") {
-    val in = Files.createTempDirectory("fb_in")
-    val out = Files.createTempDirectory("fb_out").toString
+    val in = TestSpark.tempDir("fb_in")
+    val out = TestSpark.tempDir("fb_out").toString
     Files.writeString(in.resolve("a.txt"), "x\ny\n")
     val q = spark.readStream.text(in.toString)
       .writeStream
@@ -84,7 +84,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("stateful streaming: flatMapGroupsWithState emits deltas per key") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val dir = Files.createTempDirectory("fstate_in")
+    val dir = TestSpark.tempDir("fstate_in")
     Files.writeString(dir.resolve("a.txt"), "a\nb\na\na\n")
     val words = spark.readStream.text(dir.toString).as[String]
     val deltas = words.groupByKey(identity)
@@ -107,7 +107,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("stateful streaming: mapGroupsWithState running count per key") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val dir = Files.createTempDirectory("state_in")
+    val dir = TestSpark.tempDir("state_in")
     Files.writeString(dir.resolve("a.txt"), "x\ny\nx\n")
     val words = spark.readStream.text(dir.toString).as[String]
     val counted = words.groupByKey(identity)

@@ -39,7 +39,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a second session loads a known table with no Spark job; rewrites are seen") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
+    val dir = TestSpark.tempDir("graft_tables").toString
     val path = s"$dir/t.parquet"
     spark.range(3).selectExpr("id AS a").write.parquet(path)
     val first = spark.newSession()

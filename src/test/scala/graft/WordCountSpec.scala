@@ -18,7 +18,7 @@ class WordCountSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fixtureFile(): String = {
-    val f = Files.createTempFile("wordcount_tiny", ".txt")
+    val f = TestSpark.tempDir("wordcount_tiny").resolve("wordcount_tiny.txt")
     Files.writeString(f, "the cat sat\nthe dog sat\ncat and dog\n")
     f.toString
   }

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.{Scratch, SparkEntry, TestSpark}
 
 /** [[CrashReplay.run]] on a hand-built 3-file stage (ids 0..29, ten
   * per file, processed in id order): the injected crash is replayed
@@ -20,7 +19,7 @@ class CrashReplaySpec extends AnyFunSuite {
 
   /** A temp dir holding `nFiles` id-ordered parquet files in `staged`. */
   private def fixture(nFiles: Int): (File, String) = {
-    val root = Files.createTempDirectory("graft_crash_replay").toFile
+    val root = TestSpark.tempDir("graft_crash_replay").toFile
     val staged = s"$root/staged"
     spark.range(0, 10L * nFiles, 1, nFiles).toDF("id")
       .write.mode(SaveMode.Overwrite).parquet(staged)
@@ -96,7 +95,7 @@ class CrashReplaySpec extends AnyFunSuite {
     val rows = Seq("st_restart_upsert", "st_restart_watermark",
       "st_incremental_dedup", "st_ivf_admit", "st_suffix_admit", "st_forget",
       "st_suffix_forget", "st_late_drop")
-    def runDirs() = Option(new File(StreamingQueries.stageRoot(dir)).list())
+    def runDirs() = Option(new File(Scratch.shared(dir, "")).list())
       .toSeq.flatten.filter(n => n.contains("_ckpt_") || n.contains("_store_"))
     val before = runDirs().toSet
     rows.foreach { row =>
