@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.{DotProduct, DoubleSortableBits, Md5PrefixLong, RollingHash, TokenCount, TokenCountRewrite, WordShingles}
 import graft.plans.AsOfJoinStrategy
@@ -88,8 +89,20 @@ object GraftExtensions {
     * re-registered under its own name, and the rule and the strategy
     * are each prepended only when absent, so a second call changes
     * nothing.
+    *
+    * It also turns `spark.sql.artifact.isolation.enabled` off. Spark
+    * caches each generated class under (class loader, source), and an
+    * isolated session runs its tasks under a class loader of its own,
+    * so every fresh session would compile the same sources again and
+    * run them interpreted until the JIT catches up. graft adds no
+    * session artifacts, so its sessions share the JVM's loader and
+    * each generated class is compiled once per JVM. Spark reads the
+    * conf at a session's first query: call `register` before it. A
+    * caller that adds session-scoped JARs with `addArtifact` and needs
+    * isolation sets the conf back to `true` after `register`.
     */
   def register(spark: SparkSession): Unit = {
+    spark.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     functionDefs.foreach { case (ident, inf, builder) =>

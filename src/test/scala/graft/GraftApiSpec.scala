@@ -248,6 +248,8 @@ class GraftApiSpec extends AnyFunSuite {
     GraftExtensions.register(s)
     assert(s.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
     assert(s.experimental.extraOptimizations.count(_ == TokenCountRewrite) == 1)
+    assert(s.conf.get(org.apache.spark.sql.internal.SQLConf
+      .ARTIFACTS_SESSION_ISOLATION_ENABLED.key) == "false")
     val sh = s.sql("SELECT word_shingles('a b c d', 2)").head().getSeq[String](0)
     assert(sh.nonEmpty, "word_shingles resolved to an empty array")
   }
