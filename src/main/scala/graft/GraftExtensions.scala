@@ -100,9 +100,25 @@ object GraftExtensions {
     * conf at a session's first query: call `register` before it. A
     * caller that adds session-scoped JARs with `addArtifact` and needs
     * isolation sets the conf back to `true` after `register`.
+    *
+    * It also installs graft's `file:` filesystem ([[NioLocalFileSystem]]
+    * for the FileSystem API, [[NioLocalFs]] for FileContext) in the
+    * session's Hadoop conf. Hadoop's own runs without its native
+    * library here, so it starts a shell process (`ls -ld`, `chmod`,
+    * `readlink`) for every permission or link lookup and after every
+    * create: hundreds per pass of table loads, sink commits and
+    * streaming checkpoints. graft's reads and sets the same attributes
+    * through java.nio. `fs.file.impl.disable.cache` is needed because
+    * `FileSystem.get` caches instances by scheme, authority and user,
+    * and the context holds a stock instance before `register` runs. To
+    * opt out, `spark.conf.unset` the three keys after `register`; the
+    * session then gets the context's classes again.
     */
   def register(spark: SparkSession): Unit = {
     spark.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
+    spark.conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", true)
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     functionDefs.foreach { case (ident, inf, builder) =>

@@ -45,13 +45,8 @@ object Tables {
   private def read(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val files = try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val b = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(b.result().sorted)
+      Some(HadoopFiles.files(p.getFileSystem(HadoopFiles.conf(spark)), p)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
     } catch { case _: java.io.FileNotFoundException => None }
     files match {
       case None => spark.read.parquet(path) // raises Spark's own missing-path error

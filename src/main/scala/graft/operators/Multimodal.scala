@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Scratch, Tables}
+import graft.{HadoopFiles, Scratch, Tables}
 import graft.functions.{PgmCodec, WavCodec}
 
 /** Multimodal-column plumbing: media treated as opaque `binary`
@@ -266,24 +266,16 @@ object Multimodal {
   private def landFiles(s: SparkSession, dir: String, out: String,
       pred: String, ext: String)(make: Array[Byte] => Array[Byte]): Unit = {
     import s.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      s.sparkContext.hadoopConfiguration)
+    val conf = new org.apache.spark.util.SerializableConfiguration(HadoopFiles.conf(s))
     val root = new org.apache.hadoop.fs.Path(out)
     val fs0 = root.getFileSystem(conf.value)
     val expected = Tables.documents(s, dir).filter(expr(pred)).count()
     val suffix = "." + ext
-    val complete = fs0.exists(root) && {
-      val it = fs0.listFiles(root, true)
-      var n = 0L
-      while (it.hasNext) {
-        // a crash between fs.create and os.write leaves a 0-byte
-        // file — require non-empty so a truncated landing is rebuilt
-        // instead of poisoning every later session's decode rows
-        val f = it.next()
-        if (f.getPath.getName.endsWith(suffix) && f.getLen > 0) n += 1
-      }
-      n == expected
-    }
+    // a crash between fs.create and os.write leaves a 0-byte file —
+    // require non-empty so a truncated landing is rebuilt instead of
+    // poisoning every later session's decode rows
+    val complete = fs0.exists(root) && HadoopFiles.files(fs0, root)
+      .count(f => f.getPath.getName.endsWith(suffix) && f.getLen > 0) == expected
     if (fs0.exists(root) && !complete) fs0.delete(root, true)
     if (!complete) Tables.documents(s, dir)
       .filter(expr(pred))
@@ -292,14 +284,10 @@ object Multimodal {
       .repartition(col("shard"))
       .as[(Long, String, String)]
       .foreachPartition { (it: Iterator[(Long, String, String)]) =>
-        val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf.value)
-        fs.setWriteChecksum(false)
-        it.foreach { case (id, text, shard) =>
-          val bytes = make(text.getBytes("UTF-8"))
-          val p = new org.apache.hadoop.fs.Path(s"$out/shard=$shard/$id$suffix")
-          val os = fs.create(p, true)
-          try os.write(bytes) finally os.close()
-        }
+        HadoopFiles.writeWithoutChecksums(conf.value, root)(it.map { case (id, text, shard) =>
+          (new org.apache.hadoop.fs.Path(s"$out/shard=$shard/$id$suffix"),
+            make(text.getBytes("UTF-8")))
+        })
       }
   }
 

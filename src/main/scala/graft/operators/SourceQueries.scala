@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Scratch, Tables}
+import graft.{HadoopFiles, Scratch, Tables}
 
 /** Source-format coverage beyond parquet: CSV and JSON read paths,
   * oracle-checked end-to-end. Each query round-trips a small dimension
@@ -324,8 +324,7 @@ object SourceQueries {
     "src_binaryfile_meta" -> ((s, dir) => {
       val out = Scratch.process(dir, "docs_bin")
       val h = substring(md5(col("doc_id").cast("string")), 1, 4)
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        s.sparkContext.hadoopConfiguration)
+      val conf = new org.apache.spark.util.SerializableConfiguration(HadoopFiles.conf(s))
       val root = new org.apache.hadoop.fs.Path(out)
       val fs0 = root.getFileSystem(conf.value)
       if (fs0.exists(root)) fs0.delete(root, true)
@@ -336,15 +335,10 @@ object SourceQueries {
         .repartition(col("shard"))
         .as[(Long, String, String)]
         .foreachPartition { (it: Iterator[(Long, String, String)]) =>
-          val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf.value)
-          // no .crc sidecars: they double the tiny-file metadata ops on
-          // checksummed filesystems (object stores don't have them)
-          fs.setWriteChecksum(false)
-          it.foreach { case (id, text, shard) =>
-            val p = new org.apache.hadoop.fs.Path(s"$out/shard=$shard/$id.txt")
-            val os = fs.create(p, true)
-            try os.write((text + "\n").getBytes("UTF-8")) finally os.close()
-          }
+          HadoopFiles.writeWithoutChecksums(conf.value, root)(it.map { case (id, text, shard) =>
+            (new org.apache.hadoop.fs.Path(s"$out/shard=$shard/$id.txt"),
+              (text + "\n").getBytes("UTF-8"))
+          })
         }
       s.read.format("binaryFile").load(out)
         .select(regexp_extract(col("path"), "(\\d+)\\.txt$", 1)

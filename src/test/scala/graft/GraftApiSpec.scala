@@ -250,6 +250,9 @@ class GraftApiSpec extends AnyFunSuite {
     assert(s.experimental.extraOptimizations.count(_ == TokenCountRewrite) == 1)
     assert(s.conf.get(org.apache.spark.sql.internal.SQLConf
       .ARTIFACTS_SESSION_ISOLATION_ENABLED.key) == "false")
+    assert(s.conf.get("fs.file.impl") == classOf[NioLocalFileSystem].getName)
+    assert(s.conf.get("fs.AbstractFileSystem.file.impl") == classOf[NioLocalFs].getName)
+    assert(s.conf.get("fs.file.impl.disable.cache") == "true")
     val sh = s.sql("SELECT word_shingles('a b c d', 2)").head().getSeq[String](0)
     assert(sh.nonEmpty, "word_shingles resolved to an empty array")
   }
