@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
@@ -26,6 +30,12 @@ import graft.Tables
   * MapReduce and Beyond") finishes adversarial-diameter graphs in
   * O(log²) rounds of the same join+min shape. The swap is internal —
   * labels are exact component minima either way.
+  *
+  * Those rounds serve pair lists above [[DriverPairCap]]. A list that
+  * fits is collected once and labeled on the driver by union-find
+  * (Lattanzi et al., "Filtering", SPAA 2011: finish on one machine
+  * once the state fits), which replaces a dozen tiny Spark jobs with
+  * one.
   */
 object DedupClusters {
 
@@ -62,7 +72,8 @@ object DedupClusters {
     * unconverged after `maxIters` rounds fails loudly.
     * At 100 TB every pass is edge-partitioned — no node ever holds
     * more than its neighborhood, no driver state beyond the round
-    * counter.
+    * counter. That holds on the distributed path, above
+    * [[DriverPairCap]] pairs; below it the driver holds the pair list.
     */
   private[graft] def starContraction(edges: DataFrame, maxIters: Int = 25): DataFrame = {
     // canonical larger→smaller orientation, one row per undirected edge
@@ -104,10 +115,93 @@ object DedupClusters {
       .agg(count(when(col("sides") =!= 3, lit(1))))
       .head().getLong(0) == 0L
 
+  /** Largest pair list [[connectedComponents]] labels on the driver:
+    * 2¹⁶ (doc_a, doc_b) rows. Collected as rows of two boxed ids,
+    * that is about 10 MB of driver heap; the label frame it returns
+    * holds at most twice as many (id, label) rows.
+    */
+  val DriverPairCap: Int = 1 << 16
+
   /** (id, label) per node of `pairs` (cols doc_a < doc_b); label = min
     * doc_id reachable in the component.
+    *
+    * A pair list of at most [[DriverPairCap]] rows with integral ids
+    * is collected once and labeled on the driver ([[onDriver]]); the
+    * result is a local frame, so a later join broadcasts it. Larger
+    * lists, and lists holding a null id, run the distributed rounds
+    * of [[distributedComponents]]. Both give the same rows and the
+    * same schema.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
+    val src = GraphQueries.undirected(pairs).schema("src")
+    if (src.dataType != IntegerType && src.dataType != LongType)
+      distributedComponents(pairs, maxIters)
+    else Rounds.fits(pairs.select("doc_a", "doc_b"), DriverPairCap) match {
+      case (_, Some(rows)) if !rows.exists(_.anyNull) =>
+        onDriver(pairs.sparkSession, rows, src, maxIters)
+      case (cut, _) => distributedComponents(cut, maxIters)
+    }
+  }
+
+  /** [[connectedComponents]] over collected (doc_a, doc_b) rows:
+    * union-find over the ids in ascending order, each root the
+    * smaller index, so a root is its component's minimum id. The
+    * schema is the distributed body's: `id` and `label` of the edge
+    * type `src`, `label` nullable when the propagation rounds would
+    * have converged ([[propagationConverges]]), as an aggregate's
+    * output is.
+    */
+  private def onDriver(s: SparkSession, pairs: Array[Row], src: StructField,
+      maxIters: Int): DataFrame = {
+    val (da, db) = pairs.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).unzip
+    val ids = (da ++ db).distinct.sorted
+    val a = da.map(java.util.Arrays.binarySearch(ids, _))
+    val b = db.map(java.util.Arrays.binarySearch(ids, _))
+    val parent = ids.indices.toArray
+    @tailrec def find(i: Int): Int =
+      if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
+    a.indices.foreach { k =>
+      val (x, y) = (find(a(k)), find(b(k)))
+      parent(math.max(x, y)) = math.min(x, y)
+    }
+    val out: Long => Any = if (src.dataType == IntegerType) _.toInt else identity
+    val labelNullable = src.nullable || propagationConverges(a, b, ids.length, maxIters)
+    s.createDataFrame(ids.indices.map(i => Row(out(ids(i)), out(ids(find(i))))).asJava,
+      StructType(Seq(StructField("id", src.dataType, src.nullable),
+        StructField("label", src.dataType, labelNullable))))
+  }
+
+  /** Whether [[distributedComponents]] ends in its propagation rounds
+    * rather than swapping to [[starContraction]]: its rounds replayed
+    * over the edge index arrays (ids ascending, so index order is id
+    * order).
+    */
+  private def propagationConverges(a: Array[Int], b: Array[Int], n: Int,
+      maxIters: Int): Boolean = {
+    def gather(l: Array[Int]): Array[Int] = {
+      val g = l.clone()
+      a.indices.foreach { k =>
+        g(a(k)) = math.min(g(a(k)), l(b(k)))
+        g(b(k)) = math.min(g(b(k)), l(a(k)))
+      }
+      g
+    }
+    var label = gather(Array.range(0, n))
+    (1 until math.min(StarSwitchRound, maxIters)).exists { r =>
+      val g = gather(label)
+      val next = if (r < 2) g else g.map(g)
+      val same = next.sameElements(label)
+      label = next
+      same
+    }
+  }
+
+  /** The distributed body of [[connectedComponents]]: min-label
+    * propagation, swapping to [[starContraction]] on chained graphs.
+    * The only path for pair lists above [[DriverPairCap]], and the
+    * reference the driver path is pinned to.
+    */
+  private[graft] def distributedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     // persisted: the edge set is re-joined every round
     val edges = GraphQueries.undirected(pairs)
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -3,7 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
@@ -25,21 +25,38 @@ import graft.functions.{L2ArgminMicro, L2Codebook}
   * whatever the corpus size. The arithmetic is the long-format plan's
   * (and the DuckDB oracle's) term for term, so codebooks and
   * assignments are bit-identical to it.
+  *
+  * That holds above [[DriverVecCap]] vectors. A vector set that fits
+  * is collected once and every round runs on the driver over the
+  * same kernel and the same sums ([[onDriver]]): no Spark job per
+  * round, and the codebook comes out bit-identical.
   */
 private[graft] object Lloyd {
+
+  /** Largest vector set [[train]] runs on the driver: 2¹⁴ (vec_id, e)
+    * rows. At the 64 dimensions of the embeddings table that is 1M
+    * coordinates, about 40 MB of collected rows of boxed doubles.
+    */
+  val DriverVecCap: Int = 1 << 14
 
   /** The seed codebook: each row of `seeds` (vec_id, e) is one
     * centroid, with cent_id = vec_id. Collects the k seed rows.
     */
-  def seedBook(seeds: DataFrame, segs: Int, segLen: Int): L2Codebook = {
-    val rows = seeds.select(col("vec_id"), col("e")).collect().sortBy(_.getLong(0))
+  def seedBook(seeds: DataFrame, segs: Int, segLen: Int): L2Codebook =
+    bookOf(seeds.select(col("vec_id"), col("e")).collect(), segs, segLen)
+
+  private def bookOf(seeds: Array[Row], segs: Int, segLen: Int): L2Codebook = {
+    val rows = seeds.sortBy(_.getLong(0))
     val cents = rows.flatMap { r =>
-      val e = if (r.isNullAt(1)) null else new GenericArrayData(r.getSeq[Any](1))
-      L2ArgminMicro.requireVector(r.getLong(0), e, segs * segLen)
-      e.toDoubleArray()
+      L2ArgminMicro.requireVector(r.getLong(0), vector(r), segs * segLen)
+      vector(r).toDoubleArray()
     }
     new L2Codebook(rows.map(_.getLong(0)), cents, segs, segLen)
   }
+
+  /** Column 1 of a collected (vec_id, e) row as the kernel's input. */
+  private def vector(r: Row): ArrayData =
+    if (r.isNullAt(1)) null else new GenericArrayData(r.getSeq[Any](1))
 
   /** Per segment, the nearest centroid: array<struct<cent_id, dm>>. */
   def nearest(book: L2Codebook): Column =
@@ -53,6 +70,63 @@ private[graft] object Lloyd {
 
   /** `rounds` Lloyd rounds over `vecs` from `seeds`. */
   def train(vecs: DataFrame, seeds: L2Codebook, rounds: Int): L2Codebook =
+    fitting(vecs) match {
+      case (_, Some(rows)) => onDriver(rows, seeds, rounds)
+      case (cut, None) => distributed(cut, seeds, rounds)
+    }
+
+  /** [[train]] seeded from the rows of `vecs` with vec_id < `k`: a
+    * vector set that fits seeds from the rows it collected, so seeds
+    * and rounds cost one Spark job together.
+    */
+  def trainFirst(vecs: DataFrame, k: Long, segs: Int, segLen: Int,
+      rounds: Int): L2Codebook =
+    fitting(vecs) match {
+      case (_, Some(rows)) => onDriver(rows,
+        bookOf(rows.filter(r => !r.isNullAt(0) && r.getLong(0) < k), segs, segLen), rounds)
+      case (cut, None) =>
+        distributed(cut, seedBook(cut.filter(col("vec_id") < k), segs, segLen), rounds)
+    }
+
+  /** (vec_id as bigint, e) of `vecs`, checkpointed, and its rows if at
+    * most [[DriverVecCap]] ([[Rounds.fits]]).
+    */
+  private def fitting(vecs: DataFrame): (DataFrame, Option[Array[Row]]) =
+    Rounds.fits(vecs.select(col("vec_id").cast(LongType).as("vec_id"), col("e")), DriverVecCap)
+
+  /** The rounds over collected (vec_id, e) rows: per round, each
+    * vector's [[L2ArgminMicro.argmin]], then per (centroid, segment,
+    * coordinate) the `floor(x·10⁶)` sum (`Math.addExact`, as ANSI
+    * `sum` adds) and count, and the same re-centering as [[round]].
+    */
+  private def onDriver(rows: Array[Row], seeds: L2Codebook, rounds: Int): L2Codebook = {
+    val vecs = rows.map(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0), vector(r)))
+    (1 to rounds).foldLeft(seeds) { (book, _) =>
+      val segLen = book.segLen
+      val sm = new Array[Long](book.cents.length)
+      val n = new Array[Long](book.cents.length)
+      vecs.foreach { case (idIsNull, id, e) =>
+        val a = L2ArgminMicro.argmin(book, idIsNull, id, e)
+        for (seg <- 0 until book.segs) {
+          val c = java.util.Arrays.binarySearch(book.ids, a.getStruct(seg, 2).getLong(0))
+          for (j <- 0 until segLen) {
+            val at = c * book.width + seg * segLen + j
+            val xm = Math.floor(e.getDouble(seg * segLen + j) * 1000000.0).toLong
+            sm(at) = Math.addExact(sm(at), xm)
+            n(at) += 1
+          }
+        }
+      }
+      val next = book.cents.clone()
+      next.indices.foreach(at => if (n(at) > 0) next(at) = sm(at).toDouble / n(at) / 1000000.0)
+      new L2Codebook(book.ids, next, book.segs, segLen)
+    }
+  }
+
+  /** The distributed rounds: the only path above [[DriverVecCap]], and
+    * the reference [[onDriver]] is pinned to.
+    */
+  private[graft] def distributed(vecs: DataFrame, seeds: L2Codebook, rounds: Int): L2Codebook =
     (1 to rounds).foldLeft(seeds)((book, _) => round(vecs, book))
 
   private def round(vecs: DataFrame, book: L2Codebook): L2Codebook = {

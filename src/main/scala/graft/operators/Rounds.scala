@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.annotation.tailrec
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** The one round loop of the iterative operators (PageRank, HITS,
   * k-core, connected components, LPA, Louvain, the walks, the power
@@ -64,4 +64,21 @@ object Rounds {
       case (s, n, true) => (s, n)
       case _ => throw new IllegalStateException(s"no fixpoint within $max rounds")
     }
+
+  /** `df` lazily checkpointed, and its rows when it holds at most
+    * `cap` of them: one bounded `limit(cap + 1).collect()` over the
+    * checkpoint. An iterative operator whose whole input fits finishes
+    * every round on the driver — Lattanzi et al.'s "Filtering" (SPAA
+    * 2011): once the state fits on one machine, the remaining rounds
+    * cost no Spark job. Above the cap the caller runs its distributed
+    * rounds over the checkpointed frame, which keeps what the collect
+    * computed, so the input is not computed twice; the driver never
+    * holds more than `cap + 1` input rows. The choice depends on the
+    * observed row count only.
+    */
+  def fits(df: DataFrame, cap: Int): (DataFrame, Option[Array[Row]]) = {
+    val cut = df.localCheckpoint(false)
+    val rows = cut.limit(cap + 1).collect()
+    (cut, if (rows.length <= cap) Some(rows) else None)
+  }
 }

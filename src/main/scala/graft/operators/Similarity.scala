@@ -138,8 +138,7 @@ object Similarity {
     * over (vec_id, e) arrays, seeded from vec_id < 8.
     */
   private def pqBook(vecs: DataFrame): L2Codebook =
-    Lloyd.train(vecs,
-      Lloyd.seedBook(vecs.filter(col("vec_id") < 8), PqSegs, PqSegLen), PqTrainRounds)
+    Lloyd.trainFirst(vecs, 8, PqSegs, PqSegLen, PqTrainRounds)
 
   /** The trained PQ codebook as a local (cent_id, s, j, c) frame. */
   private def pqCodebookFresh(s: SparkSession, dir: String): DataFrame = {
@@ -981,13 +980,12 @@ object Similarity {
     * collected — and the driver re-centers (an empty cell keeps its
     * previous centroid). At 100 TB a round reads the corpus once and
     * ships k·d partial sums; the codebook never leaves the driver
-    * except inside the argmin expression.
+    * except inside the argmin expression. A vector set of at most
+    * [[Lloyd.DriverVecCap]] rows is collected once instead, seeds
+    * included, and its rounds run on the driver.
     */
   private def coarseBook(vecs: DataFrame): L2Codebook =
-    Lloyd.train(vecs,
-      Lloyd.seedBook(vecs.filter(col("vec_id") < PipelineQueries.NumCentroids),
-        1, EmbeddingDims),
-      KmTrainRounds)
+    Lloyd.trainFirst(vecs, PipelineQueries.NumCentroids, 1, EmbeddingDims, KmTrainRounds)
 
   /** (vec_id, e) embedding coordinates as a double array. */
   private def vecArrays(s: SparkSession, dir: String): DataFrame =

@@ -27,6 +27,11 @@ class CollectLintSpec extends AnyFunSuite {
       "unigram-Viterbi vocab map: model-sized (vocab-capped), never corpus-sized"),
     "operators/QuantileQueries.scala" -> (2,
       "radix-descent histograms: <=2^16 bucket rows per pass by construction"),
+    "operators/Rounds.scala" -> (1,
+      "Rounds.fits: limit(cap + 1) rows of an iterative operator's input, " +
+        "cap a constant of its caller — connectedComponents 2^16 + 1 " +
+        "(doc_a, doc_b) long rows, about 10 MB of driver heap; Lloyd.train " +
+        "2^14 + 1 (vec_id, e) rows, about 40 MB at 64 dimensions"),
     "operators/Lloyd.scala" -> (2,
       "Lloyd k-means on a driver-held codebook: the k seed rows, and per " +
         "round the k*segs*segLen (centroid, segment, coordinate) partial " +

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 verdict #4 — the ANN index persistence lifecycle:
@@ -10,6 +14,29 @@ import org.scalatest.funsuite.AnyFunSuite
 class IvfPersistSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
   private val dir = "/root/testdata/sf0.001"
+
+  /** The root paths of every file scan in `df`'s physical plan, read
+    * from the plan tree (AQE subplans, cached relations and subqueries
+    * included): the plan string cuts a scan's location off at
+    * `spark.sql.maxMetadataStringLength` characters.
+    */
+  private def scanRoots(df: DataFrame): Seq[String] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => Nil
+      }
+      p +: (p.children ++ p.subqueries ++ inner).flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan).flatMap {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+      case _ => Nil
+    }
+  }
+
+  private def readsIndex(df: DataFrame): Boolean = scanRoots(df).exists(_.contains("graft_index"))
 
   test("build publishes the three index tables; census is non-empty") {
     val build = SparkEntry.queries("ss_ivf_persist_build")(spark, dir)
@@ -37,9 +64,9 @@ class IvfPersistSpec extends AnyFunSuite {
     // the delta-assignment path itself (what ss_ivf_admit writes):
     // centroid side must be a published-table scan, never a Lloyd
     // lineage (checkpointed-RDD scan)
-    val plan = graft.operators.Similarity.admitDeltaAssignment(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_index"),
+    val df = graft.operators.Similarity.admitDeltaAssignment(spark, dir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(readsIndex(df),
       "admission does not read the published centroid table")
     assert(!plan.contains("ExistingRDD"),
       "training lineage leaked into the delta-admission plan")
@@ -271,17 +298,17 @@ class IvfPersistSpec extends AnyFunSuite {
     }
     // the plan serves from published tables, no training/checkpoint
     // lineage (the publish itself resolved driver-side, at most once)
-    val plan = SparkEntry.queries("ss_ivf_search_v2")(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_index"))
+    val df = SparkEntry.queries("ss_ivf_search_v2")(spark, dir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(readsIndex(df))
     assert(!plan.contains("ExistingRDD"),
       "training/checkpoint lineage leaked into the v2 serving plan")
   }
 
   test("rebalance lineage is pure published-table + source scans (plan-pinned)") {
-    val plan = SparkEntry.queries("ss_ivf_rebalance")(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_index"),
+    val df = SparkEntry.queries("ss_ivf_rebalance")(spark, dir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(readsIndex(df),
       "rebalance does not read the published index tables")
     assert(!plan.contains("ExistingRDD"),
       "training/checkpoint lineage leaked into the rebalance plan — " +
@@ -290,9 +317,9 @@ class IvfPersistSpec extends AnyFunSuite {
   }
 
   test("no training in the persisted search's lineage (plan-pinned)") {
-    val plan = SparkEntry.queries("ss_ivf_persist_search")(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_index"),
+    val df = SparkEntry.queries("ss_ivf_persist_search")(spark, dir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(readsIndex(df),
       "persisted search does not scan the published index tables")
     // training surfaces as checkpointed-RDD scans (the Lloyd loop
     // reads localCheckpointed vectors); a serving-tier plan must be

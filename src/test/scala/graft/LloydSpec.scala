@@ -106,7 +106,9 @@ object LloydReference {
 /** The driver-held array Lloyd loop ([[Lloyd]] + the
   * [[graft.functions.L2ArgminMicro]] kernel) against
   * [[LloydReference]]: codebooks and assignments bit-identical, on the
-  * test corpus and on fixtures for its edge cases.
+  * test corpus and on fixtures for its edge cases. Every fixture runs
+  * both of `Lloyd.train`'s paths: the driver rounds a vector set that
+  * fits takes, and the distributed rounds (`Lloyd.distributed`).
   */
 class LloydSpec extends AnyFunSuite {
   import LloydReference._
@@ -130,13 +132,16 @@ class LloydSpec extends AnyFunSuite {
       StructType(Seq(StructField("vec_id", LongType),
         StructField("e", ArrayType(DoubleType)))))
 
-  /** The array loop and the reference over one fixture: centroids and
-    * final assignments must match exactly; returns the codebook.
+  /** The array loop on both paths and the reference over one fixture:
+    * centroids and final assignments must match exactly; returns the
+    * codebook.
     */
   private def bothAgree(v: DataFrame, seedIds: Seq[Long], width: Int,
       rounds: Int): L2Codebook = {
-    val book = Lloyd.train(v, Lloyd.seedBook(v.filter(col("vec_id").isin(seedIds: _*)),
-      1, width), rounds)
+    val start = Lloyd.seedBook(v.filter(col("vec_id").isin(seedIds: _*)), 1, width)
+    val book = Lloyd.train(v, start, rounds)
+    assert(bits(Lloyd.coarseFrame(spark, book), "cent_id", "dim") ==
+      bits(Lloyd.coarseFrame(spark, Lloyd.distributed(v, start, rounds)), "cent_id", "dim"))
     val dims = kmDims(v)
     val ref = lloydRounds(dims, seeds(dims, seedIds), rounds)
     assert(bits(Lloyd.coarseFrame(spark, book), "cent_id", "dim") == bits(ref, "cent_id", "dim"))
@@ -148,6 +153,10 @@ class LloydSpec extends AnyFunSuite {
     val ids = (0L until PipelineQueries.NumCentroids.toLong)
     val book = bothAgree(corpus, ids, Similarity.EmbeddingDims, Similarity.KmTrainRounds)
     assert(book.ids.toSeq == ids)
+    val first = Lloyd.trainFirst(corpus, ids.size.toLong, 1, Similarity.EmbeddingDims,
+      Similarity.KmTrainRounds)
+    assert(first.cents.toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+      book.cents.toSeq.map(java.lang.Double.doubleToRawLongBits))
     // the row itself rides the same loop
     val ref = lloydRounds(kmDims(corpus), seeds(kmDims(corpus), ids), Similarity.KmTrainRounds)
     assert(bits(SparkEntry.queries("ss_kmeans_train")(spark, dir), "cent_id", "dim") ==
@@ -159,9 +168,12 @@ class LloydSpec extends AnyFunSuite {
     val ref = pqTrainedCb(pd, Similarity.PqTrainRounds)
     assert(bits(SparkEntry.queries("ss_pq_train")(spark, dir), "cent_id", "s", "j") ==
       bits(ref, "cent_id", "s", "j"))
-    val book = Lloyd.train(corpus, Lloyd.seedBook(corpus.filter(col("vec_id") < 8),
-      Similarity.PqSegs, Similarity.PqSegLen), Similarity.PqTrainRounds)
+    val start = Lloyd.seedBook(corpus.filter(col("vec_id") < 8),
+      Similarity.PqSegs, Similarity.PqSegLen)
+    val book = Lloyd.train(corpus, start, Similarity.PqTrainRounds)
     assert(bits(Lloyd.pqFrame(spark, book), "cent_id", "s", "j") == bits(ref, "cent_id", "s", "j"))
+    assert(bits(Lloyd.pqFrame(spark, Lloyd.distributed(corpus, start, Similarity.PqTrainRounds)),
+      "cent_id", "s", "j") == bits(ref, "cent_id", "s", "j"))
     val codes = corpus.select(col("vec_id"), posexplode(Lloyd.nearest(book)).as(Seq("s", "a")))
       .select(col("vec_id"), col("s"), col("a.cent_id").as("code"), col("a.dm").as("dist_micro"))
     def asMap(df: DataFrame) = df.collect().map(r =>
@@ -199,9 +211,11 @@ class LloydSpec extends AnyFunSuite {
     // floor((10^4)^2 * 10^12) saturates at Long.MaxValue; two such
     // terms overflow the bigint sum
     val v = vecs(0L -> Seq(0.0, 0.0), 1L -> Seq(1.0, 1.0), 2L -> Seq(10000.0, 10000.0))
-    val err = intercept[Exception](Lloyd.train(v,
-      Lloyd.seedBook(v.filter(col("vec_id") < 2), 1, 2), 1))
-    assert(err.getMessage.contains("vec_id 2"), err.getMessage)
+    val start = Lloyd.seedBook(v.filter(col("vec_id") < 2), 1, 2)
+    for (train <- Seq[(DataFrame, L2Codebook, Int) => L2Codebook](Lloyd.train, Lloyd.distributed)) {
+      val err = intercept[Exception](train(v, start, 1))
+      assert(err.getMessage.contains("vec_id 2"), err.getMessage)
+    }
     val dims = kmDims(v)
     intercept[Exception](lloydRounds(dims, seeds(dims, Seq(0L, 1L)), 1))
   }
@@ -214,9 +228,11 @@ class LloydSpec extends AnyFunSuite {
         (7L -> Seq[Any](1.0, null)) -> "null coordinate",
         (7L -> Seq[Any](1.0, 2.0, 3.0)) -> "coordinates, expected 2")) {
       val v = vecs(good :+ bad: _*)
-      val err = intercept[Exception](Lloyd.train(v, seeds(v), 1))
-      assert(err.getMessage.contains("vec_id 7") && err.getMessage.contains(why),
-        err.getMessage)
+      for (train <- Seq[(DataFrame, L2Codebook, Int) => L2Codebook](Lloyd.train, Lloyd.distributed)) {
+        val err = intercept[Exception](train(v, seeds(v), 1))
+        assert(err.getMessage.contains("vec_id 7") && err.getMessage.contains(why),
+          err.getMessage)
+      }
       // a bad seed fails on the driver, before any round
       val s = vecs((1L -> bad._2) +: good.filter(_._1 != 1L): _*)
       val serr = intercept[IllegalArgumentException](seeds(s))

@@ -81,9 +81,11 @@ class OperatorsSpec extends AnyFunSuite {
     // 200-node chain would blow past maxIters = 25 and (before the
     // loud-failure guard) silently return non-minimum labels; the
     // gather phase gives up at StarSwitchRound and the large-star/
-    // small-star contraction finishes in O(log²) rounds instead
+    // small-star contraction finishes in O(log²) rounds instead. The
+    // distributed body itself: connectedComponents labels a pair list
+    // this small on the driver
     val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = DedupClusters.connectedComponents(pairs)
+    val got = DedupClusters.distributedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 200)
     assert(got.forall(_._2 == 0L), s"non-minimum labels: ${got.filter(_._2 != 0L).take(5).toSeq}")
